@@ -3129,92 +3129,28 @@ def cdc_rank_apply_batch(base, view, batch: DataFrame, k: int = CDC_TOPK_K) -> N
             "value_cents",
         )
     )
+    from sparketl.tables import _collect_bounded
+
     spark = batch.sparkSession
-    # ONE bounded job pulls the last-op set to the driver (`last` holds
-    # one row per key by construction, so row count == distinct keys).
-    # limit(MAX+1) bounds the collect BEFORE the threshold is known —
-    # the r14 shape collected every distinct key unconditionally, so a
-    # degenerate giant batch paid an unbounded driver collect before
-    # the CDC_INLIST_MAX guard could act (r14 verdict, item 4). The
-    # collected rows then serve THREE former jobs at once: the key set
-    # (IN-list prune + merge key_bounds), the upsert users, and —
-    # rebuilt as a literal broadcast frame — the MERGE source itself
-    # (no localCheckpoint job, no recompute).
-    rows = last.limit(CDC_INLIST_MAX + 1).collect()
-    if not rows:
+    # ONE bounded job pulls the last-op set to the driver as Arrow
+    # (`last` holds one row per key by construction, so row count ==
+    # distinct keys); the bound holds BEFORE the threshold is known, so
+    # a degenerate giant batch never pays an unbounded driver collect.
+    # The collected rows serve as the upsert users and — rebuilt as a
+    # literal frame — the MERGE source itself.
+    tbl = _collect_bounded(last, CDC_INLIST_MAX)
+    if tbl is not None and tbl.num_rows == 0:
         return
-    merge_clauses = dict(
-        update={
-            "user_id": "source.user_id",
-            "ts_us": "source.ts_us",
-            "value_cents": "source.value_cents",
-        }
-    )
-    if len(rows) <= CDC_INLIST_MAX:
-        keys = sorted(r["event_id"] for r in rows)
-        # plain literal (not pre-broadcast — the merge broadcasts it
-        # at the join itself)
-        src = spark.createDataFrame(rows, last.schema)
-        # pre-evaluated insert candidates (the rows ARE the source —
-        # `op == 'upsert'` is exactly the insert clause's condition and
-        # the clause is INSERT-by-name): lets the merge skip the
-        # clause-evaluation job entirely
-        ins_cand = [
-            {
-                "event_id": r["event_id"],
-                "user_id": r["user_id"],
-                "ts_us": r["ts_us"],
-                "value_cents": r["value_cents"],
-                "_sparketl_k": r["event_id"],
-            }
-            for r in rows
-            if r["op"] == "upsert"
-        ]
-        # The pre-merge groups of ALL last-op keys — not just delete
-        # targets — must re-rank: a delete retires rows in the TARGET
-        # row's group (the delete record's own user_id is the deleter,
-        # not the deletee), and an upsert that MOVES a key must re-rank
-        # the OLD group too (CDC row migration; the r13 property test's
-        # falsifying example). r14 paid a separate pre-merge lookup job
-        # for that set; it is now CAPTURED FROM THE MERGE's own
-        # candidate-file read (capture_matched): every matched target
-        # row's pre-image user_id rides back with the write job's
-        # metadata — matched rows ARE exactly the base rows whose
-        # event_id is a batch key, so the captured set equals the old
-        # lookup's, one job earlier.
-        #
-        # source_is_unique: `last` keeps exactly one row per event_id
-        # (row_number == 1 over the per-key window above), so the
-        # duplicate-match validation pass is provably redundant (r14).
-        # key_bounds: `keys` IS the collected distinct source key set.
-        _, pre_users = (
-            base.merge(
-                src,
-                "target.event_id = source.event_id",
-                source_is_unique=True,
-                key_bounds=(keys[0], keys[-1]),
-            )
-            .when_matched_delete("source.op = 'delete'")
-            .when_matched_update(merge_clauses["update"], "source.op = 'upsert'")
-            .when_not_matched_insert(condition="source.op = 'upsert'")
-            # driver_inserts: broadcast-left rewrite + driver-side
-            # insert file — the per-batch base commit is map-only (r15)
-            .execute(
-                capture_matched="target.user_id",
-                driver_inserts=True,
-                insert_candidates=ins_cand,
-            )
-        )
-        users = sorted(
-            {r["user_id"] for r in rows if r["op"] == "upsert"}
-            | set(pre_users)
-        )
+    if tbl is not None:
+        src = spark.createDataFrame(tbl, last.schema)
+        ops = tbl.column("op").to_pylist()
+        batch_users = tbl.column("user_id").to_pylist()
     else:
         # degenerate giant batch: never collect the full key set — the
         # distributed path computes the touched groups with a pre-merge
-        # semi-join (pinned BEFORE the merge mutates the base) and the
-        # merge derives its own bounds from the source.
+        # semi-join (pinned BEFORE the merge mutates the base)
         last = last.localCheckpoint(eager=True)
+        src = last
         pre_groups = base.read().join(
             last.select("event_id"), "event_id", "left_semi"
         ).select("user_id")
@@ -3225,19 +3161,37 @@ def cdc_rank_apply_batch(base, view, batch: DataFrame, k: int = CDC_TOPK_K) -> N
             .distinct()
             .localCheckpoint(eager=True)
         )
-        keys = None
-        (
-            base.merge(
-                last,
-                "target.event_id = source.event_id",
-                source_is_unique=True,
-            )
-            .when_matched_delete("source.op = 'delete'")
-            .when_matched_update(merge_clauses["update"], "source.op = 'upsert'")
-            .when_not_matched_insert(condition="source.op = 'upsert'")
-            .execute()
+    # The pre-merge groups of ALL last-op keys — not just delete targets
+    # — must re-rank: a delete retires rows in the TARGET row's group
+    # (the delete record's own user_id is the deleter, not the deletee),
+    # and an upsert that MOVES a key must re-rank the OLD group too (CDC
+    # row migration; the r13 property test's falsifying example). They
+    # are CAPTURED FROM THE MERGE's own candidate-file read
+    # (capture_matched): matched rows ARE exactly the base rows whose
+    # event_id is a batch key, and each one's pre-image user_id rides
+    # back with the write job's metadata.
+    merge = (
+        base.merge(src, "target.event_id = source.event_id")
+        .when_matched_delete("source.op = 'delete'")
+        .when_matched_update(
+            {
+                "user_id": "source.user_id",
+                "ts_us": "source.ts_us",
+                "value_cents": "source.value_cents",
+            },
+            "source.op = 'upsert'",
         )
-        users = None  # distributed rescan below joins users_df directly
+        .when_not_matched_insert(condition="source.op = 'upsert'")
+    )
+    if tbl is None:
+        merge.execute()
+        users = None  # the rescan below joins users_df
+    else:
+        _, pre_users = merge.execute(capture_matched="target.user_id")
+        users = sorted(
+            {u for u, op in zip(batch_users, ops) if op == "upsert"}
+            | set(pre_users)
+        )
     # group-bounded rescan of the POST-merge base (ext_156): only
     # touched groups re-rank; untouched view files carry forward. The
     # touched-user set is batch-bounded, so the rescan (and the stale
@@ -3254,16 +3208,11 @@ def cdc_rank_apply_batch(base, view, batch: DataFrame, k: int = CDC_TOPK_K) -> N
         in_users = "user_id IN (%s)" % ",".join(str(u) for u in users)
         base_scan = base.read(where=in_users, prune_only=True)
         view_scan = view.read(where=in_users, prune_only=True)
-        # every source view_key below is user·100 + rank with user ∈
-        # the collected touched set and 1 ≤ rank ≤ k < 100 (asserted
-        # at entry), so this is a guaranteed superset of the bounds
-        view_bounds = (users[0] * 100 + 1, users[-1] * 100 + 99)
     else:
         # giant-batch path: the touched set stayed distributed
         touched = users_df
         base_scan = base.read()
         view_scan = view.read()
-        view_bounds = None  # merge derives bounds from the source
     rescan = base_scan.join(touched, "user_id", "left_semi")
     stale_lookup = view_scan.join(touched, "user_id", "left_semi")
     w = Window.partitionBy("user_id").orderBy(
@@ -3296,15 +3245,7 @@ def cdc_rank_apply_batch(base, view, batch: DataFrame, k: int = CDC_TOPK_K) -> N
         allowMissingColumns=True,
     )
     (
-        # source_is_unique: fresh holds one row per view_key (row_number
-        # ranks are unique within a user) and stale is anti-joined
-        # against fresh's view_keys — the union cannot repeat a key (r14).
-        view.merge(
-            src,
-            "target.view_key = source.view_key",
-            source_is_unique=True,
-            key_bounds=view_bounds,
-        )
+        view.merge(src, "target.view_key = source.view_key")
         .when_matched_delete("source.op = 'delete'")
         .when_matched_update(
             {

@@ -40,15 +40,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARKETL_DRIVER_MEM", "48g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # The table layer's bounded driver collects (`limit(N+1).collect()`
-        # guards in upsert/keyed_update/CDC apply) want ONE job over all
-        # partitions, not executeTake's 1→4→16… escalation — their limit
-        # is a size GUARD that almost always passes, so the escalation
-        # costs an extra job round per commit and saves nothing (r15
-        # measurement: 2 jobs → 1, ~0.2-0.4 s per MERGE/upsert). Not a
-        # local[N]-ism: the guard's intent (read everything, abort if
-        # huge) is the same at any cluster size.
-        .config("spark.sql.limit.initialNumPartitions", "10000")
         .config("spark.ui.enabled", "false")
         # ANSI off: the reference defers coercion to the server and we pin
         # permissive casts so ingest/oracle behavior is deterministic

@@ -225,6 +225,8 @@ def _arrow_type_of(dt: T.DataType):
         return pa.date32()
     if isinstance(dt, T.TimestampType):
         return pa.timestamp("us", tz="UTC")
+    if isinstance(dt, T.TimestampNTZType):
+        return pa.timestamp("us")
     if isinstance(dt, T.DecimalType):
         return pa.decimal128(dt.precision, dt.scale)
     raise TypeError(f"no local-write arrow mapping for {dt}")
@@ -898,25 +900,22 @@ class ManagedTable:
         return new_v
 
     def _write_local_rows(
-        self, dicts: list[dict], schema: T.StructType
+        self, tbl, schema: T.StructType
     ) -> tuple[list[str], dict]:
-        """Write DRIVER-HELD rows (list of {col: value}) as one parquet
-        file with the same stats/bloom manifest metadata the
-        distributed writer produces. Used for the insert side of
-        small-source MERGEs: the rows were already collected for the
-        broadcast, so writing them here costs no Spark job at all —
-        O(batch) driver work, the same class as the broadcast itself.
-        Raises TypeError for types outside the supported mapping
-        (callers fall back to the Spark-job shape)."""
+        """Write DRIVER-HELD rows (an Arrow table named by the table's
+        columns) as one parquet file with the same stats/bloom manifest
+        metadata the distributed writer produces. The MERGE driver
+        shape writes its insert rows this way: they were collected with
+        the source, so writing them here costs no Spark job at all —
+        O(batch) driver work, the same class as the broadcast itself."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        if not dicts:
+        if tbl.num_rows == 0:
             return [], {}
-        arrow_schema = pa.schema(
-            [(f.name, _arrow_type_of(f.dataType)) for f in schema.fields]
+        tbl = tbl.cast(
+            pa.schema([(f.name, _arrow_type_of(f.dataType)) for f in schema.fields])
         )
-        tbl = pa.Table.from_pylist(dicts, schema=arrow_schema)
         out = os.path.join(self.root, f"d-{uuid.uuid4().hex}")
         os.makedirs(out, exist_ok=True)
         path = os.path.join(out, f"part-local-{uuid.uuid4().hex}.parquet")
@@ -927,11 +926,9 @@ class ManagedTable:
         ]
         stat_cols = [f.name for f in schema.fields if f.name not in floaty]
         pq.write_table(
-            tbl, path, write_statistics=stat_cols, row_group_size=max(1, len(dicts))
+            tbl, path, write_statistics=stat_cols, row_group_size=tbl.num_rows
         )
-        cols = {
-            f.name: [d.get(f.name) for d in dicts] for f in schema.fields
-        }
+        cols = {f.name: tbl.column(f.name).to_pylist() for f in schema.fields}
         s, b = _stats_of_values(schema, cols)
         return [path], {path: {"s": s, "b": b}}
 
@@ -1380,7 +1377,7 @@ class ManagedTable:
         a wrong answer (candidate_files is always a superset).
 
         ``may_create_rows``: set when ``transform`` can emit rows even
-        from an EMPTY input (upsert's insert side) — then the transform
+        from an EMPTY input (a MERGE's insert side) — then the transform
         runs and writes even with zero candidate files; delete/update
         transforms are row-filters, so zero candidates means a pure
         metadata commit.
@@ -1414,7 +1411,7 @@ class ManagedTable:
             new_files, new_stats = [], {}
         if extra_files is not None:
             # driver-side companion files for the SAME commit (the
-            # insert side of small-source MERGEs — see _write_local_rows);
+            # insert side of driver-shape MERGEs — see _write_local_rows);
             # runs even with zero candidate files, where everything
             # inserts and the Spark job was skipped entirely
             xf, xs = extra_files(captured)
@@ -1436,24 +1433,20 @@ class ManagedTable:
         set_columns: list[str] | None = None,
         order_by: str | None = None,
     ) -> int:
-        """SNK-02 (tool:282-312): MERGE-style keyed update.
+        """SNK-02 (tool:282-312): MERGE-style keyed update, a
+        ``MergeBuilder`` spec of one WHEN MATCHED UPDATE over
+        ``set_columns``.
 
         - source rows with NULL ``key`` are skipped silently (tool:295-297)
         - duplicate source keys resolve last-write-wins in source order
-          (the reference fires per-row UPDATEs sequentially, §3.3 item 4).
-          "Source order" is the order an ``order_by`` column gives, when
-          provided; without one it falls back to the physical row order
-          (monotonically_increasing_id), which is only deterministic for
-          a freshly read/created source — a shuffled source should pass
-          an explicit ``order_by``.
+          (the reference fires per-row UPDATEs sequentially, §3.3 item 4;
+          see ``_latest_per_key`` for what "source order" means)
+        - a matched row takes the source value, NULL included
         - target rows with no source match pass through unchanged
         - source rows with no target match are dropped (update-only)
 
-        File-pruned (the Delta MERGE pattern): only data files whose
-        footer key range intersects the source's [min, max] key are
-        rewritten — every other file cannot hold a matched row and
-        carries into the new manifest untouched. Non-numeric keys fall
-        back to a full rewrite (footer pruning is numeric-only here).
+        ``MergeBuilder.execute`` picks the physical shape from the
+        source and file-prunes the rewrite to the source's key range.
         """
         table_cols = [f.name for f in self.schema().fields]
         if key not in table_cols:
@@ -1462,76 +1455,14 @@ class ManagedTable:
         missing = [c for c in set_columns if c not in table_cols]
         if missing:
             raise TableError(f"unknown columns in update: {missing}")
-
-        # last-write-wins: keep the final source occurrence per key
-        if order_by is not None:
-            if order_by not in source.columns:
-                raise TableError(f"order column '{order_by}' not in source")
-            ordered = source.withColumn("_src_order", F.col(order_by))
-        else:
-            ordered = source.withColumn(
-                "_src_order", F.monotonically_increasing_id()
-            )
-        w = W.partitionBy(key).orderBy(F.desc("_src_order"))
-        src = (
-            ordered.filter(F.col(key).isNotNull())  # skip-null semantics
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                F.col(key).alias("_k"),
-                *[F.col(c).alias(f"_set_{c}") for c in set_columns],
-            )
+        src = _latest_per_key(source, key, order_by).select(
+            *dict.fromkeys([key, *set_columns])
         )
-        # ONE bounded job for the common (micro-batch-sized) source:
-        # collect the deduped rows (they cross the driver anyway as a
-        # broadcast relation) and rebuild them as a literal broadcast
-        # frame — the r14 checkpoint + stats-agg jobs fold into this
-        # single collect. limit(N+1) bounds the collect by construction;
-        # a giant source truncates and falls back to the r14 shape
-        # (one checkpoint materialization, one cheap agg over it).
-        rows = src.limit(_DRIVER_SOURCE_ROWS + 1).collect()
-        if len(rows) <= _DRIVER_SOURCE_ROWS:
-            ks = [r["_k"] for r in rows]
-            mn = min(ks) if ks else None
-            mx = max(ks) if ks else None
-            small = True
-            src = self.spark.createDataFrame(rows, src.schema)
-        else:
-            src = src.localCheckpoint(eager=True)
-            stats = src.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min("_k").alias("mn"),
-                F.max("_k").alias("mx"),
-            ).first()
-            mn, mx = stats["mn"], stats["mx"]
-            small = stats["n"] <= _SMALL_SOURCE_ROWS
-        prune = None
-        if (
-            mn is not None
-            and isinstance(mn, (int, float))
-            and not isinstance(mn, bool)
-        ):
-            prune = f"{key} >= {mn} AND {key} <= {mx}"
-
-        def transform(target: DataFrame) -> DataFrame:
-            merged = target.join(
-                F.broadcast(src) if small else src,
-                target[key] == F.col("_k"),
-                "left",
-            )
-            out_cols = []
-            for c in target.columns:
-                if c in set_columns:
-                    out_cols.append(
-                        F.when(F.col("_k").isNotNull(), F.col(f"_set_{c}"))
-                        .otherwise(F.col(c))
-                        .alias(c)
-                    )
-                else:
-                    out_cols.append(F.col(c))
-            return merged.select(out_cols)
-
-        return self._pruned_rewrite(prune, transform)
+        return (
+            self.merge(src, f"target.`{key}` = source.`{key}`")
+            .when_matched_update({c: f"source.`{c}`" for c in set_columns})
+            .execute()
+        )
 
     def upsert(
         self,
@@ -1539,158 +1470,33 @@ class ManagedTable:
         key: str,
         order_by: str | None = None,
     ) -> int:
-        """MERGE upsert: matched target rows take the source's values,
-        unmatched source rows insert, unmatched target rows pass
-        through — one atomic version commit. Source must carry the full
-        table schema (inserts need every column). NULL-key source rows
-        are skipped and duplicate source keys resolve last-write-wins,
-        matching keyed_update (SNK-02, tool:282-312); the insert side
-        is the same left-anti + append shape as SNK-01.
-
-        File-pruned like keyed_update: files outside the source's
-        [min, max] key range can hold neither a match nor decide an
-        insert (every source key falls inside the candidate range by
-        construction), so they carry forward untouched.
+        """MERGE upsert: ``keyed_update`` over every table column plus
+        WHEN NOT MATCHED INSERT, so matched target rows take the
+        source's values, unmatched source rows insert and unmatched
+        target rows pass through — one atomic version commit. Source
+        must carry the full table schema (inserts need every column);
+        it is cast to the table types before the merge. NULL-key source
+        rows are skipped and duplicate source keys resolve
+        last-write-wins, as in keyed_update (SNK-02, tool:282-312).
         """
-        table_cols = [f.name for f in self.schema().fields]
+        schema = self.schema()
+        table_cols = [f.name for f in schema.fields]
         if key not in table_cols:
             raise TableError(f"identifier column '{key}' not in table")
         missing = [c for c in table_cols if c not in source.columns]
         if missing:
             raise TableError(f"upsert source lacks table columns: {missing}")
-
-        if order_by is not None:
-            if order_by not in source.columns:
-                raise TableError(f"order column '{order_by}' not in source")
-            ordered = source.withColumn("_src_order", F.col(order_by))
-        else:
-            ordered = source.withColumn(
-                "_src_order", F.monotonically_increasing_id()
-            )
-        schema = self.schema()
-        w = W.partitionBy(key).orderBy(F.desc("_src_order"))
-        src = (
-            ordered.filter(F.col(key).isNotNull())
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            # cast to the table schema HERE (the rewrite's aligned
-            # select did it post-merge before; doing it pre-merge keeps
-            # the small and large paths' join semantics identical)
-            .select(
-                *[
-                    F.col(f.name).cast(f.dataType).alias(f"_s_{f.name}")
-                    for f in schema.fields
-                ]
-            )
+        src = _latest_per_key(source, key, order_by).select(
+            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
         )
-        # ONE bounded job for the common (micro-batch-sized) source:
-        # pull the deduped rows to the driver — they would cross the
-        # driver anyway as a broadcast relation. The rewrite then needs
-        # NO shuffle at all: matched rows rewrite via a broadcast LEFT
-        # join over the candidate files only (a full-outer join cannot
-        # broadcast and forced a 2-exchange sort-merge join per commit —
-        # r15 measurement), the matched keys are CAPTURED from that same
-        # write job, and the unmatched source rows — already on the
-        # driver — are written as one local parquet file in the SAME
-        # commit (O(batch) driver work, the class the broadcast already
-        # pays). limit(N+1) bounds the collect by construction; a giant
-        # source truncates and falls back to the r14 full-join shape.
-        key_t = next(f.dataType for f in schema.fields if f.name == key)
-        small_ok = isinstance(
-            key_t, (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.StringType)
+        return (
+            self.merge(src, f"target.`{key}` = source.`{key}`")
+            .when_matched_update({c: f"source.`{c}`" for c in table_cols})
+            .when_not_matched_insert()
+            .execute()
         )
-        try:
-            for f in schema.fields:
-                _arrow_type_of(f.dataType)
-        except TypeError:
-            small_ok = False
-        rows = src.limit(_DRIVER_SOURCE_ROWS + 1).collect() if small_ok else []
-        if small_ok and len(rows) <= _DRIVER_SOURCE_ROWS:
-            keys = [r[f"_s_{key}"] for r in rows]
-            mn = min(keys) if keys else None
-            mx = max(keys) if keys else None
-            src_lit = F.broadcast(self.spark.createDataFrame(rows, src.schema))
-            prune = None
-            if (
-                mn is not None
-                and isinstance(mn, (int, float))
-                and not isinstance(mn, bool)
-            ):
-                prune = f"{key} >= {mn} AND {key} <= {mx}"
 
-            def transform(target: DataFrame) -> DataFrame:
-                merged = target.join(
-                    src_lit, target[key] == F.col(f"_s_{key}"), "left"
-                )
-                # source-present ⇔ _s_<key> non-null (null keys were
-                # dropped) — a matched row takes the source value even
-                # when that value is NULL (coalesce would keep the
-                # stale target value)
-                matched = F.col(f"_s_{key}").isNotNull()
-                out_cols = [
-                    F.when(matched, F.col(f"_s_{c}")).otherwise(F.col(c)).alias(c)
-                    for c in table_cols
-                ]
-                return merged.select(
-                    *out_cols,
-                    F.lit(False).alias("_sparketl_omit"),
-                    F.when(matched, F.col(f"_s_{key}")).alias("_sparketl_cap"),
-                )
-
-            def extra_files(captured):
-                matched_keys = set(captured)
-                ins = [
-                    {c: r[f"_s_{c}"] for c in table_cols}
-                    for r in rows
-                    if r[f"_s_{key}"] not in matched_keys
-                ]
-                return self._write_local_rows(ins, schema)
-
-            v, _ = self._pruned_rewrite(
-                prune, transform, capture=True, extra_files=extra_files
-            )
-            return v
-
-        # large / exotic-typed source: the r14 shape — one checkpoint
-        # materialization, one cheap agg over it, full-outer rewrite
-        src = src.localCheckpoint(eager=True)
-        stats = src.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(f"_s_{key}").alias("mn"),
-            F.max(f"_s_{key}").alias("mx"),
-        ).first()
-        n, mn, mx = stats["n"], stats["mn"], stats["mx"]
-        if n <= _SMALL_SOURCE_ROWS:
-            src = F.broadcast(src)
-        prune = None
-        if (
-            mn is not None
-            and isinstance(mn, (int, float))
-            and not isinstance(mn, bool)
-        ):
-            prune = f"{key} >= {mn} AND {key} <= {mx}"
-
-        def transform(target: DataFrame) -> DataFrame:
-            merged = target.join(src, target[key] == F.col(f"_s_{key}"), "full")
-            # source-present ⇔ _s_<key> non-null (null keys were dropped)
-            # — a matched row takes the source value even when that value
-            # is NULL (coalesce would silently keep the stale target value)
-            matched = F.col(f"_s_{key}").isNotNull()
-            out_cols = [
-                F.when(matched, F.col(f"_s_{c}")).otherwise(F.col(c)).alias(c)
-                for c in target.columns
-            ]
-            return merged.select(out_cols)
-
-        return self._pruned_rewrite(prune, transform, may_create_rows=True)
-
-    def merge(
-        self,
-        source: DataFrame,
-        condition: str,
-        source_is_unique: bool = False,
-        key_bounds: tuple[float, float] | None = None,
-    ) -> "MergeBuilder":
+    def merge(self, source: DataFrame, condition: str) -> "MergeBuilder":
         """General MERGE (T-SQL ``MERGE INTO`` / Delta ``merge``):
         returns a builder that accumulates WHEN clauses and executes
         them as ONE atomic copy-on-write commit. ``condition``
@@ -1698,30 +1504,14 @@ class ManagedTable:
 
         The reference's surface is SQL Server, where MERGE is the
         standard upsert/sync statement (tool:273 ships arbitrary
-        user SQL); ``keyed_update``/``upsert`` cover its two common
-        shapes, this covers the general statement — conditional
-        clauses, DELETE actions, and T-SQL's WHEN NOT MATCHED BY
-        SOURCE. See ``Engine.execute`` for the SQL-string front-end.
-
-        ``source_is_unique=True`` is the caller's proof that no target
-        row can match two source rows (e.g. the source was deduped to
-        one row per join key with ``row_number() = 1``); it skips the
-        duplicate-match validation pass — one fewer target-sized join
-        per MERGE (r14). Leave it False for arbitrary sources: the
-        check then runs, file-pruned to the candidate key range.
-
-        ``key_bounds=(lo, hi)``: a caller-guaranteed SUPERSET of the
-        source's join-key range (numeric single-key equality conditions
-        only). Skips the bounds aggregation job the file prune
-        otherwise runs over the source — callers that just collected
-        the key set (CDC appliers) already hold exact bounds. Sound
-        because a too-wide range only prunes fewer files; a range that
-        misses a source key would corrupt the rewrite, hence
-        caller-guaranteed.
+        user SQL). It is the table layer's one MERGE engine:
+        ``keyed_update`` and ``upsert`` are specs over it, and it also
+        runs the general statement — conditional clauses, DELETE
+        actions, and T-SQL's WHEN NOT MATCHED BY SOURCE. See
+        ``Engine.execute`` for the SQL-string front-end and
+        ``MergeBuilder.execute`` for how the source picks the shape.
         """
-        return MergeBuilder(
-            self, source, condition, source_is_unique, key_bounds
-        )
+        return MergeBuilder(self, source, condition)
 
     def _zorder_bounds_from_manifest(self, cols: list[str]):
         """Exact global [min, max] of the z-order columns folded from
@@ -1922,22 +1712,45 @@ class ManagedTable:
         )
 
 
-# broadcast gate for MERGE/update sources (typically spreadsheet- or
-# micro-batch-sized); sources above this row count join distributed
-_SMALL_SOURCE_ROWS = 1_000_000
-
-# Sources up to this many (deduped) rows are pulled to the driver and
-# rebuilt as a literal broadcast frame — one bounded job replaces the
-# r14 checkpoint + stats-agg pair. Small enough that the collect is
-# never heavier than the broadcast those sources get anyway.
+# A MERGE source of at most this many rows takes the driver shape (see
+# MergeBuilder.execute): it is collected once as Arrow and rebuilt as a
+# literal broadcast frame.
 _DRIVER_SOURCE_ROWS = 100_000
 
 
-def _is_small(df: DataFrame, limit: int = _SMALL_SOURCE_ROWS) -> bool:
-    """Heuristic broadcast gate for the update source (typically a
-    spreadsheet-sized batch)."""
-    n = df.limit(limit + 1).count()
-    return n <= limit
+def _collect_bounded(df: DataFrame, max_rows: int):
+    """``df`` as one Arrow table when it holds at most ``max_rows``
+    rows, else None. ``limit(max_rows + 1)`` bounds what reaches the
+    driver before the size is known, and the fetch is one job at any
+    partition count: ``toArrow`` runs the limit as a single-partition
+    gather, not ``collect``'s 1→4→16… partition escalation, so it needs
+    no ``spark.sql.limit.initialNumPartitions`` setting."""
+    tbl = df.limit(max_rows + 1).toArrow()
+    return tbl if tbl.num_rows <= max_rows else None
+
+
+def _latest_per_key(
+    source: DataFrame, key: str, order_by: str | None
+) -> DataFrame:
+    """The keyed writers' source: rows with a NULL ``key`` dropped and,
+    per key, only the last row in ``order_by`` order. Without
+    ``order_by`` the order is the physical row order
+    (monotonically_increasing_id), deterministic only for a freshly
+    read or created source; a shuffled source should pass an explicit
+    ``order_by``."""
+    if order_by is not None and order_by not in source.columns:
+        raise TableError(f"order column '{order_by}' not in source")
+    order = (
+        F.col(order_by) if order_by is not None else F.monotonically_increasing_id()
+    )
+    w = W.partitionBy(key).orderBy(F.desc("_sparketl_o"))
+    return (
+        source.withColumn("_sparketl_o", order)
+        .filter(F.col(key).isNotNull())
+        .withColumn("_sparketl_rn", F.row_number().over(w))
+        .filter(F.col("_sparketl_rn") == 1)
+        .drop("_sparketl_o", "_sparketl_rn")
+    )
 
 
 def incremental_agg(
@@ -2230,27 +2043,18 @@ class MergeBuilder:
       referencing ``target.<col>`` and ``source.<col>``; unqualified
       names are resolved by Spark only when unambiguous.
 
-    Scale: the rewrite is file-pruned exactly like ``upsert`` when
-    the ON condition is a single numeric-key equality — only files
-    whose footer range intersects the source's [min, max] key are
-    read and rewritten. WHEN NOT MATCHED BY SOURCE clauses act on
-    target rows in NON-candidate files too, so their presence forces
-    a full rewrite (correctness over pruning).
+    Scale: when the ON condition is a single numeric-key equality the
+    rewrite is file-pruned — only files whose footer range intersects
+    the source's [min, max] key are read and rewritten. WHEN NOT
+    MATCHED BY SOURCE clauses act on target rows in NON-candidate
+    files too, so their presence forces a full rewrite (correctness
+    over pruning). ``execute`` documents the two physical shapes.
     """
 
-    def __init__(
-        self,
-        table: ManagedTable,
-        source: DataFrame,
-        condition: str,
-        source_is_unique: bool = False,
-        key_bounds: tuple[float, float] | None = None,
-    ):
+    def __init__(self, table: ManagedTable, source: DataFrame, condition: str):
         self.table = table
         self.source = source
         self.condition = condition
-        self.source_is_unique = source_is_unique
-        self.key_bounds = key_bounds
         # (category, action, assignments, clause_condition)
         self._clauses: list[tuple[str, str, dict | None, str | None]] = []
 
@@ -2295,8 +2099,8 @@ class MergeBuilder:
     # -- execution -----------------------------------------------------------
 
     _EQ_COND = re.compile(
-        r"^\s*(?:target\.(\w+)\s*=\s*source\.(\w+)"
-        r"|source\.(\w+)\s*=\s*target\.(\w+))\s*$",
+        r"^\s*(?:target\.`?(\w+)`?\s*=\s*source\.`?(\w+)`?"
+        r"|source\.`?(\w+)`?\s*=\s*target\.`?(\w+)`?)\s*$",
         re.IGNORECASE,
     )
 
@@ -2314,18 +2118,16 @@ class MergeBuilder:
                 if bad:
                     raise TableError(f"unknown columns in INSERT: {bad}")
 
-    def _check_duplicate_matches(self, prune: str | None = None) -> None:
+    def _check_duplicate_matches(
+        self, source: DataFrame, prune: str | None
+    ) -> None:
         """SQL Server rule: error when any WHEN MATCHED clause exists
         and one target row is matched by multiple source rows.
 
         With a prunable equality condition the check reads only the
-        candidate files (r14): a matched target row must carry a key
-        inside the source's [min, max] range, and ``candidate_files``
-        is a superset of the files whose footer range admits such a
-        key — so non-candidate files cannot hold a matched row and the
-        duplicate count over the pruned read equals the full-scan
-        count. Previously this validation was an unpruned full pass
-        over the target per MERGE."""
+        candidate files: a matched target row must carry a key inside
+        the source's [min, max] range, and ``candidate_files`` is a
+        superset of the files whose footer range admits such a key."""
         tgt = (
             (
                 self.table.read(where=prune, prune_only=True)
@@ -2335,9 +2137,8 @@ class MergeBuilder:
             .withColumn("_sparketl_tid", F.monotonically_increasing_id())
             .alias("target")
         )
-        src = self.source.alias("source")
         dup = (
-            tgt.join(src, F.expr(self.condition), "inner")
+            tgt.join(source.alias("source"), F.expr(self.condition), "inner")
             .groupBy("_sparketl_tid")
             .agg(F.count(F.lit(1)).alias("n"))
             .filter(F.col("n") > 1)
@@ -2350,12 +2151,75 @@ class MergeBuilder:
                 "more than once (a target row matches multiple source rows)"
             )
 
-    def execute(
-        self,
-        capture_matched: str | None = None,
-        driver_inserts: bool = False,
-        insert_candidates: list[dict] | None = None,
-    ):
+    @staticmethod
+    def _insert_value(assigns: dict | None, col: str):
+        if assigns is None:
+            return F.col(f"source.`{col}`")
+        if col in assigns:
+            return F.expr(assigns[col])
+        return F.lit(None)
+
+    def _driver_probe(self, table_schema: T.StructType, src_key: str | None):
+        """The driver shape's one bounded collect: the source's columns,
+        plus ``_sparketl_i`` (the id of the insert clause that fires on
+        the row as an unmatched source row, 0 for none) and the insert
+        values, cast to the table types, of every table column that is
+        not a same-typed ``source.<col>`` already in the frame. Returns
+        ``(arrow_table, {table_col: arrow column name})``, or None when
+        the ON is not a single-key equality, the key is not integral or
+        string, a column has no Arrow mapping, or the source holds more
+        than ``_DRIVER_SOURCE_ROWS`` rows."""
+        src_fields = {f.name: f.dataType for f in self.source.schema.fields}
+        if not isinstance(
+            src_fields.get(src_key),
+            (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.StringType),
+        ):
+            return None
+        # (predicate, values) per insert clause, in declaration order:
+        # chained WHENs pick the first clause that fires, as in T-SQL
+        inserts = [
+            (F.expr(cond) if cond is not None else F.lit(True), assigns)
+            for _cat, act, assigns, cond in self._clauses
+            if act == "insert"
+        ]
+        # the source is collected; the table's columns only when an
+        # insert file is written from the collected rows
+        written = [f.dataType for f in table_schema] if inserts else []
+        try:
+            for dt in [*src_fields.values(), *written]:
+                _arrow_type_of(dt)
+        except TypeError:
+            return None
+        cols = [F.col(f"source.`{c}`") for c in self.source.columns]
+        col_of: dict[str, str] = {}
+        if inserts:
+            fired = F
+            for i, (pred, _assigns) in enumerate(inserts, start=1):
+                fired = fired.when(pred, F.lit(i))
+            cols.append(fired.otherwise(F.lit(0)).alias("_sparketl_i"))
+            by_name = all(a is None for _p, a in inserts)
+            for j, f in enumerate(table_schema.fields):
+                if by_name and src_fields.get(f.name) == f.dataType:
+                    col_of[f.name] = f.name
+                    continue
+                val = F
+                for pred, assigns in inserts:
+                    val = val.when(pred, self._insert_value(assigns, f.name))
+                col_of[f.name] = f"_sparketl_v{j}"
+                cols.append(val.cast(f.dataType).alias(col_of[f.name]))
+        # an unmatched source row sees an all-NULL target, as in the
+        # distributed shape's outer join: joining an empty target gives
+        # the insert clauses that scope (the optimizer folds it away)
+        empty = self.table.spark.createDataFrame([], table_schema)
+        probe = (
+            self.source.alias("source")
+            .join(empty.alias("target"), F.lit(False), "left")
+            .select(cols)
+        )
+        tbl = _collect_bounded(probe, _DRIVER_SOURCE_ROWS)
+        return None if tbl is None else (tbl, col_of)
+
+    def execute(self, capture_matched: str | None = None):
         """Run the MERGE as one atomic commit; returns the new version.
 
         ``capture_matched``: a Spark SQL expression over ``target.``/
@@ -2364,141 +2228,115 @@ class MergeBuilder:
         distinct values ride back from the write job and the return
         value becomes ``(version, captured_values)``. This is how a CDC
         applier learns the matched rows' OLD group keys without a
-        separate pre-merge lookup job (r15); requires at least one
-        WHEN MATCHED clause.
+        separate pre-merge lookup job; requires at least one WHEN
+        MATCHED clause.
 
-        ``driver_inserts=True`` (r15): for a DRIVER-SIZED source (a
-        literal frame the caller built from collected micro-batch rows)
-        the full-outer rewrite join — which can never broadcast and
-        forces a 2-exchange sort-merge join of the candidate files per
-        commit — is replaced by a broadcast LEFT join (map-only over
-        candidate files): matched source keys are captured from the
-        write job, the single WHEN NOT MATCHED INSERT clause is
-        evaluated on the local source relation (no Spark job), and the
-        surviving insert rows are written driver-side into the SAME
-        commit. Requires a single-key equality condition and exactly
-        one insert clause; the source must be local-collectable.
+        The source picks one of two physical shapes:
 
-        ``insert_candidates``: caller-pre-evaluated insert rows for the
-        driver_inserts path — a list of ``{table_col: value, ...,
-        "_sparketl_k": source_key}`` dicts that MUST equal what the
-        single insert clause would produce for every source row whose
-        clause condition holds (callers that just built the source rows
-        can produce this trivially). Skips the clause-evaluation job a
-        generic expression needs."""
+        - **driver shape**, when the ON is a single-key equality, the
+          source key is integral or string, every source and table
+          column maps to Arrow and the source holds at most
+          ``_DRIVER_SOURCE_ROWS`` rows. One bounded Arrow collect
+          fetches the source and evaluates the insert clauses; the key
+          bounds and key uniqueness are read from the collected keys.
+          The candidate files are rewritten through a broadcast LEFT
+          join of the literal source (map-only, no shuffle), which also
+          captures the matched keys, and the source rows whose key
+          matched nothing are written driver-side as one insert file
+          in the same commit.
+        - **distributed shape**, otherwise. A single-key source is
+          pinned with ``localCheckpoint`` and one aggregate over it
+          gives the key count, distinct count, min and max; the
+          rewrite is a full-outer join (a left join without insert
+          clauses), and AQE decides whether it broadcasts.
+
+        In both shapes the duplicate-match check — a join of the
+        candidate files with the source — runs only when a WHEN MATCHED
+        clause exists and the source keys repeat or the ON is not a
+        single-key equality."""
         self._validate()
-        has_matched = any(c[0] == "matched" for c in self._clauses)
-        has_by_source = any(c[0] == "by_source" for c in self._clauses)
+        clauses = list(self._clauses)
+        has_matched = any(c[0] == "matched" for c in clauses)
+        has_by_source = any(c[0] == "by_source" for c in clauses)
+        has_insert = any(c[1] == "insert" for c in clauses)
         if capture_matched is not None and not has_matched:
-            raise TableError(
-                "capture_matched requires a WHEN MATCHED clause"
-            )
-
-        # file pruning: single numeric-key equality AND no BY SOURCE
-        # clauses (those must see target rows in non-candidate files).
-        # Computed BEFORE the duplicate-match validation so the check
-        # can read only the candidate files (r14).
-        prune = None
-        src_key = None
-        m = self._EQ_COND.match(self.condition)
-        if m is not None and not has_by_source:
-            key = m.group(1) or m.group(4)
-            src_key = m.group(2) or m.group(3)
-            mn = mx = None
-            if self.key_bounds is not None:
-                lo, hi = self.key_bounds  # caller-guaranteed superset
-                if (
-                    isinstance(lo, (int, float))
-                    and isinstance(hi, (int, float))
-                    and not isinstance(lo, bool)
-                    and not isinstance(hi, bool)
-                ):
-                    if lo > hi:
-                        # a swapped tuple would silently prune EVERY
-                        # candidate file (matched rows carried forward
-                        # untouched while inserts append) — the worst
-                        # failure mode, so it is an error, not a fallback
-                        raise TableError(
-                            f"key_bounds lower bound {lo} exceeds upper "
-                            f"bound {hi} — pass (lo, hi)"
-                        )
-                    mn, mx = lo, hi
-                # non-numeric bounds: fall through to computed bounds
-            if mn is None:
-                bounds = self.source.agg(
-                    F.min(src_key).alias("mn"), F.max(src_key).alias("mx")
-                ).first()
-                mn, mx = bounds["mn"], bounds["mx"]
-            if (
-                mn is not None
-                and isinstance(mn, (int, float))
-                and not isinstance(mn, bool)
-            ):
-                prune = f"{key} >= {mn} AND {key} <= {mx}"
-
-        if has_matched and not self.source_is_unique:
-            self._check_duplicate_matches(prune)
-
+            raise TableError("capture_matched requires a WHEN MATCHED clause")
         table_schema = self.table.schema()
         table_cols = [f.name for f in table_schema.fields]
-        clauses = list(self._clauses)
-        condition = self.condition
-        source = self.source
-        has_insert = any(c[1] == "insert" for c in clauses)
-        use_capture = capture_matched is not None or driver_inserts
 
-        ins_rows: list = []
-        if driver_inserts:
-            insert_clauses = [c for c in clauses if c[1] == "insert"]
-            if src_key is None:
-                raise TableError(
-                    "driver_inserts requires a single-key equality ON condition"
-                )
-            if len(insert_clauses) != 1:
-                raise TableError(
-                    "driver_inserts requires exactly one WHEN NOT MATCHED clause"
-                )
-            for f in table_schema.fields:
-                _arrow_type_of(f.dataType)  # raises for exotic types
-            if insert_candidates is not None:
-                # caller-pre-evaluated (no job)
-                ins_rows = insert_candidates
-            else:
-                # evaluate the insert clause with Spark on the (tiny,
-                # single-partition) source — one 1-task job; callers on
-                # a hot path pass insert_candidates instead
-                _, _, iassigns, icond = insert_clauses[0]
-                s = source.alias("source")
-                flt = s.filter(F.expr(icond)) if icond is not None else s
-                sel = []
-                for f in table_schema.fields:
-                    if iassigns is None:
-                        v = F.col(f"source.{f.name}")
-                    elif f.name in iassigns:
-                        v = F.expr(iassigns[f.name])
-                    else:
-                        v = F.lit(None)
-                    sel.append(v.cast(f.dataType).alias(f.name))
-                sel.append(F.col(f"source.{src_key}").alias("_sparketl_k"))
-                ins_rows = flt.select(sel).collect()
+        key = src_key = None
+        m = self._EQ_COND.match(self.condition)
+        if m is not None:
+            key = m.group(1) or m.group(4)
+            src_key = next(
+                (
+                    c
+                    for c in self.source.columns
+                    if c.lower() == (m.group(2) or m.group(3)).lower()
+                ),
+                None,
+            )
+        probe = self._driver_probe(table_schema, src_key)
+        driver = probe is not None
+        n = nd = mn = mx = None
+        if driver:
+            import pyarrow as pa
+            import pyarrow.compute as pc
+
+            tbl, col_of = probe
+            source = self.table.spark.createDataFrame(
+                tbl.select(list(range(len(self.source.columns)))),
+                self.source.schema,
+            )
+            keys = pc.drop_null(tbl.column(self.source.columns.index(src_key)))
+            n, nd = len(keys), len(pc.unique(keys))
+            if n and pa.types.is_integer(keys.type):
+                mn, mx = pc.min_max(keys).as_py().values()
+        else:
+            source = self.source
+            if src_key is not None:
+                # the aggregate and the rewrite both read the source, and
+                # a keyed writer's source is a window: compute it once
+                source = source.localCheckpoint(eager=True)
+                c = F.col(f"`{src_key}`")
+                st = source.agg(
+                    F.count(c).alias("n"),
+                    F.countDistinct(c).alias("nd"),
+                    F.min(c).alias("mn"),
+                    F.max(c).alias("mx"),
+                ).first()
+                n, nd, mn, mx = st["n"], st["nd"], st["mn"], st["mx"]
+        unique = src_key is not None and n == nd
+        prune = None
+        if (
+            not has_by_source
+            and isinstance(mn, (int, float))
+            and not isinstance(mn, bool)
+        ):
+            prune = f"{key} >= {mn} AND {key} <= {mx}"
+        if has_matched and not unique:
+            self._check_duplicate_matches(source, prune)
+
+        # driver shape: inserts come from the collected rows, so the
+        # join needs only the target side; the matched keys ride back
+        # from the write job to tell which collected rows insert
+        capture = capture_matched is not None or (driver and has_insert)
+        condition = self.condition
 
         def transform(target_df: DataFrame) -> DataFrame:
-            tgt = (
-                target_df.withColumn("_sparketl_t", F.lit(1))
-                .withColumn("_sparketl_tid", F.monotonically_increasing_id())
-                .alias("target")
-            )
-            src = source.withColumn("_sparketl_s", F.lit(1)).alias("source")
-            if driver_inserts:
-                # inserts are handled driver-side from the collected
-                # source; the join only needs matched rows → broadcast
-                # LEFT join, map-only over the candidate files (a full
-                # outer join can never broadcast)
-                src = F.broadcast(src)
-                how = "left"
+            tgt = target_df.withColumn("_sparketl_t", F.lit(1))
+            if not has_matched and not unique:
+                tgt = tgt.withColumn(
+                    "_sparketl_tid", F.monotonically_increasing_id()
+                )
+            src = source.withColumn("_sparketl_s", F.lit(1))
+            if driver:
+                src, how = F.broadcast(src), "left"
             else:
                 how = "full" if has_insert else "left"
-            joined = tgt.join(src, F.expr(condition), how)
+            joined = tgt.alias("target").join(
+                src.alias("source"), F.expr(condition), how
+            )
             t_here = F.col("target._sparketl_t").isNotNull()
             s_here = F.col("source._sparketl_s").isNotNull()
             cat_pred = {
@@ -2507,16 +2345,12 @@ class MergeBuilder:
                 "by_source": t_here & ~s_here,
             }
             # first-match-wins action id per row; 0 = no clause fires
-            action = None
+            action = F
             for i, (cat, _act, _assigns, cond) in enumerate(clauses, start=1):
                 pred = cat_pred[cat]
                 if cond is not None:
                     pred = pred & F.expr(cond)
-                action = (
-                    F.when(pred, F.lit(i))
-                    if action is None
-                    else action.when(pred, F.lit(i))
-                )
+                action = action.when(pred, F.lit(i))
             joined = joined.withColumn("_sparketl_a", action.otherwise(F.lit(0)))
             # drop deletes and unfired source-only rows
             delete_ids = [
@@ -2524,53 +2358,41 @@ class MergeBuilder:
             ]
             keep = ~F.col("_sparketl_a").isin(delete_ids) if delete_ids else F.lit(True)
             keep = keep & (t_here | (F.col("_sparketl_a") != 0))
-            if use_capture:
+            extra = []
+            if capture:
                 # dropped rows must still REACH the write job so their
                 # captured pre-image comes back: mark instead of filter
                 # (the writer excludes _sparketl_omit rows from the file)
-                if driver_inserts:
-                    cap_val = F.struct(
-                        F.col(f"source.{src_key}").alias("k"),
-                        (
-                            F.expr(capture_matched)
-                            if capture_matched is not None
-                            else F.lit(None).cast("string")
-                        ).alias("c"),
-                    )
-                else:
-                    cap_val = F.expr(capture_matched)
-                joined = joined.withColumn(
-                    "_sparketl_omit", ~keep
-                ).withColumn(
-                    "_sparketl_cap", F.when(t_here & s_here, cap_val)
-                )
+                none = F.lit(None).cast("string")
+                k = F.col(f"source.`{src_key}`") if src_key else none
+                c = F.expr(capture_matched) if capture_matched else none
+                cap_val = F.struct(k.alias("k"), c.alias("c"))
+                extra = [
+                    (~keep).alias("_sparketl_omit"),
+                    F.when(t_here & s_here, cap_val).alias("_sparketl_cap"),
+                ]
             else:
                 joined = joined.filter(keep)
             # output columns: per target column, CASE over fired clause
             out_cols = []
             for c in table_cols:
-                col = F.col(f"target.{c}")
+                col = F.col(f"target.`{c}`")
                 for i, (cat, act, assigns, _cond) in enumerate(clauses, start=1):
                     if act == "update" and c in assigns:
-                        col = F.when(
-                            F.col("_sparketl_a") == i, F.expr(assigns[c])
-                        ).otherwise(col)
+                        val = F.expr(assigns[c])
                     elif act == "insert":
-                        if assigns is None:
-                            val = F.col(f"source.{c}")
-                        elif c in assigns:
-                            val = F.expr(assigns[c])
-                        else:
-                            val = F.lit(None)
-                        col = F.when(
-                            F.col("_sparketl_a") == i, val
-                        ).otherwise(col)
+                        val = self._insert_value(assigns, c)
+                    else:
+                        continue
+                    col = F.when(F.col("_sparketl_a") == i, val).otherwise(col)
                 out_cols.append(col.alias(c))
-            extra = (
-                [F.col("_sparketl_omit"), F.col("_sparketl_cap")]
-                if use_capture
-                else []
-            )
+            if has_matched or unique:
+                return joined.select(*out_cols, *extra)
+            # without matched clauses a target row matched by k source
+            # rows fans out to k identical pass-through copies (with
+            # matched clauses the duplicate-match check forbade
+            # fan-out) — keep one per target row id; fired rows
+            # (inserts/by-source) bypass the dedup untouched
             projected = joined.select(
                 t_here.alias("_sparketl_th"),
                 F.col("_sparketl_a"),
@@ -2578,57 +2400,52 @@ class MergeBuilder:
                 *out_cols,
                 *extra,
             )
-            if not has_matched:
-                # without matched clauses a target row matched by k
-                # source rows fans out to k identical pass-through
-                # copies (with matched clauses the duplicate-match
-                # check already forbade fan-out) — keep one per target
-                # row id; the dedup shuffle keys on the unique tid, so
-                # there is no skew, and fired rows (inserts/by-source)
-                # bypass it untouched
-                fired = projected.filter(
-                    ~F.col("_sparketl_th") | (F.col("_sparketl_a") != 0)
-                )
-                passthrough = projected.filter(
-                    F.col("_sparketl_th") & (F.col("_sparketl_a") == 0)
-                ).dropDuplicates(["_sparketl_tid"])
-                projected = fired.unionByName(passthrough)
-            out_names = table_cols + (
-                ["_sparketl_omit", "_sparketl_cap"] if use_capture else []
+            fired = projected.filter(
+                ~F.col("_sparketl_th") | (F.col("_sparketl_a") != 0)
             )
-            return projected.select(out_names)
-
-        cap_out: list = []
+            passthrough = projected.filter(
+                F.col("_sparketl_th") & (F.col("_sparketl_a") == 0)
+            ).dropDuplicates(["_sparketl_tid"])
+            return fired.unionByName(passthrough).select(
+                *table_cols, *(["_sparketl_omit", "_sparketl_cap"] if capture else [])
+            )
 
         def extra_files(captured):
-            # driver-side insert file for the SAME commit: source rows
-            # whose key matched no target row (the captured set) insert
-            matched_keys = set()
-            for v in captured:
-                matched_keys.add(v["k"])
-                if v["c"] is not None:
-                    cap_out.append(v["c"])
-            ins = [
-                {c: r[c] for c in table_cols}
-                for r in ins_rows
-                if r["_sparketl_k"] not in matched_keys
-            ]
-            return self.table._write_local_rows(ins, table_schema)
+            # driver-side insert file for the SAME commit: collected
+            # rows whose insert clause fired and whose key matched no
+            # target row (the captured key set) insert
+            import pyarrow as pa
+            import pyarrow.compute as pc
+
+            key_col = tbl.column(self.source.columns.index(src_key))
+            matched = pa.array([v["k"] for v in captured], type=key_col.type)
+            mask = pc.and_(
+                pc.not_equal(tbl.column("_sparketl_i"), 0),
+                pc.invert(pc.is_in(key_col, value_set=matched)),
+            )
+            ins = tbl.filter(mask)
+            return self.table._write_local_rows(
+                pa.table(
+                    [ins.column(col_of[c]) for c in table_cols], names=table_cols
+                ),
+                table_schema,
+            )
 
         res = self.table._pruned_rewrite(
             prune,
             transform,
-            may_create_rows=has_insert and not driver_inserts,
-            capture=use_capture,
-            extra_files=extra_files if driver_inserts else None,
+            may_create_rows=has_insert and not driver,
+            capture=capture,
+            extra_files=extra_files if driver and has_insert else None,
         )
-        if not use_capture:
+        if not capture:
             return res
         v, captured = res
-        if driver_inserts:
-            # extra_files already split the struct captures
-            seen: set = set()
-            captured = [
-                c for c in cap_out if not (c in seen or seen.add(c))
-            ]
-        return (v, captured) if capture_matched is not None else v
+        if capture_matched is None:
+            return v
+        seen: set = set()
+        return v, [
+            c["c"]
+            for c in captured
+            if c["c"] is not None and not (c["c"] in seen or seen.add(c["c"]))
+        ]

@@ -251,3 +251,308 @@ def test_merge_parse_errors(spark):
             "MERGE INTO t USING s ON t.id = s.id "
             "WHEN NOT MATCHED THEN INSERT (a, b) VALUES (1)"
         )
+
+
+# -- one engine, two shapes ---------------------------------------------------
+# keyed_update, upsert and SQL MERGE all run through MergeBuilder.execute,
+# which picks the driver shape (bounded Arrow collect, broadcast-left
+# rewrite, driver-side insert file) or the distributed shape (stats
+# aggregate, outer-join rewrite) from the source. Every case runs on both
+# shapes against a dict model {key: (v, tag)}; forcing _DRIVER_SOURCE_ROWS
+# to 0 sends every source down the distributed shape.
+
+KV_TYPES = {"long": T.LongType(), "string": T.StringType(), "double": T.DoubleType()}
+
+
+def _key(kind, i):
+    if i is None:
+        return None
+    return {"long": i, "string": f"k{i:02d}", "double": i + 0.5}[kind]
+
+
+def _kv_schema(kind, extra=()):
+    return T.StructType(
+        [
+            T.StructField("k", KV_TYPES[kind]),
+            T.StructField("v", T.LongType()),
+            T.StructField("tag", T.StringType()),
+            *extra,
+        ]
+    )
+
+
+TARGET = {1: (10, "a"), 2: (20, "b"), 3: (30, "c"), 4: (40, "d")}
+# (key, v, tag, order): NULL key, NULL value, duplicate keys resolved by
+# `o`, matched and unmatched keys
+KEYED_SOURCE = [
+    (2, 21, "b1", 1),
+    (2, 22, "b2", 3),
+    (2, 23, "b3", 2),
+    (3, None, "c1", 1),
+    (None, 99, "null-key", 9),
+    (7, 70, "g", 1),
+    (7, 71, "g2", 2),
+]
+# unique keys for the SQL statements (duplicate matches raise there)
+MERGE_SOURCE = [(1, -5, "del"), (2, None, "b1"), (3, 31, "c1"), (7, 70, "g"), (8, 8, "h")]
+
+
+def _latest(rows):
+    out = {}
+    for k, v, tag, o in sorted(
+        (r for r in rows if r[0] is not None), key=lambda r: r[3]
+    ):
+        out[k] = (v, tag)
+    return out
+
+
+def _model_keyed_update(tgt, src):
+    return {k: _latest(src).get(k, row) for k, row in tgt.items()}
+
+
+def _model_upsert(tgt, src):
+    return {**tgt, **_latest(src)}
+
+
+def _model_update_delete_insert(tgt, src):
+    out = dict(tgt)
+    for k, v, tag in src:
+        if k in tgt:
+            if v is not None and v < 0:
+                del out[k]
+            else:
+                out[k] = (v, tag)
+        else:
+            out[k] = (v, tag)
+    return out
+
+
+def _model_by_source(tgt, src):
+    keys = {r[0] for r in src}
+    out = {k: row for k, row in tgt.items() if k in keys or row[0] <= 20}
+    for k, v, _tag in src:
+        if k in tgt:
+            out[k] = (v, tgt[k][1])
+    return out
+
+
+def _model_conditional_insert(tgt, src):
+    out = dict(tgt)
+    for k, v, tag in src:
+        if k not in tgt and v is not None and v > 10:
+            out[k] = (v, tag)
+    return out
+
+
+def _model_values_insert(tgt, src):
+    out = dict(tgt)
+    for k, v, tag in src:
+        if k in tgt:
+            old = tgt[k][0]
+            out[k] = (None if v is None else old + v, tgt[k][1])
+        else:
+            out[k] = (None if v is None else v * 10, f"new-{tag}")
+    return out
+
+
+MERGE_SQL = {
+    "update_delete_insert": """
+        MERGE INTO kv AS t USING src AS s ON t.k = s.k
+        WHEN MATCHED AND s.v < 0 THEN DELETE
+        WHEN MATCHED THEN UPDATE SET v = s.v, tag = s.tag
+        WHEN NOT MATCHED THEN INSERT *""",
+    "by_source": """
+        MERGE INTO kv AS t USING src AS s ON t.k = s.k
+        WHEN MATCHED THEN UPDATE SET v = s.v
+        WHEN NOT MATCHED BY SOURCE AND t.v > 20 THEN DELETE""",
+    "conditional_insert": """
+        MERGE INTO kv AS t USING src AS s ON t.k = s.k
+        WHEN NOT MATCHED AND s.v > 10 THEN INSERT (k, v, tag)
+            VALUES (s.k, s.v, s.tag)""",
+    "values_insert": """
+        MERGE INTO kv AS t USING src AS s ON t.k = s.k
+        WHEN MATCHED THEN UPDATE SET v = t.v + s.v
+        WHEN NOT MATCHED THEN INSERT VALUES (s.k, s.v * 10, CONCAT('new-', s.tag))""",
+}
+
+MODEL_CASES = [
+    ("keyed_update", "long", _model_keyed_update),
+    ("keyed_update", "string", _model_keyed_update),
+    ("upsert", "long", _model_upsert),
+    ("upsert", "double", _model_upsert),
+    ("upsert", "string", _model_upsert),
+    ("update_delete_insert", "long", _model_update_delete_insert),
+    ("by_source", "string", _model_by_source),
+    ("conditional_insert", "double", _model_conditional_insert),
+    ("values_insert", "long", _model_values_insert),
+]
+
+
+@pytest.mark.parametrize("shape", ["driver", "distributed"])
+@pytest.mark.parametrize(
+    "case,kind,model", MODEL_CASES, ids=[f"{c}-{k}" for c, k, _m in MODEL_CASES]
+)
+def test_writers_match_dict_model_on_both_shapes(
+    spark, tmp_path, monkeypatch, shape, case, kind, model
+):
+    import sparketl.tables as tables
+
+    if shape == "distributed":
+        monkeypatch.setattr(tables, "_DRIVER_SOURCE_ROWS", 0)
+    shapes = []
+    collect = tables._collect_bounded
+
+    def spy(df, max_rows):
+        out = collect(df, max_rows)
+        shapes.append("driver" if out is not None else "distributed")
+        return out
+
+    monkeypatch.setattr(tables, "_collect_bounded", spy)
+    t = ManagedTable(spark, str(tmp_path / "kv"))
+    t.create(_kv_schema(kind))
+    t.append(
+        spark.createDataFrame(
+            [(_key(kind, k), v, tag) for k, (v, tag) in TARGET.items()],
+            _kv_schema(kind),
+        )
+    )
+    keyed = case in ("keyed_update", "upsert")
+    rows = KEYED_SOURCE if keyed else MERGE_SOURCE
+    src = spark.createDataFrame(
+        [(_key(kind, r[0]), *r[1:]) for r in rows],
+        _kv_schema(kind, [T.StructField("o", T.LongType())] if keyed else []),
+    )
+    if case == "keyed_update":
+        t.keyed_update(src, "k", set_columns=["v", "tag"], order_by="o")
+    elif case == "upsert":
+        t.upsert(src, "k", order_by="o")
+    else:
+        eng = Engine(spark, saved_queries_path=str(tmp_path / "q.json"))
+        eng.register_managed("kv", t)
+        src.createOrReplaceTempView("src")
+        eng.execute(MERGE_SQL[case])
+    want = {
+        _key(kind, k): row
+        for k, row in model(TARGET, [r[:3] if not keyed else r for r in rows]).items()
+    }
+    got = {r["k"]: (r["v"], r["tag"]) for r in t.read().collect()}
+    assert len(got) == t.read().count()  # no duplicated rows
+    assert got == want
+    # the shape asked for is the one taken; a double key never fits the
+    # driver shape
+    if shape == "driver" and kind != "double":
+        assert shapes == ["driver"]
+    else:
+        assert "driver" not in shapes
+        assert not any("part-local-" in f for f in t.data_files())
+
+
+@pytest.mark.parametrize("shape", ["driver", "distributed"])
+def test_duplicate_match_raises_on_both_shapes(spark, tmp_path, monkeypatch, shape):
+    import sparketl.tables as tables
+
+    if shape == "distributed":
+        monkeypatch.setattr(tables, "_DRIVER_SOURCE_ROWS", 0)
+    t = make(spark, tmp_path / "t")
+    dup = spark.createDataFrame([(2, "x", 1.0), (2, "y", 2.0), (9, "z", 3.0)], SCHEMA)
+    with pytest.raises(TableError, match="more than once"):
+        (
+            t.merge(dup, "target.id = source.id")
+            .when_matched_update({"bal": "source.bal"})
+            .when_not_matched_insert()
+            .execute()
+        )
+    assert state(t) == [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)]
+
+
+# -- the driver shape's evidence --------------------------------------------
+
+
+def _shuffle_write_bytes(spark, run):
+    """Shuffle bytes written by every job ``run()`` starts, read from
+    Spark's status store once the listener bus has drained."""
+    sc = spark.sparkContext._jsc.sc()
+    store = sc.statusStore()
+
+    def job_ids():
+        jobs = store.jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    before = job_ids()
+    run()
+    sc.listenerBus().waitUntilEmpty(10_000)
+    total = 0
+    new = job_ids() - before
+    assert new, "the commit ran no Spark job"
+    for jid in new:
+        it = store.job(jid).stageIds().iterator()
+        while it.hasNext():
+            total += store.lastStageAttempt(it.next()).shuffleWriteBytes()
+    return total
+
+
+def test_driver_shape_commits_without_shuffle(spark, tmp_path):
+    """A driver-sized upsert and a driver-sized SQL MERGE with an insert
+    clause each commit with zero shuffle-write bytes: the bounded collect,
+    the broadcast-left rewrite and the driver-side insert file shuffle
+    nothing. The sources are single-partition batches, as a worksheet or
+    micro-batch is; a multi-partition source adds the bounded collect's
+    one single-partition gather."""
+    t = make(spark, tmp_path / "t")
+    src = spark.createDataFrame(
+        [(2, "B", 20.0), (2, "B2", 21.0), (9, "i", 9.0), (None, "n", 0.0)],
+        "id long, name string, bal double",
+    ).coalesce(1)
+    assert _shuffle_write_bytes(spark, lambda: t.upsert(src, "id")) == 0
+    eng = Engine(spark, saved_queries_path=str(tmp_path / "q.json"))
+    eng.register_managed("accounts", t)
+    spark.createDataFrame(
+        [(3, "C", 30.0), (11, "k", 11.0)], SCHEMA
+    ).coalesce(1).createOrReplaceTempView("chg")
+    sql = (
+        "MERGE INTO accounts AS t USING chg AS s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET bal = s.bal "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+    assert _shuffle_write_bytes(spark, lambda: eng.execute(sql)) == 0
+    assert state(t) == [
+        (1, "a", 1.0),
+        (2, "B2", 21.0),
+        (3, "c", 30.0),
+        (9, "i", 9.0),
+        (11, "k", 11.0),
+    ]
+
+
+LIMIT_CONF = "spark.sql.limit.initialNumPartitions"
+
+
+def test_limit_conf_is_not_session_wide(spark):
+    assert spark.sparkContext.getConf().get(LIMIT_CONF) is None
+    assert LIMIT_CONF not in spark.conf.getAll
+
+
+@pytest.mark.parametrize("preset", [None, "3"])
+def test_collect_bounded_one_job_and_conf_untouched(spark, preset):
+    from sparketl.tables import _collect_bounded
+
+    if preset is not None:
+        spark.conf.set(LIMIT_CONF, preset)
+    sc = spark.sparkContext
+    try:
+        df = spark.range(0, 5_000, 1, 8)
+        group = f"collect-bounded-{preset}"
+        sc.setJobGroup(group, "bounded collect")
+        try:
+            tbl = _collect_bounded(df, 4_000)
+            assert tbl is None
+            tbl = _collect_bounded(df, 5_000)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert tbl.num_rows == 5_000
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+        assert spark.conf.get(LIMIT_CONF, None) == preset
+    finally:
+        spark.conf.unset(LIMIT_CONF)

@@ -2,10 +2,10 @@
 
 Pins the r15 write/merge machinery: write-job stats (arrow task writer
 for string-bearing schemas, observe+footer path for numeric ones),
-driver-insert MERGEs (broadcast-left + local insert file), the
-capture_matched pre-image channel, key_bounds validation (r14 advisor),
-and the exact-hash partition keys behind the sampling-free staging and
-z-order compact.
+the MERGE driver shape (broadcast-left + local insert file) against the
+distributed one, the capture_matched pre-image channel, and the
+exact-hash partition keys behind the sampling-free staging and z-order
+compact.
 """
 
 from __future__ import annotations
@@ -119,32 +119,7 @@ def test_write_stats_nan_semantics_match_both_paths(spark, tmp_path):
         assert {r["k"] for r in t.read(where="v > 100").collect()} == {2}
 
 
-# -- MergeBuilder: key_bounds validation (r14 advisor) ---------------------
-
-
-def test_merge_key_bounds_swapped_raises(spark, tmp_path):
-    t = _num_table(spark, tmp_path)
-    src = spark.createDataFrame([(2, 99)], "k long, v long")
-    with pytest.raises(TableError, match="key_bounds"):
-        (
-            t.merge(src, "target.k = source.k", key_bounds=(5, 1))
-            .when_matched_update({"v": "source.v"})
-            .execute()
-        )
-
-
-def test_merge_key_bounds_non_numeric_falls_back(spark, tmp_path):
-    """Non-numeric key_bounds fall back to computed bounds instead of
-    silently mispruning."""
-    t = _num_table(spark, tmp_path)
-    src = spark.createDataFrame([(2, 99)], "k long, v long")
-    (
-        t.merge(src, "target.k = source.k", key_bounds=("a", "b"))
-        .when_matched_update({"v": "source.v"})
-        .execute()
-    )
-    got = {(r["k"], r["v"]) for r in t.read().collect()}
-    assert got == {(1, 10), (2, 99), (3, 30)}
+# -- MergeBuilder ----------------------------------------------------------
 
 
 def test_merge_duplicate_source_raises_through_pruned_check(spark, tmp_path):
@@ -160,75 +135,36 @@ def test_merge_duplicate_source_raises_through_pruned_check(spark, tmp_path):
         )
 
 
-def test_merge_source_is_unique_skips_check(spark, tmp_path):
-    """source_is_unique really skips the validation: the same duplicate
-    source goes through (documented caller-proof contract)."""
-    t = _num_table(spark, tmp_path)
-    dup = spark.createDataFrame([(2, 1), (2, 2)], "k long, v long")
+def _merge_state(t, src):
     (
-        t.merge(dup, "target.k = source.k", source_is_unique=True)
-        .when_matched_update({"v": "source.v"})
-        .execute()
-    )  # no raise; state is last-clause-evaluation defined, not checked here
-
-
-def test_merge_key_bounds_equiv_computed(spark, tmp_path):
-    """Exact key_bounds produce the same table state as computed
-    bounds (r14 advisor test ask)."""
-    ta = _num_table(spark, tmp_path, "ka")
-    tb = _num_table(spark, tmp_path, "kb")
-    for t, kb in ((ta, None), (tb, (2, 2))):
-        m = t.merge(
-            spark.createDataFrame([(2, 99)], "k long, v long"),
-            "target.k = source.k",
-            source_is_unique=True,
-            key_bounds=kb,
-        )
-        m.when_matched_update({"v": "source.v"}).when_not_matched_insert().execute()
-    assert sorted(map(tuple, ta.read().collect())) == sorted(
-        map(tuple, tb.read().collect())
-    )
-
-
-# -- driver-insert MERGE path ----------------------------------------------
-
-
-def _merge_state(spark, t, src, **kw):
-    (
-        t.merge(src, "target.k = source.k", source_is_unique=True)
+        t.merge(src, "target.k = source.k")
         .when_matched_delete("source.v < 0")
         .when_matched_update({"v": "source.v"}, "source.v >= 0")
         .when_not_matched_insert(condition="source.v >= 0")
-        .execute(**kw)
+        .execute()
     )
     return sorted(map(tuple, t.read().select("k", "v").collect()))
 
 
-def test_driver_inserts_equivalent_to_full_join_merge(spark, tmp_path):
-    """The broadcast-left + local-insert-file path produces exactly the
-    full-outer path's table state (update, delete and insert rows)."""
+def _local_files(t):
+    return [f for f in t.data_files() if "part-local-" in f]
+
+
+def test_driver_shape_equivalent_to_distributed_merge(spark, tmp_path, monkeypatch):
+    """The driver shape (broadcast-left rewrite + local insert file)
+    produces exactly the distributed full-outer shape's table state
+    (update, delete and insert rows), and each shape is the one taken."""
+    import sparketl.tables as tables
+
     rows = [(2, 99), (3, -1), (7, 70), (9, -5)]
     src = spark.createDataFrame(rows, "k long, v long")
-    ta = _num_table(spark, tmp_path, "full")
     tb = _num_table(spark, tmp_path, "driver")
-    a = _merge_state(spark, ta, src)
-    cand = [
-        {"k": k, "v": v, "_sparketl_k": k} for k, v in rows if v >= 0
-    ]
-    b = _merge_state(
-        spark, tb, src, driver_inserts=True, insert_candidates=cand
-    )
+    b = _merge_state(tb, src)
+    monkeypatch.setattr(tables, "_DRIVER_SOURCE_ROWS", 0)
+    ta = _num_table(spark, tmp_path, "full")
+    a = _merge_state(ta, src)
     assert a == b == [(1, 10), (2, 99), (7, 70)]
-
-
-def test_driver_inserts_evaluates_clause_without_candidates(spark, tmp_path):
-    """Without insert_candidates the clause is evaluated with Spark on
-    the source — same final state."""
-    rows = [(2, 99), (3, -1), (7, 70)]
-    src = spark.createDataFrame(rows, "k long, v long")
-    t = _num_table(spark, tmp_path)
-    got = _merge_state(spark, t, src, driver_inserts=True)
-    assert got == [(1, 10), (2, 99), (7, 70)]
+    assert len(_local_files(tb)) == 1 and not _local_files(ta)
 
 
 def test_capture_matched_returns_pre_image(spark, tmp_path):
@@ -237,11 +173,11 @@ def test_capture_matched_returns_pre_image(spark, tmp_path):
     t = _num_table(spark, tmp_path)
     src = spark.createDataFrame([(2, 99), (3, -1), (7, 70)], "k long, v long")
     _, captured = (
-        t.merge(src, "target.k = source.k", source_is_unique=True)
+        t.merge(src, "target.k = source.k")
         .when_matched_delete("source.v < 0")
         .when_matched_update({"v": "source.v"}, "source.v >= 0")
         .when_not_matched_insert(condition="source.v >= 0")
-        .execute(capture_matched="target.v", driver_inserts=True)
+        .execute(capture_matched="target.v")
     )
     # pre-images of matched keys 2 (v=20) and 3 (v=30, deleted)
     assert sorted(captured) == [20, 30]
