@@ -13,7 +13,10 @@ this image, so this module implements the same core idea natively:
   full snapshot is written (Delta's checkpoint pattern): readers load
   the nearest checkpoint plus at most ``_CKPT_EVERY`` deltas, never
   the whole history, and the columnar layout means a stats-less read
-  (schema + file list) never parses the per-file stats/bloom blobs;
+  (schema + file list) never parses the per-file stats blobs;
+- per-file stats are the numeric and string column min/max that
+  Spark's parquet writer already puts in each file's footer, read once
+  when the file is committed — no data scan, no second writer;
 - appends add files and write a new delta — O(new data), no rewrite;
 - update/delete/overwrite write replacement files + a new delta;
 - a version is COMMITTED the instant its fully-written manifest is
@@ -93,108 +96,63 @@ def _fold_max(a, b):
 
 
 def _collect_file_stats(path: str) -> dict:
-    """Per-file numeric column min/max from the parquet FOOTER (row-group
-    statistics — no data scan). Only int/float columns are recorded;
-    columns without footer stats are simply absent, which the pruner
-    treats as 'cannot prune' (always safe). Row-group stats are folded
-    NaN-aware (see ``_fold_min``/``_fold_max``) so the file-level
-    [min,max] matches Spark's total order regardless of which row group
-    holds the NaN rows."""
+    """Per-file column min/max from the parquet FOOTER (row-group
+    statistics — no data scan), the one producer of manifest file
+    stats. Int, float and string columns are recorded; columns without
+    footer stats are simply absent, which the pruner treats as 'cannot
+    prune' (always safe). Row-group stats are folded NaN-aware (see
+    ``_fold_min``/``_fold_max``) so the file-level [min,max] matches
+    Spark's total order regardless of which row group holds the NaN
+    rows. String min/max are in UTF-8 byte order, which is Python's
+    code-point order, so ``str`` comparisons against them are exact.
+
+    A column is recorded only when every row group that holds a
+    non-NULL value bounds it: Spark's writer leaves min/max out of a
+    row group whose string values exceed 4 KiB, and folding the other
+    row groups alone would bound the file too tightly."""
     import pyarrow.parquet as pq
 
     cols: dict[str, list] = {}
+    unbounded: set[str] = set()
     md = pq.ParquetFile(path).metadata
     for rg in range(md.num_row_groups):
         row = md.row_group(rg)
         for ci in range(row.num_columns):
             c = row.column(ci)
+            name = c.path_in_schema
             st = c.statistics
+            if st is not None and st.has_null_count and st.null_count == c.num_values:
+                continue  # all-NULL row group: nothing to bound
             if st is None or not st.has_min_max:
+                unbounded.add(name)
                 continue
             mn, mx = st.min, st.max
-            if isinstance(mn, bool) or not isinstance(mn, (int, float)):
-                continue
-            name = ".".join(c.path_in_schema.split("."))
-            if name in cols:
+            if isinstance(mn, bool) or not isinstance(mn, (int, float, str)):
+                unbounded.add(name)
+            elif name in cols:
                 cols[name] = [_fold_min(cols[name][0], mn), _fold_max(cols[name][1], mx)]
             else:
                 cols[name] = [mn, mx]
-    return cols
+    return {n: b for n, b in cols.items() if n not in unbounded}
 
 
-# `col op numeric-literal` conjunct, the main form the pruner handles;
+# a literal the pruner parses: a number, or a string literal once
+# _compile_prune_predicate has swapped it for its '<index>' placeholder
+_LIT = r"(-?\d+(?:\.\d+)?|'\d+')"
+
+# `col op literal` conjunct, the main form the pruner handles;
 # anything else in the predicate disables pruning for that conjunct.
 _PRUNABLE = re.compile(
-    r"^\s*([A-Za-z_][A-Za-z_0-9]*)\s*(<=|>=|==|=|<|>)\s*(-?\d+(?:\.\d+)?)\s*$"
-)
-
-# `col = 'string-literal'` conjunct — pruned via per-file Bloom filters
-# (footer min/max covers only numerics). Literals containing quotes do
-# not parse → that conjunct simply never prunes (safe).
-_PRUNABLE_STR = re.compile(
-    r"^\s*([A-Za-z_][A-Za-z_0-9]*)\s*(?:==|=)\s*'([^']*)'\s*$"
+    r"^\s*([A-Za-z_][A-Za-z_0-9]*)\s*(<=|>=|==|=|<|>)\s*" + _LIT + r"\s*$"
 )
 
 # `col IN (items)` — the one parenthesized form the pruner parses;
-# items are comma-separated numeric or 'string' literals
+# items are comma-separated literals
 _IN_LIST = re.compile(r"(?i)\b([A-Za-z_]\w*)\s+IN\s*\(([^()]*)\)")
 
 # commits between compacted parquet checkpoints of the manifest log —
 # readers replay at most this many deltas above the nearest checkpoint
 _CKPT_EVERY = 20
-
-_BLOOM_M = 8192  # bits per (file, column) filter — 1 KiB in the manifest
-_BLOOM_K = 3
-_BLOOM_MAX_DISTINCT = 4096  # beyond this the filter saturates; skip it
-
-
-def _bloom_hashes(value: str) -> list[int]:
-    """k bit positions via double hashing of a stable md5 — identical
-    across processes/machines (unlike Python's salted hash())."""
-    import hashlib
-
-    d = hashlib.md5(value.encode("utf-8")).digest()
-    h1 = int.from_bytes(d[:8], "little")
-    h2 = int.from_bytes(d[8:], "little") | 1
-    return [(h1 + i * h2) % _BLOOM_M for i in range(_BLOOM_K)]
-
-
-def _collect_file_blooms(path: str) -> dict:
-    """Per-file Bloom filters over each low-cardinality STRING column —
-    the Delta bloom-index pattern extending file skipping to string
-    equality, which min/max stats cannot serve. Built once per newly
-    written file (a local column read here; in a distributed write the
-    same bits fall out of the write job) and carried forward in the
-    manifest like the numeric stats. ~1 KiB per (file, column); a
-    column with > _BLOOM_MAX_DISTINCT distinct values is skipped (a
-    saturated filter prunes nothing)."""
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(path)
-    str_cols = [
-        f.name
-        for f in pf.schema_arrow
-        if str(f.type) in ("string", "large_string")
-    ]
-    if not str_cols:
-        return {}
-    tbl = pf.read(columns=str_cols)
-    out: dict[str, str] = {}
-    for name in str_cols:
-        vals = {v for v in tbl.column(name).to_pylist() if v is not None}
-        if len(vals) > _BLOOM_MAX_DISTINCT:
-            continue
-        bits = bytearray(_BLOOM_M // 8)
-        for v in vals:
-            for h in _bloom_hashes(v):
-                bits[h >> 3] |= 1 << (h & 7)
-        out[name] = bits.hex()
-    return out
-
-
-def _bloom_might_contain(bloom_hex: str, value: str) -> bool:
-    bits = bytes.fromhex(bloom_hex)
-    return all(bits[h >> 3] & (1 << (h & 7)) for h in _bloom_hashes(value))
 
 
 def _arrow_type_of(dt: T.DataType):
@@ -232,257 +190,22 @@ def _arrow_type_of(dt: T.DataType):
     raise TypeError(f"no local-write arrow mapping for {dt}")
 
 
-def _stats_of_values(schema: T.StructType, columns: dict) -> tuple[dict, dict]:
-    """NaN-aware min/max stats + Bloom bits over driver-held column
-    value lists — the same semantics ``_make_part_writer`` folds on
-    executors (Spark total order: max is NaN-sticky, min is the
-    smallest real unless all-NaN; all-null columns absent)."""
-    stats: dict = {}
-    blooms: dict = {}
-    for f in schema.fields:
-        vals = [v for v in columns[f.name] if v is not None]
-        if not vals:
-            continue
-        if isinstance(f.dataType, (T.FloatType, T.DoubleType)):
-            real = [v for v in vals if not math.isnan(v)]
-            if real:
-                mx = float("nan") if len(real) < len(vals) else max(real)
-                stats[f.name] = [min(real), mx]
-            else:
-                stats[f.name] = [float("nan"), float("nan")]
-        elif isinstance(
-            f.dataType, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-        ):
-            stats[f.name] = [int(min(vals)), int(max(vals))]
-        elif isinstance(f.dataType, T.StringType):
-            distinct = set(vals)
-            if len(distinct) <= _BLOOM_MAX_DISTINCT:
-                bits = bytearray(_BLOOM_M // 8)
-                for v in distinct:
-                    for h in _bloom_hashes(v):
-                        bits[h >> 3] |= 1 << (h & 7)
-                blooms[f.name] = bits.hex()
-    return stats, blooms
-
-
-# -- distributed write-side stats (r15) --------------------------------------
-# The per-file min/max stats and Bloom filters used to be computed by a
-# DRIVER read-back of every newly committed file (_collect_file_stats /
-# _collect_file_blooms): footer-only for numerics but a real column
-# read for the blooms — driver data work per commit, the §5 hazard the
-# r14 verdict deferred. They are now folded INSIDE the write job: each
-# task writes its own parquet file (pyarrow) and returns one tiny
-# (file, stats, blooms) row, so the driver only ever sees the metadata.
-# The driver read-back functions above remain as the fallback for
-# files that enter a manifest without passing through _write_data
-# (legacy tables, foreign files).
-
-
-def _make_part_writer(
-    out_dir: str, fields: list, capture: bool
-):
-    """Build the mapInArrow body for ``_write_data``: writes this
-    task's rows as ONE parquet file under ``out_dir`` and yields a
-    single metadata row ``(file, stats_json, blooms_json, cap_json)``.
-
-    Stats replicate ``_collect_file_stats``'s semantics from the DATA
-    (not the footer): numeric top-level columns only, min = smallest
-    real value (NaN only when all-NaN), max = NaN-sticky — Spark's
-    total order, the contract ``_file_might_match`` prunes under.
-    Blooms replicate ``_collect_file_blooms``: per low-cardinality
-    string column, the same md5 double-hash bits.
-
-    ``capture``: the input carries two trailing internal columns —
-    ``_sparketl_omit`` (row excluded from the file; MERGE deletes) and
-    ``_sparketl_cap`` (a value to report back; MERGE matched-row
-    pre-image) — stripped before writing; distinct non-null cap values
-    ride back in ``cap_json``. Bounded by the caller (micro-batch key
-    sets), never table-sized.
-    """
-    numeric = {
-        f.name
-        for f in fields
-        if isinstance(
-            f.dataType,
-            (
-                T.ByteType,
-                T.ShortType,
-                T.IntegerType,
-                T.LongType,
-                T.FloatType,
-                T.DoubleType,
-            ),
-        )
-    }
-    stringy = {f.name for f in fields if isinstance(f.dataType, T.StringType)}
-    floaty = {
-        f.name
-        for f in fields
-        if isinstance(f.dataType, (T.FloatType, T.DoubleType))
-    }
-    names = [f.name for f in fields]
-
-    def write_part(batches):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        writer = None
-        path = None
-        tmp = None
-        buf: list = []
-        buf_bytes = 0
-        mins: dict = {}
-        maxs: dict = {}
-        saw_nan: set = set()
-        bloom_vals: dict = {c: set() for c in stringy}
-        bloom_dead: set = set()
-        cap_vals: set = set()
-
-        def flush():
-            nonlocal writer, buf, buf_bytes
-            if not buf:
-                return
-            tbl = pa.Table.from_batches(buf)
-            writer.write_table(tbl, row_group_size=max(1, tbl.num_rows))
-            buf = []
-            buf_bytes = 0
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            if capture:
-                cap_col = batch.column(batch.schema.get_field_index("_sparketl_cap"))
-                for v in cap_col.drop_null().to_pylist():
-                    # struct captures arrive as dicts — dedup via a
-                    # canonical JSON encoding (values are key-sized)
-                    cap_vals.add(json.dumps(v, sort_keys=True))
-                omit = batch.column(
-                    batch.schema.get_field_index("_sparketl_omit")
-                )
-                import pyarrow.compute as pc
-
-                keep = pc.fill_null(pc.invert(omit), True)
-                batch = batch.select(names).filter(keep)
-                if batch.num_rows == 0:
-                    continue
-            if writer is None:
-                fname = f"part-{pid:05d}-{uuid.uuid4().hex}.parquet"
-                path = os.path.join(out_dir, fname)
-                tmp = path + ".inprogress"
-                # float/double columns get NO footer statistics:
-                # pyarrow computes min/max IGNORING NaN, and Spark's
-                # row-group pushdown would then wrongly prune row
-                # groups whose only matching rows are NaN (NaN > lit is
-                # true under Spark's total order). The manifest-level
-                # stats computed below are NaN-aware and do the file
-                # skipping; int/string footer stats stay on for
-                # readers' row-group pruning.
-                stat_cols = [
-                    f2.name for f2 in fields if f2.name not in floaty
-                ]
-                writer = pq.ParquetWriter(
-                    tmp, batch.schema, write_statistics=stat_cols
-                )
-            # fold stats from the data itself (exact, footer-free)
-            for col in numeric:
-                arr = batch.column(batch.schema.get_field_index(col))
-                valid = arr.drop_null()
-                if len(valid) == 0:
-                    continue
-                vals = valid.to_numpy(zero_copy_only=False)
-                if col in floaty:
-                    import numpy as np
-
-                    nan_mask = np.isnan(vals)
-                    if nan_mask.any():
-                        saw_nan.add(col)
-                    real = vals[~nan_mask]
-                    if real.size == 0:
-                        continue
-                    lo, hi = float(real.min()), float(real.max())
-                else:
-                    lo, hi = int(vals.min()), int(vals.max())
-                mins[col] = lo if col not in mins else min(mins[col], lo)
-                maxs[col] = hi if col not in maxs else max(maxs[col], hi)
-            for col in list(bloom_vals):
-                if col in bloom_dead:
-                    continue
-                arr = batch.column(batch.schema.get_field_index(col))
-                s = bloom_vals[col]
-                for v in arr.drop_null().to_pylist():
-                    s.add(v)
-                if len(s) > _BLOOM_MAX_DISTINCT:
-                    bloom_dead.add(col)
-                    bloom_vals[col] = set()
-            buf.append(batch)
-            buf_bytes += batch.nbytes
-            if buf_bytes >= 128 << 20:
-                flush()
-        if writer is None and not cap_vals:
-            return
-        if writer is not None:
-            flush()
-            writer.close()
-            os.rename(tmp, path)
-        else:
-            # every row of this task was omitted (e.g. an all-delete
-            # MERGE partition): no file, but the captured pre-image
-            # values must still reach the driver
-            path = None
-        stats = {}
-        for col in mins:
-            lo = mins[col]
-            hi = float("nan") if col in saw_nan else maxs[col]
-            if isinstance(lo, float) or isinstance(hi, float):
-                stats[col] = [float(lo), float(hi)]
-            else:
-                stats[col] = [int(lo), int(hi)]
-        for col in saw_nan:
-            if col not in stats:  # all-NaN column: min is NaN too
-                stats[col] = [float("nan"), float("nan")]
-        blooms = {}
-        for col, vals in bloom_vals.items():
-            if col in bloom_dead or not vals:
-                continue
-            bits = bytearray(_BLOOM_M // 8)
-            for v in vals:
-                for h in _bloom_hashes(v):
-                    bits[h >> 3] |= 1 << (h & 7)
-            blooms[col] = bits.hex()
-        yield pa.RecordBatch.from_pylist(
-            [
-                {
-                    "file": path,
-                    "stats": json.dumps(stats),
-                    "blooms": json.dumps(blooms),
-                    "cap": "[%s]" % ",".join(sorted(cap_vals)) if capture else "[]",
-                }
-            ],
-            schema=pa.schema(
-                [
-                    ("file", pa.string()),
-                    ("stats", pa.string()),
-                    ("blooms", pa.string()),
-                    ("cap", pa.string()),
-                ]
-            ),
-        )
-
-    return write_part
-
-
-def _file_might_match(stats: dict, col: str, op: str, lit: float) -> bool:
+def _file_might_match(stats: dict, col: str, op: str, lit) -> bool:
     """Conservative: True unless the file's [min,max] interval proves no
     row can satisfy ``col op lit``. NULL rows never satisfy a
     comparison, so dropping a file on its non-null min/max is sound.
 
+    Strings: the bounds are in code-point order, Spark's string order,
+    so the same interval tests hold. A string literal against numeric
+    bounds, or a number against string bounds, never prunes: Spark
+    compares those after casting one side, in an order the bounds do
+    not follow.
+
     Floating-point / NaN: Spark SQL orders NaN greater than every
     double, and Spark's parquet writer uses the same total order when
     computing footer stats — so a file containing any NaN row records
-    ``max = NaN`` (verified against this container's writer; these
-    files are always written by ``_write_data``, never foreign). Hence:
+    ``max = NaN`` (verified against Spark 4.1's writer; the
+    driver-side insert file records no float stats at all). Hence:
     a real (non-NaN) max proves the file is NaN-free and all four
     comparison prunes are sound; ``max = NaN`` means NaN rows exist,
     which satisfy ``>``/``>=`` for every literal and defeat ``=``
@@ -493,6 +216,8 @@ def _file_might_match(stats: dict, col: str, op: str, lit: float) -> bool:
     if col not in stats:
         return True
     mn, mx = stats[col]
+    if isinstance(mn, str) != isinstance(lit, str):
+        return True
     if op == "<":
         return mn < lit
     if op == "<=":
@@ -508,43 +233,51 @@ def _file_might_match(stats: dict, col: str, op: str, lit: float) -> bool:
 
 def _compile_prune_predicate(where: str):
     """Compile ``where`` into prunable disjuncts-of-conjuncts, or None
-    when the predicate cannot be pruned at all (NOT / free parens).
-    Module-level and returning only plain tuples so the compiled form
-    ships to executors for distributed checkpoint pruning."""
-    stripped = _IN_LIST.sub("", where)
-    if re.search(r"(?i)\bNOT\b|[()]", stripped):
+    when the predicate cannot be pruned at all (NOT / free parens /
+    double quotes). Module-level and returning only plain tuples so the
+    compiled form ships to executors for distributed checkpoint
+    pruning.
+
+    String literals are swapped for numbered placeholders before any
+    split, so AND, OR, BETWEEN, NOT or a parenthesis inside a literal
+    never steers it. A literal holding an escape (a doubled quote or a
+    backslash, which Spark's parser unescapes) is not parsed, so its
+    conjunct never prunes."""
+    lits: list[str] = []
+
+    def hide(m) -> str:
+        lits.append(m.group(1))
+        return f"'{len(lits) - 1}'"
+
+    masked = re.sub(r"'((?:[^']|'')*)'", hide, where)
+    stripped = _IN_LIST.sub("", masked)
+    if re.search(r'(?i)\bNOT\b|[()"]', stripped):
         return None
     # BETWEEN rewrites before the AND split would misparse it
     where2 = re.sub(
-        r"(?i)\b([A-Za-z_]\w*)\s+BETWEEN\s+(-?\d+(?:\.\d+)?)"
-        r"\s+AND\s+(-?\d+(?:\.\d+)?)",
+        rf"(?i)\b([A-Za-z_]\w*)\s+BETWEEN\s+{_LIT}\s+AND\s+{_LIT}",
         r"\1 >= \2 AND \1 <= \3",
-        where,
+        masked,
     )
 
+    def literal(raw: str):
+        if not re.fullmatch(_LIT, raw):
+            return None
+        if raw.startswith("'"):
+            v = lits[int(raw[1:-1])]
+            return None if "'" in v or "\\" in v else v
+        return float(raw)
+
     def parse_conjunct(c: str):
-        num = _PRUNABLE.match(c)
-        if num:
-            return ("num", num.group(1), num.group(2), float(num.group(3)))
-        s = _PRUNABLE_STR.match(c)
-        if s:
-            return ("str", s.group(1), "=", s.group(2))
+        m = _PRUNABLE.match(c)
+        if m:
+            lit = literal(m.group(3))
+            return None if lit is None else (m.group(1), m.group(2), lit)
         i = _IN_LIST.fullmatch(c.strip())
         if i:
-            items = []
-            for raw in i.group(2).split(","):
-                raw = raw.strip()
-                sm = re.fullmatch(r"'([^']*)'", raw)
-                if sm:
-                    items.append(("str", sm.group(1)))
-                    continue
-                nm = re.fullmatch(r"-?\d+(?:\.\d+)?", raw)
-                if nm:
-                    items.append(("num", float(raw)))
-                    continue
-                return None  # unparsable item — conjunct never prunes
-            if items:
-                return ("in", i.group(1), None, items)
+            items = [literal(raw.strip()) for raw in i.group(2).split(",")]
+            if None not in items:  # an unparsable item: never prunes
+                return (i.group(1), "in", items)
         return None
 
     disjuncts = []
@@ -558,24 +291,14 @@ def _compile_prune_predicate(where: str):
     return disjuncts
 
 
-def _prune_admits(disjuncts, fs: dict, fb: dict) -> bool:
-    """True iff the file (stats ``fs``, blooms ``fb``) might contain a
-    matching row under the compiled predicate."""
+def _prune_admits(disjuncts, fs: dict) -> bool:
+    """True iff the file (stats ``fs``) might contain a matching row
+    under the compiled predicate."""
 
-    def conjunct_admits(kind, col, op, lit) -> bool:
-        if kind == "num":
-            return _file_might_match(fs, col, op, lit)
-        if kind == "str":
-            return col not in fb or _bloom_might_contain(fb[col], lit)
-        # IN: any item might match
-        for item_kind, v in lit:
-            if item_kind == "num":
-                if _file_might_match(fs, col, "=", v):
-                    return True
-            else:
-                if col not in fb or _bloom_might_contain(fb[col], v):
-                    return True
-        return False
+    def conjunct_admits(col, op, lit) -> bool:
+        if op == "in":  # any item might match
+            return any(_file_might_match(fs, col, "=", v) for v in lit)
+        return _file_might_match(fs, col, op, lit)
 
     return any(
         all(conjunct_admits(*c) for c in conj) for conj in disjuncts
@@ -637,12 +360,12 @@ class ManagedTable:
 
     def _write_checkpoint(self, snap: dict) -> None:
         """Best-effort compacted checkpoint: the full snapshot at one
-        version as PARQUET (one row per file; stats/blooms as JSON
-        string columns; schema/properties/version in the key-value
-        metadata). Columnar, so a stats-less load reads only the
-        ``file`` column; written to a tmp name then os.replace'd, so
-        readers see a whole checkpoint or none. Losing it is harmless —
-        reconstruction falls back to the previous base + deltas."""
+        version as PARQUET (one row per file; stats as a JSON string
+        column; schema/properties/version in the key-value metadata).
+        Columnar, so a stats-less load reads only the ``file`` column;
+        written to a tmp name then os.replace'd, so readers see a whole
+        checkpoint or none. Losing it is harmless — reconstruction falls
+        back to the previous base + deltas."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -651,7 +374,6 @@ class ManagedTable:
             {
                 "file": files,
                 "stats": [json.dumps(snap["file_stats"].get(f, {})) for f in files],
-                "blooms": [json.dumps(snap["file_blooms"].get(f, {})) for f in files],
             }
         ).replace_schema_metadata(
             {
@@ -666,11 +388,14 @@ class ManagedTable:
         os.replace(tmp, path)
 
     def _read_checkpoint(self, v: int, need_stats: bool) -> dict:
+        """Snapshot from the checkpoint at ``v``. Checkpoints written
+        before the manifest dropped Bloom filters carry a ``blooms``
+        column too; it is never read."""
         import pyarrow.parquet as pq
 
         pf = pq.ParquetFile(self._ckpt_path(v))
         meta = pf.schema_arrow.metadata or {}
-        cols = ["file", "stats", "blooms"] if need_stats else ["file"]
+        cols = ["file", "stats"] if need_stats else ["file"]
         tbl = pf.read(columns=cols)
         files = tbl.column("file").to_pylist()
         snap = {
@@ -679,14 +404,10 @@ class ManagedTable:
             "schema": meta[b"schema"].decode(),
             "properties": json.loads(meta[b"properties"].decode()),
             "file_stats": {},
-            "file_blooms": {},
         }
         if need_stats:
             snap["file_stats"] = dict(
                 zip(files, (json.loads(s) for s in tbl.column("stats").to_pylist()))
-            )
-            snap["file_blooms"] = dict(
-                zip(files, (json.loads(s) for s in tbl.column("blooms").to_pylist()))
             )
         return snap
 
@@ -697,7 +418,7 @@ class ManagedTable:
         of a published version are immutable, so they cache per
         instance; callers must not mutate the returned dict.
 
-        ``need_stats=False`` skips loading per-file stats/bloom blobs
+        ``need_stats=False`` skips loading per-file stats blobs
         (read()/schema()/diff() don't need them) — against a checkpoint
         base that is a single columnar read of file paths."""
         v = version if version is not None else self._current_version()
@@ -717,7 +438,6 @@ class ManagedTable:
             if "files" in entry:  # legacy full manifest IS a snapshot
                 base = entry
                 base.setdefault("file_stats", {})
-                base.setdefault("file_blooms", {})
                 break
             deltas.append(entry)
             w -= 1
@@ -725,13 +445,11 @@ class ManagedTable:
             base = {
                 "files": [],
                 "file_stats": {},
-                "file_blooms": {},
                 "schema": None,
                 "properties": {},
             }
         files = list(base["files"])
         stats = dict(base["file_stats"])
-        blooms = dict(base["file_blooms"])
         schema_json = base["schema"]
         properties = base["properties"]
         for d in reversed(deltas):
@@ -740,12 +458,12 @@ class ManagedTable:
                 files = [f for f in files if f not in removed]
                 for f in removed:
                     stats.pop(f, None)
-                    blooms.pop(f, None)
             files.extend(d["adds"])
             if need_stats:
+                # deltas from before the manifest dropped Bloom filters
+                # also carry a "b" key per file; it is never read
                 for f, sb in d["adds"].items():
                     stats[f] = sb["s"]
-                    blooms[f] = sb["b"]
             schema_json = d["schema"]
             properties = d["properties"]
         snap = {
@@ -754,7 +472,6 @@ class ManagedTable:
             "schema": schema_json,
             "properties": properties,
             "file_stats": stats,
-            "file_blooms": blooms,
             "_has_stats": need_stats,
         }
         cache[v] = snap
@@ -801,7 +518,6 @@ class ManagedTable:
         schema_json: str,
         properties: dict,
         base_version: int | None = None,
-        new_stats: dict | None = None,
     ) -> int:
         """Commit a new version on top of ``base_version`` (the version
         the caller's snapshot was read at). Raises ConcurrentWriteError
@@ -810,49 +526,23 @@ class ManagedTable:
         the conflict. ``base_version=None`` keeps the legacy
         last-writer-wins behavior for internal single-writer paths.
 
-        ``new_stats``: per-file ``{"s": stats, "b": blooms}`` computed
-        by the write job itself (``_write_data``) — the normal path
-        since r15; the driver-side footer/column read below is only the
-        fallback for files that entered the manifest without passing
-        through ``_write_data``."""
+        Every file the commit ADDS gets its min/max stats from its
+        parquet footer (``_collect_file_stats``, O(KB) metadata per
+        file, no data read); retained files carry theirs forward."""
         if base_version is None:
             base_version = self._current_version() if self.exists() else 0
         new_v = base_version + 1
         os.makedirs(self._manifest_dir, exist_ok=True)
-        # min/max stats ride in the log (Delta-style data skipping);
-        # retained files carry their stats forward through the delta
-        # replay; newly ADDED files bring their stats from the write
-        # job — O(new files) metadata per commit, no driver data scan.
         base_m = (
             self._manifest(base_version)
             if base_version >= 1
-            else {"files": [], "file_stats": {}, "file_blooms": {}}
+            else {"files": [], "file_stats": {}}
         )
         base_set = set(base_m["files"])
         files_set = set(files)
         prev_stats = base_m["file_stats"]
-        prev_blooms = base_m["file_blooms"]
-        new_stats = new_stats or {}
-
-        # `get(f) is not None` (not truthiness): a file with no numeric
-        # columns has stats {} which must still carry forward, or its
-        # footer would be re-read on every subsequent commit
-        def _s(f: str):
-            if f in new_stats:
-                return new_stats[f]["s"]
-            if prev_stats.get(f) is not None:
-                return prev_stats[f]
-            return _collect_file_stats(f)
-
-        def _b(f: str):
-            if f in new_stats:
-                return new_stats[f]["b"]
-            if prev_blooms.get(f) is not None:
-                return prev_blooms[f]
-            return _collect_file_blooms(f)
-
         adds = {
-            f: {"s": _s(f), "b": _b(f)} for f in files if f not in base_set
+            f: {"s": _collect_file_stats(f)} for f in files if f not in base_set
         }
         manifest = {
             "version": new_v,
@@ -876,10 +566,6 @@ class ManagedTable:
                     f: adds[f]["s"] if f in adds else prev_stats.get(f, {})
                     for f in files
                 }
-                file_blooms = {
-                    f: adds[f]["b"] if f in adds else prev_blooms.get(f, {})
-                    for f in files
-                }
                 self._write_checkpoint(
                     {
                         "version": new_v,
@@ -887,7 +573,6 @@ class ManagedTable:
                         "schema": schema_json,
                         "properties": properties,
                         "file_stats": file_stats,
-                        "file_blooms": file_blooms,
                     }
                 )
             except Exception:
@@ -899,118 +584,78 @@ class ManagedTable:
                 pass
         return new_v
 
-    def _write_local_rows(
-        self, tbl, schema: T.StructType
-    ) -> tuple[list[str], dict]:
+    def _write_local_rows(self, tbl, schema: T.StructType) -> list[str]:
         """Write DRIVER-HELD rows (an Arrow table named by the table's
-        columns) as one parquet file with the same stats/bloom manifest
-        metadata the distributed writer produces. The MERGE driver
-        shape writes its insert rows this way: they were collected with
-        the source, so writing them here costs no Spark job at all —
-        O(batch) driver work, the same class as the broadcast itself."""
+        columns) as one parquet file. The MERGE driver shape writes its
+        insert rows this way: they were collected with the source, so
+        writing them here costs no Spark job at all — O(batch) driver
+        work, the same class as the broadcast itself.
+
+        Float columns get no footer statistics: pyarrow's min/max skip
+        NaN (``[1.0, NaN, 3.0]`` records ``[1.0, 3.0]``), which would
+        read as a NaN-free file to both the manifest pruner and Spark's
+        row-group pushdown. Those columns carry no manifest stats and
+        never prune this file."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         if tbl.num_rows == 0:
-            return [], {}
+            return []
         tbl = tbl.cast(
             pa.schema([(f.name, _arrow_type_of(f.dataType)) for f in schema.fields])
         )
         out = os.path.join(self.root, f"d-{uuid.uuid4().hex}")
         os.makedirs(out, exist_ok=True)
         path = os.path.join(out, f"part-local-{uuid.uuid4().hex}.parquet")
-        floaty = [
+        stat_cols = [
             f.name
             for f in schema.fields
-            if isinstance(f.dataType, (T.FloatType, T.DoubleType))
+            if not isinstance(f.dataType, (T.FloatType, T.DoubleType))
         ]
-        stat_cols = [f.name for f in schema.fields if f.name not in floaty]
         pq.write_table(
             tbl, path, write_statistics=stat_cols, row_group_size=tbl.num_rows
         )
-        cols = {f.name: tbl.column(f.name).to_pylist() for f in schema.fields}
-        s, b = _stats_of_values(schema, cols)
-        return [path], {path: {"s": s, "b": b}}
+        return [path]
 
     def _write_data(
         self, df: DataFrame, capture: bool = False
-    ) -> tuple[list[str], dict, list]:
-        """Write ``df`` as one parquet file per non-empty partition and
-        return ``(files, {file: {"s": stats, "b": blooms}}, captured)``.
-        The per-file min/max stats and Bloom bits are folded INSIDE the
-        write tasks (r15) — the commit path no longer reads any data
-        column on the driver; only the small metadata rows come back.
+    ) -> tuple[list[str], list]:
+        """Write ``df`` with Spark's native parquet writer and return
+        ``(files, captured)``: one file per partition that holds rows.
+        Spark writes partition 0's file even when it is empty; files
+        whose footer counts 0 rows are deleted here and never reach a
+        manifest. The caller's ``_commit`` reads each file's min/max
+        stats from its footer.
+
         ``capture=True``: ``df`` carries the internal ``_sparketl_omit``
-        / ``_sparketl_cap`` columns (see ``_make_part_writer``); omitted
-        rows are excluded from the file and the distinct cap values are
-        returned — the mechanism MERGE uses to report matched-row
-        pre-images from the same single write job.
+        / ``_sparketl_cap`` columns. ``_sparketl_omit`` rows are left
+        out of the files (MERGE deletes), and the distinct non-null
+        ``_sparketl_cap`` values (MERGE matched-row pre-images) come
+        back from the SAME write job through ``df.observe``. They are
+        bounded by the caller (micro-batch key sets), never
+        table-sized."""
+        import pyarrow.parquet as pq
+        from pyspark.sql import Observation
 
-        Writer dispatch (r15): schemas with a string column go through
-        the Arrow task writer — per-file Bloom bits need the column
-        data, which must never be read back on the driver. All-numeric
-        schemas (the hot CDC/IVM tables) use Spark's native parquet
-        writer — no Python boundary — with capture riding on a
-        ``df.observe(collect_set(...))`` inside the SAME job and the
-        numeric min/max coming from a driver FOOTER read (O(KB)
-        metadata per file, not a column read; Spark's footers are
-        NaN-aware per ``_collect_file_stats``)."""
         out = os.path.join(self.root, f"d-{uuid.uuid4().hex}")
-        os.makedirs(out, exist_ok=True)
-        data_fields = [
-            f
-            for f in df.schema.fields
-            if f.name not in ("_sparketl_omit", "_sparketl_cap")
-        ]
-        if not any(
-            isinstance(f.dataType, (T.StringType, T.BinaryType))
-            for f in data_fields
-        ):
-            from pyspark.sql import Observation
-
-            captured: list = []
-            w = df
-            if capture:
-                obs = Observation()
-                w = df.observe(
-                    obs, F.collect_set(F.col("_sparketl_cap")).alias("cap")
-                ).filter(
-                    ~F.coalesce(F.col("_sparketl_omit"), F.lit(False))
-                ).drop("_sparketl_omit", "_sparketl_cap")
-            w.write.mode("overwrite").parquet(out)
-            files = sorted(
-                os.path.join(out, f)
-                for f in os.listdir(out)
-                if f.endswith(".parquet")
+        if capture:
+            obs = Observation()
+            df = (
+                df.observe(obs, F.collect_set(F.col("_sparketl_cap")).alias("cap"))
+                .filter(~F.coalesce(F.col("_sparketl_omit"), F.lit(False)))
+                .drop("_sparketl_omit", "_sparketl_cap")
             )
-            adds = {
-                f: {"s": _collect_file_stats(f), "b": {}} for f in files
-            }
-            if capture:
-                captured = list(obs.get["cap"])
-            return files, adds, captured
-        fn = _make_part_writer(out, data_fields, capture)
-        rows = df.mapInArrow(
-            fn, "file string, stats string, blooms string, cap string"
-        ).collect()
-        files = sorted(r["file"] for r in rows if r["file"] is not None)
-        adds = {
-            r["file"]: {
-                "s": json.loads(r["stats"]),
-                "b": json.loads(r["blooms"]),
-            }
-            for r in rows
-            if r["file"] is not None
-        }
-        cap_seen: set = set()
-        captured: list = []
-        for r in rows:
-            for v in json.loads(r["cap"]):
-                k = json.dumps(v, sort_keys=True)
-                if k not in cap_seen:
-                    cap_seen.add(k)
-                    captured.append(v)
-        return files, adds, captured
+        df.write.mode("overwrite").parquet(out)
+        files = []
+        for name in sorted(os.listdir(out)):
+            if not name.endswith(".parquet"):
+                continue
+            path = os.path.join(out, name)
+            if pq.read_metadata(path).num_rows:
+                files.append(path)
+            else:
+                os.remove(path)
+        return files, list(obs.get["cap"]) if capture else []
 
     # -- DDL ----------------------------------------------------------------
     def create(self, schema: T.StructType, properties: dict | None = None) -> None:
@@ -1045,12 +690,13 @@ class ManagedTable:
         prune_only: bool = False,
     ) -> DataFrame:
         """Read a version (default: latest). With ``where``, files whose
-        footer min/max prove no match are skipped BEFORE Spark ever
-        lists them (manifest-level data skipping, the Delta pattern);
-        the predicate is then still applied to the surviving files, so
-        the result is exactly ``read().filter(where)`` — pruning only
-        changes how much is scanned. At 100 TB this is the difference
-        between touching 3 files and 30 000.
+        footer min/max (numeric or string columns) prove no match are
+        skipped BEFORE Spark ever lists them (manifest-level data
+        skipping, the Delta pattern); the predicate is then still
+        applied to the surviving files, so the result is exactly
+        ``read().filter(where)`` — pruning only changes how much is
+        scanned. At 100 TB this is the difference between touching 3
+        files and 30 000.
 
         ``prune_only=True`` skips that row-level re-filter and returns
         the SUPERSET held by the surviving files — for callers that
@@ -1093,18 +739,19 @@ class ManagedTable:
 
     def candidate_files(self, where: str | None, version: int | None = None) -> list[str]:
         """Manifest files that might contain rows matching ``where`` —
-        AND-of-comparisons prune on footer min/max stats (numeric
-        comparisons) and per-file Bloom filters (string equality); any
-        conjunct the pruner cannot parse is ignored (never prunes), so
-        the result is always a superset of the matching files.
+        AND-of-comparisons prune on footer min/max stats, numeric and
+        string (see ``_file_might_match``); any conjunct the pruner
+        cannot parse is ignored (never prunes), so the result is always
+        a superset of the matching files. String equality prunes only
+        files whose [min, max] excludes the literal: a file whose range
+        spans it is kept even when it does not hold it.
 
         Structure handled (r6): SQL precedence is honored by splitting
         on top-level OR first (a file survives if ANY disjunct admits
         it), then AND within each disjunct; ``BETWEEN a AND b`` with
         numeric bounds rewrites to its two comparisons BEFORE the AND
         split; ``col IN (…)`` prunes as a disjunction of equality
-        checks (numeric via min/max, strings via the Bloom filter).
-        NOT — and any parenthesis outside an IN list — still disables
+        checks. NOT — and any parenthesis outside an IN list — disables
         pruning entirely: a free-form boolean tree needs a real parser,
         and an unparsable predicate must stay conservative. Any
         conjunct (or IN item) the pruner cannot parse simply never
@@ -1113,7 +760,7 @@ class ManagedTable:
         Scale (r7): when the snapshot's nearest checkpoint holds more
         than ``DIST_PRUNE_FILES`` files, the prune runs as a SPARK JOB
         over the checkpoint parquet (the Delta pattern): executors
-        evaluate the compiled predicate against each row's stats/bloom
+        evaluate the compiled predicate against each row's stats
         JSON and only the SURVIVING paths return to the driver, which
         then replays the ≤ _CKPT_EVERY delta entries above the
         checkpoint. The driver never materializes the full
@@ -1131,13 +778,8 @@ class ManagedTable:
         ):
             return self._candidate_files_distributed(v, ckpt_v, disjuncts)
         m = self._manifest(v)
-        stats = m.get("file_stats", {})
-        blooms = m.get("file_blooms", {})
-        return [
-            f
-            for f in m["files"]
-            if _prune_admits(disjuncts, stats.get(f, {}), blooms.get(f, {}))
-        ]
+        stats = m["file_stats"]
+        return [f for f in m["files"] if _prune_admits(disjuncts, stats.get(f, {}))]
 
     def _nearest_ckpt_version(self, v: int) -> int | None:
         """Checkpoint version the snapshot at ``v`` would rebuild from,
@@ -1163,7 +805,7 @@ class ManagedTable:
         self, v: int, ckpt_v: int, disjuncts
     ) -> list[str]:
         """Distributed footer-stat prune: map the compiled predicate
-        over the checkpoint parquet's (file, stats, blooms) rows on
+        over the checkpoint parquet's (file, stats) rows on
         executors, collect only survivors, then apply the small delta
         tail driver-side (removes drop survivors; added files carry
         their stats inline in the delta entry and are pruned here)."""
@@ -1172,17 +814,13 @@ class ManagedTable:
         def prune_part(it):
             for pdf in it:
                 keep = [
-                    _prune_admits(
-                        dj,
-                        json.loads(s) if s else {},
-                        json.loads(b) if b else {},
-                    )
-                    for s, b in zip(pdf["stats"], pdf["blooms"])
+                    _prune_admits(dj, json.loads(s) if s else {})
+                    for s in pdf["stats"]
                 ]
                 yield pdf.loc[keep, ["file"]]
 
         ck = self.spark.read.parquet(self._ckpt_path(ckpt_v)).select(
-            "file", "stats", "blooms"
+            "file", "stats"
         )
         files = [r["file"] for r in ck.mapInPandas(prune_part, "file string").collect()]
         for w in range(ckpt_v + 1, v + 1):
@@ -1191,7 +829,7 @@ class ManagedTable:
             if removed:
                 files = [f for f in files if f not in removed]
             for f, sb in d["adds"].items():
-                if _prune_admits(dj, sb["s"], sb["b"]):
+                if _prune_admits(dj, sb["s"]):
                     files.append(f)
         return files
 
@@ -1328,7 +966,7 @@ class ManagedTable:
         once regardless of retries; only the manifest attempt repeats."""
         target = T.StructType.fromJson(json.loads(self._manifest()["schema"]))
         aligned = df.select([F.col(f.name).cast(f.dataType) for f in target.fields])
-        new_files, new_stats, _ = self._write_data(aligned)
+        new_files, _ = self._write_data(aligned)
         last_err: Exception | None = None
         for _ in range(20):
             m = self._manifest()
@@ -1339,7 +977,6 @@ class ManagedTable:
                     m["schema"],
                     props,
                     base_version=m["version"],
-                    new_stats=new_stats,
                 )
             except ConcurrentWriteError as e:
                 last_err = e
@@ -1351,13 +988,9 @@ class ManagedTable:
         m = self._manifest()
         target = T.StructType.fromJson(json.loads(m["schema"]))
         aligned = df.select([F.col(f.name).cast(f.dataType) for f in target.fields])
-        new_files, new_stats, _ = self._write_data(aligned)
+        new_files, _ = self._write_data(aligned)
         return self._commit(
-            new_files,
-            m["schema"],
-            m["properties"],
-            base_version=m["version"],
-            new_stats=new_stats,
+            new_files, m["schema"], m["properties"], base_version=m["version"]
         )
 
     def _pruned_rewrite(
@@ -1404,25 +1037,20 @@ class ManagedTable:
             if capture:
                 cols += [F.col("_sparketl_omit"), F.col("_sparketl_cap")]
             aligned = out.select(cols)
-            new_files, new_stats, captured = self._write_data(
-                aligned, capture=capture
-            )
+            new_files, captured = self._write_data(aligned, capture=capture)
         else:
-            new_files, new_stats = [], {}
+            new_files = []
         if extra_files is not None:
             # driver-side companion files for the SAME commit (the
             # insert side of driver-shape MERGEs — see _write_local_rows);
             # runs even with zero candidate files, where everything
             # inserts and the Spark job was skipped entirely
-            xf, xs = extra_files(captured)
-            new_files = new_files + xf
-            new_stats = {**new_stats, **xs}
+            new_files = new_files + extra_files(captured)
         v = self._commit(
             retained + new_files,
             m["schema"],
             m["properties"],
             base_version=m["version"],
-            new_stats=new_stats,
         )
         return (v, captured) if capture else v
 

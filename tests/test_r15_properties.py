@@ -1,16 +1,12 @@
 """Round-15 optimization-mechanism tests.
 
-Pins the r15 write/merge machinery: write-job stats (arrow task writer
-for string-bearing schemas, observe+footer path for numeric ones),
-the MERGE driver shape (broadcast-left + local insert file) against the
-distributed one, the capture_matched pre-image channel, and the
-exact-hash partition keys behind the sampling-free staging and z-order
-compact.
+Pins the r15 merge machinery: the MERGE driver shape (broadcast-left +
+local insert file) against the distributed one, the capture_matched
+pre-image channel, and the exact-hash partition keys behind the
+sampling-free staging and z-order compact.
 """
 
 from __future__ import annotations
-
-import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -41,82 +37,6 @@ def _num_table(spark, tmp_path, name="t"):
         ).coalesce(1)
     )
     return t
-
-
-# -- write-job stats -----------------------------------------------------
-
-
-def test_write_stats_numeric_schema_no_arrow_writer(spark, tmp_path):
-    """All-numeric schemas take the JVM writer: manifest stats come
-    from the footer read and match the data exactly."""
-    t = _num_table(spark, tmp_path)
-    m = t._manifest()
-    (f,) = m["files"]
-    assert m["file_stats"][f]["k"] == [1, 3]
-    assert m["file_stats"][f]["v"] == [10, 30]
-    assert m["file_blooms"][f] == {}
-
-
-def test_write_stats_string_schema_has_blooms(spark, tmp_path):
-    """String-bearing schemas take the Arrow task writer: bloom bits
-    are computed inside the write job (never a driver column read) and
-    string-equality pruning works off them."""
-    t = _mk(
-        spark,
-        tmp_path,
-        "s",
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("s", T.StringType()),
-        ],
-    )
-    t.append(
-        spark.createDataFrame([(1, "aa"), (2, "bb")], "k long, s string").coalesce(1)
-    )
-    t.append(
-        spark.createDataFrame([(3, "cc"), (4, "dd")], "k long, s string").coalesce(1)
-    )
-    m = t._manifest()
-    assert all(m["file_blooms"][f].get("s") for f in m["files"])
-    assert len(t.candidate_files("s = 'aa'")) == 1
-    assert {r["k"] for r in t.read(where="s = 'aa'").collect()} == {1}
-
-
-def test_write_stats_nan_semantics_match_both_paths(spark, tmp_path):
-    """Both writers produce Spark-total-order NaN stats: max is
-    NaN-sticky, min is the smallest real."""
-    rows = [(1, 1.0, "x"), (2, float("nan"), "y")]
-    # arrow path (string col present)
-    ta = _mk(
-        spark,
-        tmp_path,
-        "a",
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("v", T.DoubleType()),
-            T.StructField("s", T.StringType()),
-        ],
-    )
-    ta.append(spark.createDataFrame(rows, "k long, v double, s string").coalesce(1))
-    # jvm/footer path (numeric only)
-    tj = _mk(
-        spark,
-        tmp_path,
-        "j",
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("v", T.DoubleType()),
-        ],
-    )
-    tj.append(
-        spark.createDataFrame([r[:2] for r in rows], "k long, v double").coalesce(1)
-    )
-    for t in (ta, tj):
-        (f,) = t._manifest()["files"]
-        mn, mx = t._manifest()["file_stats"][f]["v"]
-        assert mn == 1.0 and math.isnan(mx)
-        # NaN row reachable through an upper-bound prune
-        assert {r["k"] for r in t.read(where="v > 100").collect()} == {2}
 
 
 # -- MergeBuilder ----------------------------------------------------------

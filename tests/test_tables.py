@@ -1,4 +1,6 @@
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import types as T
 
 from sparketl.tables import ManagedTable, TableError
@@ -573,15 +575,15 @@ def test_file_skipping_nan_rows_never_pruned_on_upper_ops(spark, tmp_path):
 
 
 def test_file_skipping_nan_in_later_row_group_not_pruned(spark, tmp_path):
-    """Regression: stats must fold NaN-aware. (a) The legacy FALLBACK
-    (``_collect_file_stats``, driver footer read for files that never
-    passed through ``_write_data``) must fold multi-row-group footer
-    stats under Spark's total order — a plain ``max()`` fold keeps the
-    real value (``max(227.0, nan) == 227.0``), the pruner reads that as
-    proof the file is NaN-free, and ``v > <anything above file max>``
-    silently drops the NaN rows. (b) The r15 WRITE-JOB stats path must
-    produce the same NaN-aware [real-min, NaN-max] for a NaN-tailed
-    file and keep the file + its NaN rows reachable through the prune."""
+    """Regression: stats must fold NaN-aware. (a) The footer read
+    (``_collect_file_stats``, run for every file a commit adds) must
+    fold multi-row-group footer stats under Spark's total order — a
+    plain ``max()`` fold keeps the real value (``max(227.0, nan) ==
+    227.0``), the pruner reads that as proof the file is NaN-free, and
+    ``v > <anything above file max>`` silently drops the NaN rows.
+    (b) A table append must record the same NaN-aware [real-min,
+    NaN-max] for a NaN-tailed file and keep the file + its NaN rows
+    reachable through the prune."""
     import math
 
     from sparketl.tables import ManagedTable, _collect_file_stats
@@ -591,7 +593,7 @@ def test_file_skipping_nan_in_later_row_group_not_pruned(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, "id long, v double").coalesce(1)
 
-    # (a) fallback fold over a SPARK-written multi-row-group footer
+    # (a) fold over a SPARK-written multi-row-group footer
     old_block = spark.conf.get("parquet.block.size", None)
     spark.conf.set("parquet.block.size", "1024")
     try:
@@ -614,7 +616,7 @@ def test_file_skipping_nan_in_later_row_group_not_pruned(spark, tmp_path):
     assert math.isnan(stats["v"][1])  # folded max keeps the NaN
     assert stats["v"][0] == 0.0  # folded min stays real
 
-    # (b) write-job stats path: same NaN-aware file-level [min, max]
+    # (b) table append: same NaN-aware file-level [min, max]
     tbl = ManagedTable(spark, str(tmp_path / "t"))
     tbl.create(df.schema)
     tbl.append(df)
@@ -630,6 +632,37 @@ def test_file_skipping_nan_in_later_row_group_not_pruned(spark, tmp_path):
     # = can no longer prune (NaN rows exist), < still prunes on real min
     assert len(tbl.candidate_files("v = 1000000")) == 1
     assert len(tbl.candidate_files("v < 0")) == 0
+
+
+def test_string_stats_dropped_when_a_row_group_is_unbounded(spark, tmp_path):
+    """Spark's writer leaves min/max out of a row group whose string
+    exceeds 4 KiB. Folding only the other row groups would bound the
+    file below that string and prune it away, so the column gets no
+    file stats at all while the numeric column keeps its bounds."""
+    import glob
+
+    from sparketl.tables import _collect_file_stats
+
+    long = "z" * 5000
+    rows = [(i, f"a{i:04d}") for i in range(300)] + [(300, long)]
+    df = spark.createDataFrame(rows, "k long, s string").coalesce(1)
+    old_block = spark.conf.get("parquet.block.size", None)
+    spark.conf.set("parquet.block.size", "1024")
+    try:
+        raw = str(tmp_path / "raw")
+        df.write.mode("overwrite").parquet(raw)
+        tbl = ManagedTable(spark, str(tmp_path / "t"))
+        tbl.create(df.schema)
+        tbl.append(df)
+    finally:
+        if old_block is None:
+            spark.conf.unset("parquet.block.size")
+        else:
+            spark.conf.set("parquet.block.size", old_block)
+    (path,) = glob.glob(raw + "/*.parquet")
+    assert _collect_file_stats(path) == {"k": [0, 300]}
+    assert len(tbl.candidate_files(f"s = '{long}'")) == 1
+    assert [r["k"] for r in tbl.read(where=f"s = '{long}'").collect()] == [300]
 
 
 def test_stat_folds_nan_totals_order():
@@ -920,10 +953,11 @@ def test_drop_column_metadata_only_and_guards(spark, tmp_table_root):
         t.drop_column("ghost")
 
 
-def test_bloom_prunes_string_equality(spark, tmp_table_root):
-    """String-equality file skipping via per-file Bloom filters: a
-    lookup for a name present in only one file must scan one file; an
-    absent name scans zero; results always equal the unpruned filter."""
+def test_minmax_prunes_string_equality(spark, tmp_table_root):
+    """String-equality file skipping via per-file footer min/max: a
+    lookup for a name inside only one file's range must scan one file;
+    a name outside every range scans zero; results always equal the
+    unpruned filter."""
     t = make(spark, tmp_table_root)
     t.append(
         spark.createDataFrame(
@@ -948,29 +982,10 @@ def test_bloom_prunes_string_equality(spark, tmp_table_root):
     assert len(t.candidate_files("name = 'it''s'")) == 2
 
 
-def test_bloom_skipped_for_high_cardinality(spark, tmp_table_root):
-    from sparketl import tables as tb
-
-    old = tb._BLOOM_MAX_DISTINCT
-    tb._BLOOM_MAX_DISTINCT = 5  # force the cap
-    try:
-        t = make(spark, tmp_table_root)
-        t.append(
-            spark.createDataFrame(
-                [(i, f"v{i}", 0.0) for i in range(50)], SCHEMA
-            ).coalesce(1)
-        )
-        # no bloom recorded → equality never prunes, read stays correct
-        assert len(t.candidate_files("name = 'nope'")) == 1
-        assert t.read(where="name = 'v7'").count() == 1
-    finally:
-        tb._BLOOM_MAX_DISTINCT = old
-
-
-def test_bloom_carried_forward_and_respects_mutations(spark, tmp_table_root):
-    """Blooms ride the manifest across appends/updates like the numeric
-    stats: after a keyed update rewrites one file, lookups against both
-    old and new values stay exact."""
+def test_string_stats_carried_forward_and_respect_mutations(spark, tmp_table_root):
+    """String min/max ride the manifest across appends/updates like the
+    numeric stats: after a keyed update rewrites one file, lookups
+    against both old and new values stay exact."""
     t = make(spark, tmp_table_root)
     t.append(spark.createDataFrame([(1, "old", 1.0)], SCHEMA).coalesce(1))
     t.append(spark.createDataFrame([(2, "other", 2.0)], SCHEMA).coalesce(1))
@@ -979,6 +994,138 @@ def test_bloom_carried_forward_and_respects_mutations(spark, tmp_table_root):
     assert {r["id"] for r in t.read(where="name = 'new'").collect()} == {1}
     assert t.read(where="name = 'old'").count() == 0
     assert {r["id"] for r in t.read(where="name = 'other'").collect()} == {2}
+
+
+def test_write_stats_nan_semantics_numeric_and_string_schemas(spark, tmp_path):
+    """One writer for every schema: an appended file's footer stats are
+    exact for ints and strings and follow Spark's total order for
+    doubles (max NaN-sticky, min the smallest real), so a NaN row stays
+    reachable through an upper-bound prune. The MERGE driver shape's
+    insert file records no float stats (pyarrow's min/max skip NaN), so
+    its NaN rows stay reachable too."""
+    import math
+
+    rows = [(1, 1.0, "x"), (2, float("nan"), "y"), (3, float("nan"), "n"), (4, 5.0, "m")]
+    for name, ddl in (
+        ("num", "k long, v double"),
+        ("str", "k long, v double, s string"),
+    ):
+        width = len(ddl.split(","))
+        t = ManagedTable(spark, str(tmp_path / name))
+        t.create(spark.createDataFrame([], ddl).schema)
+        t.append(spark.createDataFrame([r[:width] for r in rows[:2]], ddl).coalesce(1))
+        (f,) = t.data_files()
+        fs = t._manifest()["file_stats"][f]
+        assert fs["k"] == [1, 2]
+        assert fs["v"][0] == 1.0 and math.isnan(fs["v"][1])
+        assert {r["k"] for r in t.read(where="v > 100").collect()} == {2}
+        # keys 3 and 4 match no file: the driver shape writes only its
+        # driver-side insert file
+        t.upsert(spark.createDataFrame([r[:width] for r in rows[2:]], ddl), "k")
+        (g,) = [x for x in t.data_files() if x != f]
+        gs = t._manifest()["file_stats"][g]
+        assert gs["k"] == [3, 4] and "v" not in gs
+        assert {r["k"] for r in t.read(where="v > 100").collect()} == {2, 3}
+        if width == 3:
+            assert fs["s"] == ["x", "y"] and gs["s"] == ["m", "n"]
+            assert t.candidate_files("s = 'y'") == [f]
+            assert {r["k"] for r in t.read(where="s = 'y'").collect()} == {2}
+
+
+def test_writes_commit_no_empty_files(spark, tmp_path):
+    """Spark writes partition 0's file even when it holds no rows; such
+    files never reach a manifest. One-row appends commit one file each
+    and deleting every row commits zero files, for numeric and string
+    schemas alike."""
+    import pyarrow.parquet as pq
+
+    for name, ddl, val in (("num", "k long, v double", 0.5), ("str", "k long, s string", "a")):
+        t = ManagedTable(spark, str(tmp_path / name))
+        t.create(spark.createDataFrame([], ddl).schema)
+        for i in range(3):
+            t.append(spark.createDataFrame([(i, val)], ddl))
+        files = t.data_files()
+        assert len(files) == 3, name
+        assert [pq.read_metadata(f).num_rows for f in files] == [1, 1, 1]
+        t.delete_where("k >= 0")
+        assert t.data_files() == [] and t.read().count() == 0, name
+
+
+def test_pruner_keeps_files_when_literal_and_stats_kinds_differ(spark, tmp_table_root):
+    """A number against string stats, or a string against numeric
+    stats, never prunes: Spark compares them after casting one side,
+    in an order the bounds do not follow (and comparing a str bound
+    with a float would raise TypeError)."""
+    t = make(spark, tmp_table_root)
+    for i, n in ((1, "3"), (2, "10"), (3, "a")):
+        t.append(spark.createDataFrame([(i, n, 1.0)], SCHEMA).coalesce(1))
+    for where in ("name > 5", "name = 10", "name IN (1, 'a')", "id = '5'", "id = '2'"):
+        assert len(t.candidate_files(where)) == 3, where
+        got = sorted(tuple(r) for r in t.read(where=where).collect())
+        want = sorted(tuple(r) for r in t.read().filter(where).collect())
+        assert got == want, where
+
+
+# pieces of probe strings: shared prefixes, non-ASCII and astral code
+# points, SQL words and characters the predicate splitter reacts to,
+# and a backslash escape Spark's parser rewrites (no quote: a quote
+# ends the literal)
+_STR_PIECES = [
+    "", "a", "ab", "abc", "b", "é", "\uff21", "\U0001f600", "日本",
+    " AND ", " OR ", " BETWEEN 1 AND 2", "NOT", "(", ")", ",", '"',
+    "k = 5", "\t", "\\t", " ",
+]
+
+
+_STR_VALUE = st.lists(st.sampled_from(_STR_PIECES), max_size=3).map("".join)
+
+
+@pytest.fixture(scope="module")
+def prop_root(tmp_path_factory):
+    return tmp_path_factory.mktemp("strprune")
+
+
+@given(
+    batches=st.lists(
+        st.lists(_STR_VALUE, min_size=1, max_size=4), min_size=2, max_size=3
+    ),
+    extra=st.lists(_STR_VALUE, min_size=1, max_size=2),
+)
+# a backslash escape Spark reads as a tab, and an AND-split inside a
+# literal that would parse as a conjunct on k
+@example(batches=[["\t"], [" AND k = 5 AND "]], extra=["\\t"])
+@settings(max_examples=6, deadline=None)
+def test_string_prune_never_drops_a_match(spark, prop_root, batches, extra):
+    """String min/max pruning is a superset: for every probe value,
+    ``s = 'v'`` and an IN list keep every file holding a match, and a
+    pruned read equals the unpruned filter."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    t = ManagedTable(spark, str(prop_root / uuid.uuid4().hex))
+    t.create(T.StructType([T.StructField("k", T.LongType()), T.StructField("s", T.StringType())]))
+    k = 0
+    for batch in batches:
+        rows = [(k + i, v) for i, v in enumerate(batch)]
+        k += len(batch)
+        t.append(spark.createDataFrame(rows, "k long, s string").coalesce(1))
+    held = {
+        f: set(pq.read_table(f, columns=["s"]).column("s").to_pylist())
+        for f in t.data_files()
+    }
+    probes = sorted({v for b in batches for v in b} | set(extra))
+    for v in probes:
+        cand = set(t.candidate_files(f"s = '{v}'"))
+        assert {f for f, vals in held.items() if v in vals} <= cand, v
+    pair = {probes[0], extra[0]}
+    in_list = "s IN (" + ", ".join(f"'{v}'" for v in sorted(pair)) + ")"
+    cand = set(t.candidate_files(in_list))
+    assert {f for f, vals in held.items() if vals & pair} <= cand
+    for where in (f"s = '{extra[-1]}'", in_list):
+        got = sorted(tuple(r) for r in t.read(where=where).collect())
+        want = sorted(tuple(r) for r in t.read().filter(where).collect())
+        assert got == want, where
 
 
 def test_changes_classifies_cdf_row_types(spark, tmp_table_root):
@@ -1010,8 +1157,8 @@ def test_changes_classifies_cdf_row_types(spark, tmp_table_root):
 def test_commit_writes_delta_not_full_snapshot(spark, tmp_table_root):
     """The log entry for one append must be O(files added in THAT
     commit): after a wide multi-file append, a later 1-row append's
-    manifest stays small instead of re-listing every file + its 1 KiB
-    blooms (the old full-snapshot format grew linearly)."""
+    manifest stays small instead of re-listing every file + its stats
+    (the old full-snapshot format grew linearly)."""
     import json
     import os
 
@@ -1065,7 +1212,6 @@ def test_checkpoint_bounds_log_replay(spark, tmp_table_root, monkeypatch):
     full = nock._manifest()
     assert full["files"] == snap["files"]
     assert full["file_stats"] == snap["file_stats"]
-    assert full["file_blooms"] == snap["file_blooms"]
     assert full["properties"] == snap["properties"]
 
 
@@ -1086,7 +1232,7 @@ def test_checkpoint_survives_pruned_reads_and_rewrites(spark, tmp_table_root, mo
     assert 0 < len(cand) < len(cold._manifest()["files"])
     got = sorted(r["id"] for r in cold.read(where="bal > 350").collect())
     assert got == [4, 5]
-    # bloom pruning on string equality
+    # string min/max pruning on equality
     cand_s = cold.candidate_files("name = 'n2'")
     assert len(cand_s) == 1
     # copy-on-write delete on top of a checkpoint base
@@ -1110,7 +1256,6 @@ def test_legacy_full_manifest_still_readable(spark, tmp_table_root):
         "schema": m["schema"],
         "properties": dict(m["properties"]),
         "file_stats": dict(m["file_stats"]),
-        "file_blooms": dict(m["file_blooms"]),
     }
     path = os.path.join(t._manifest_dir, f"v{m['version']:06d}.json")
     os.remove(path)
@@ -1126,6 +1271,54 @@ def test_legacy_full_manifest_still_readable(spark, tmp_table_root):
     cand = again.candidate_files("bal > 2.5")
     assert len(cand) < len(again._manifest()["files"])
     assert sorted(r["id"] for r in again.read(where="bal > 2.5").collect()) == [3]
+
+
+def test_parent_format_blooms_still_read_and_prune(spark, tmp_table_root):
+    """Tables written while the manifest carried Bloom filters stay
+    readable: a delta whose ``adds`` carry a ``"b"`` key and a
+    checkpoint with a ``blooms`` column load, their min/max stats still
+    prune, and new commits stack on top."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = make(spark, tmp_table_root)
+    for i in range(3):  # v2..v4
+        t.append(spark.createDataFrame([(i, f"n{i}", float(i))], SCHEMA).coalesce(1))
+    bits = "ff" * 1024
+    snap = t._manifest(3)
+    pq.write_table(
+        pa.table(
+            {
+                "file": snap["files"],
+                "stats": [json.dumps(snap["file_stats"][f]) for f in snap["files"]],
+                "blooms": [json.dumps({"name": bits}) for _ in snap["files"]],
+            }
+        ).replace_schema_metadata(
+            {
+                "version": "3",
+                "schema": snap["schema"],
+                "properties": json.dumps(snap["properties"]),
+            }
+        ),
+        t._ckpt_path(3),
+    )
+    path = f"{t._manifest_dir}/v000004.json"
+    entry = t._read_log_entry(4)
+    for sb in entry["adds"].values():
+        sb["b"] = {"name": bits}
+    with open(path, "w") as f:
+        json.dump(entry, f)
+
+    fresh = ManagedTable(spark, t.root)
+    assert sorted(r["id"] for r in fresh.read().collect()) == [0, 1, 2]
+    assert len(fresh.candidate_files("bal > 1.5")) == 1
+    assert len(fresh.candidate_files("id = 0")) == 1
+    assert [r["id"] for r in fresh.read(where="bal > 1.5").collect()] == [2]
+    fresh.append(spark.createDataFrame([(3, "n3", 3.0)], SCHEMA))
+    again = ManagedTable(spark, t.root)
+    assert sorted(r["id"] for r in again.read(where="bal > 0.5").collect()) == [1, 2, 3]
 
 
 def test_concurrent_appends_across_checkpoint_boundaries(spark, tmp_path, monkeypatch):
@@ -1215,8 +1408,6 @@ def test_distributed_checkpoint_prune_never_materializes_snapshot(
     import json
     import os
 
-    from sparketl.tables import _bloom_hashes
-
     root = str(tmp_path / "bigtable")
     tbl = ManagedTable(spark, root)
     os.makedirs(tbl._manifest_dir)
@@ -1225,19 +1416,16 @@ def test_distributed_checkpoint_prune_never_materializes_snapshot(
     n = 1200
     monkeypatch.setattr(ManagedTable, "DIST_PRUNE_FILES", 1000)
     files = [f"{root}/d-synth/f-{i:06d}.parquet" for i in range(n)]
-    # one string-bloom'd file to exercise the executor-side bloom path
-    bits = bytearray(8192 // 8)
-    for h in _bloom_hashes("hit"):
-        bits[h >> 3] |= 1 << (h & 7)
-    blooms = {files[7]: {"s": bits.hex()}}
+    stats = {f: {"x": [i, i]} for i, f in enumerate(files)}
+    # one file with string stats to exercise the executor-side string prune
+    stats[files[7]]["s"] = ["hit", "hit"]
     tbl._write_checkpoint(
         {
             "version": 20,
             "files": files,
             "schema": schema_json,
             "properties": {},
-            "file_stats": {f: {"x": [i, i]} for i, f in enumerate(files)},
-            "file_blooms": blooms,
+            "file_stats": stats,
         }
     )
     with open(os.path.join(tbl._manifest_dir, "v000020.json"), "w") as fh:
@@ -1259,8 +1447,8 @@ def test_distributed_checkpoint_prune_never_materializes_snapshot(
 
     got = tbl.candidate_files("x >= 1190")
     assert sorted(got) == files[1190:]
-    # bloom pruning also runs executor-side: bloom-less files stay
-    # (superset guarantee), the bloom'd file drops only on a miss
+    # string pruning also runs executor-side: files without string
+    # stats stay (superset guarantee), the other drops only on a miss
     assert sorted(tbl.candidate_files("x <= 10 AND s = 'hit'")) == files[:11]
     assert sorted(tbl.candidate_files("x <= 10 AND s = 'miss'")) == (
         files[:7] + files[8:11]
@@ -1275,8 +1463,8 @@ def test_distributed_checkpoint_prune_never_materializes_snapshot(
                 "schema": schema_json,
                 "properties": {},
                 "adds": {
-                    f"{root}/d-extra/hi.parquet": {"s": {"x": [5000, 5001]}, "b": {}},
-                    f"{root}/d-extra/lo.parquet": {"s": {"x": [0, 1]}, "b": {}},
+                    f"{root}/d-extra/hi.parquet": {"s": {"x": [5000, 5001]}},
+                    f"{root}/d-extra/lo.parquet": {"s": {"x": [0, 1]}},
                 },
                 "removes": [files[1195]],
             },
