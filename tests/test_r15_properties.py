@@ -1,12 +1,16 @@
 """Round-15 optimization-mechanism tests.
 
-Pins the r15 merge machinery: the MERGE driver shape (broadcast-left +
-local insert file) against the distributed one, the capture_matched
-pre-image channel, and the exact-hash partition keys behind the
-sampling-free staging and z-order compact.
+Pins the r15 write/merge machinery: write-job stats (one native
+writer for every schema, footer min/max for numeric and string
+columns), the MERGE driver shape (broadcast-left + local insert file)
+against the distributed one, the capture_matched pre-image channel, and
+the exact-hash partition keys behind the sampling-free staging and
+z-order compact.
 """
 
 from __future__ import annotations
+
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -37,6 +41,84 @@ def _num_table(spark, tmp_path, name="t"):
         ).coalesce(1)
     )
     return t
+
+
+# -- write-job stats -----------------------------------------------------
+
+
+def test_write_stats_numeric_schema_no_arrow_writer(spark, tmp_path):
+    """All-numeric schemas take the native writer: manifest stats come
+    from the footer read and match the data exactly, and the manifest
+    carries no Bloom filters."""
+    t = _num_table(spark, tmp_path)
+    m = t._manifest()
+    (f,) = m["files"]
+    assert m["file_stats"][f]["k"] == [1, 3]
+    assert m["file_stats"][f]["v"] == [10, 30]
+    assert "file_blooms" not in m
+
+
+def test_write_stats_string_schema_has_blooms(spark, tmp_path):
+    """String-bearing schemas take the same native writer: the footer
+    read records exact string min/max (no Bloom bits, no driver column
+    read) and string-equality pruning works off them."""
+    t = _mk(
+        spark,
+        tmp_path,
+        "s",
+        [
+            T.StructField("k", T.LongType()),
+            T.StructField("s", T.StringType()),
+        ],
+    )
+    t.append(
+        spark.createDataFrame([(1, "aa"), (2, "bb")], "k long, s string").coalesce(1)
+    )
+    t.append(
+        spark.createDataFrame([(3, "cc"), (4, "dd")], "k long, s string").coalesce(1)
+    )
+    m = t._manifest()
+    assert sorted(m["file_stats"][f]["s"] for f in m["files"]) == [
+        ["aa", "bb"],
+        ["cc", "dd"],
+    ]
+    assert "file_blooms" not in m
+    assert len(t.candidate_files("s = 'aa'")) == 1
+    assert {r["k"] for r in t.read(where="s = 'aa'").collect()} == {1}
+
+
+def test_write_stats_nan_semantics_match_both_paths(spark, tmp_path):
+    """Numeric and string-bearing schemas both get Spark-total-order
+    NaN stats: max is NaN-sticky, min is the smallest real, so a NaN
+    row stays reachable through an upper-bound prune. The MERGE driver
+    shape's insert file records no float stats (pyarrow's min/max skip
+    NaN), so its NaN rows stay reachable too."""
+    rows = [(1, 1.0, "x"), (2, float("nan"), "y"), (3, float("nan"), "n"), (4, 5.0, "m")]
+    for name, ddl in (
+        ("num", "k long, v double"),
+        ("str", "k long, v double, s string"),
+    ):
+        width = len(ddl.split(","))
+        t = ManagedTable(spark, str(tmp_path / name))
+        t.create(spark.createDataFrame([], ddl).schema)
+        t.append(spark.createDataFrame([r[:width] for r in rows[:2]], ddl).coalesce(1))
+        (f,) = t.data_files()
+        fs = t._manifest()["file_stats"][f]
+        assert fs["k"] == [1, 2]
+        mn, mx = fs["v"]
+        assert mn == 1.0 and math.isnan(mx)
+        assert {r["k"] for r in t.read(where="v > 100").collect()} == {2}
+        # keys 3 and 4 match no file: the driver shape writes only its
+        # driver-side insert file
+        t.upsert(spark.createDataFrame([r[:width] for r in rows[2:]], ddl), "k")
+        (g,) = [x for x in t.data_files() if x != f]
+        gs = t._manifest()["file_stats"][g]
+        assert gs["k"] == [3, 4] and "v" not in gs
+        assert {r["k"] for r in t.read(where="v > 100").collect()} == {2, 3}
+        if width == 3:
+            assert fs["s"] == ["x", "y"] and gs["s"] == ["m", "n"]
+            assert t.candidate_files("s = 'y'") == [f]
+            assert {r["k"] for r in t.read(where="s = 'y'").collect()} == {2}
 
 
 # -- MergeBuilder ----------------------------------------------------------

@@ -996,42 +996,6 @@ def test_string_stats_carried_forward_and_respect_mutations(spark, tmp_table_roo
     assert {r["id"] for r in t.read(where="name = 'other'").collect()} == {2}
 
 
-def test_write_stats_nan_semantics_numeric_and_string_schemas(spark, tmp_path):
-    """One writer for every schema: an appended file's footer stats are
-    exact for ints and strings and follow Spark's total order for
-    doubles (max NaN-sticky, min the smallest real), so a NaN row stays
-    reachable through an upper-bound prune. The MERGE driver shape's
-    insert file records no float stats (pyarrow's min/max skip NaN), so
-    its NaN rows stay reachable too."""
-    import math
-
-    rows = [(1, 1.0, "x"), (2, float("nan"), "y"), (3, float("nan"), "n"), (4, 5.0, "m")]
-    for name, ddl in (
-        ("num", "k long, v double"),
-        ("str", "k long, v double, s string"),
-    ):
-        width = len(ddl.split(","))
-        t = ManagedTable(spark, str(tmp_path / name))
-        t.create(spark.createDataFrame([], ddl).schema)
-        t.append(spark.createDataFrame([r[:width] for r in rows[:2]], ddl).coalesce(1))
-        (f,) = t.data_files()
-        fs = t._manifest()["file_stats"][f]
-        assert fs["k"] == [1, 2]
-        assert fs["v"][0] == 1.0 and math.isnan(fs["v"][1])
-        assert {r["k"] for r in t.read(where="v > 100").collect()} == {2}
-        # keys 3 and 4 match no file: the driver shape writes only its
-        # driver-side insert file
-        t.upsert(spark.createDataFrame([r[:width] for r in rows[2:]], ddl), "k")
-        (g,) = [x for x in t.data_files() if x != f]
-        gs = t._manifest()["file_stats"][g]
-        assert gs["k"] == [3, 4] and "v" not in gs
-        assert {r["k"] for r in t.read(where="v > 100").collect()} == {2, 3}
-        if width == 3:
-            assert fs["s"] == ["x", "y"] and gs["s"] == ["m", "n"]
-            assert t.candidate_files("s = 'y'") == [f]
-            assert {r["k"] for r in t.read(where="s = 'y'").collect()} == {2}
-
-
 def test_writes_commit_no_empty_files(spark, tmp_path):
     """Spark writes partition 0's file even when it holds no rows; such
     files never reach a manifest. One-row appends commit one file each
