@@ -287,17 +287,6 @@ def main() -> None:
         .format("noop")
         .save()
     )
-    # r15: the ManagedTable write path runs through mapInArrow (stats
-    # fold inside the write job), so the Python-worker/Arrow lane is
-    # part of the shared machinery the warmup exists to warm — first
-    # use costs ~2 s of worker spawn that would otherwise land on
-    # whichever timed query hits a table first. Still no timed query
-    # pre-executed.
-    _ = (
-        spark.range(64)
-        .mapInArrow(lambda it: it, "id long")
-        .count()
-    )
 
     # Calibration anchor (r11): median of 3 runs of the fixed job,
     # taken right after warmup — the pre-suite baseline.

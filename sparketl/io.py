@@ -8,6 +8,17 @@ the DataFrame API and ``spark.sql`` see the same names.
 Scans stay declarative (``spark.read.parquet``) so Catalyst pushes
 filters/column pruning into the parquet reader — at 100 TB this is the
 difference between reading 3 columns and reading 40.
+
+Schema memo: inferring a parquet schema runs one Spark job per file,
+and re-inferring the 10 fixture tables on every ``load_tables`` would
+be most of the jobs of a short T-SQL query. So ``read_parquet`` keeps
+the inferred ``StructType`` per file, keyed by the file's identity
+(absolute path, size and mtime in ns; for a directory, the sorted
+``(name, size, mtime_ns)`` listing) plus the session values of the
+parquet confs that steer inference. A hit reads with
+``spark.read.schema(cached)``: no job. Only the schema is kept, never
+a DataFrame, so every call still lists the files afresh and a
+rewritten file changes the key and is re-inferred.
 """
 
 from __future__ import annotations
@@ -16,6 +27,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -108,6 +120,64 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+# Session confs that change what parquet schema inference returns.
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+# Oldest entries go first past this many: every staged event stream
+# adds entries for its own short-lived files.
+_SCHEMAS_MAX = 1024
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """None for a path this process cannot stat (a remote URI, a missing
+    file): such reads go uncached and fail, if at all, in Spark."""
+    path = os.path.abspath(path)
+    try:
+        if os.path.isdir(path):
+            stats = sorted((e.name, e.stat()) for e in os.scandir(path))
+            ident = tuple((n, st.st_size, st.st_mtime_ns) for n, st in stats)
+        else:
+            st = os.stat(path)
+            ident = (st.st_size, st.st_mtime_ns)
+    except OSError:
+        return None
+    return (path, ident, tuple(spark.conf.get(c, None) for c in _INFER_CONFS))
+
+
+def _store(key: tuple | None, schema: StructType) -> None:
+    if key is None:
+        return
+    while len(_SCHEMAS) >= _SCHEMAS_MAX:
+        _SCHEMAS.pop(next(iter(_SCHEMAS)), None)
+    _SCHEMAS[key] = schema
+
+
+def remember_schema(spark: SparkSession, path: str, schema: StructType) -> None:
+    """Record the schema of a parquet file this process just wrote, so
+    ``read_parquet`` of it runs no inference job."""
+    _store(_schema_key(spark, path), schema)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema only the first
+    time it sees this file under these confs (key: module docstring)."""
+    # Key taken before inference: a file rewritten meanwhile stores its
+    # schema under the old identity, which never matches again.
+    key = _schema_key(spark, path)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _store(key, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Every entry point must be self-sufficient under an externally
     # constructed vanilla SparkSession (the driver's), so session-level
@@ -121,7 +191,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         df = normalize_events_ts(df)
     return df

@@ -64,7 +64,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from sparketl.io import load_table, normalize_events_ts
+from sparketl.io import load_table, normalize_events_ts, read_parquet, remember_schema
 
 SESSION_SCHEMA = StructType(
     [
@@ -263,12 +263,16 @@ def stage_event_chunks(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> s
         shutil.move(os.path.join(raw, fname), dst)
         os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
     shutil.rmtree(raw, ignore_errors=True)
+    # The chunks hold ``ev``'s rows as written, so the readers of the
+    # stage (and of each chunk) need no schema inference job.
+    for path in [stage] + [os.path.join(stage, f) for f in os.listdir(stage)]:
+        remember_schema(spark, path, ev.schema)
     return stage
 
 
 def read_staged_stream(spark: SparkSession, stage_dir: str) -> DataFrame:
     files = sorted(os.listdir(stage_dir))
-    schema = spark.read.parquet(os.path.join(stage_dir, files[0])).schema
+    schema = read_parquet(spark, os.path.join(stage_dir, files[0])).schema
     stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage_dir)
     )
@@ -638,7 +642,7 @@ def append_flush_chunk(
       (``processAllAvailable`` is only guaranteed to cover batches
       with data, so a trailing no-data batch would race ``stop()``).
     """
-    batch = spark.read.parquet(stage_dir)
+    batch = read_parquet(spark, stage_dir)
     mx = batch.agg(F.max("ts").alias("m")).collect()[0]["m"]
     parts = sorted(f for f in os.listdir(stage_dir) if f.endswith(".parquet"))
     tmp = stage_dir + "-flush"
@@ -799,10 +803,9 @@ def run_streaming_sessionize_flush(
     without it, session identity is (user, start, end, n)."""
     stage = stage_event_chunks(spark, sf_dir, n_chunks)
     try:
-        schema = spark.read.parquet(
-            os.path.join(stage, sorted(os.listdir(stage))[0])
-        ).schema
-        hi = load_table(spark, sf_dir, "events").agg(F.max("ts")).first()[0]
+        ev = load_table(spark, sf_dir, "events")
+        schema = ev.schema  # the staged chunks' schema
+        hi = ev.agg(F.max("ts")).first()[0]
         far = hi + datetime.timedelta(days=3650)
         sentinel = spark.range(1).select(
             *[

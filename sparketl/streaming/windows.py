@@ -22,7 +22,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparketl.io import normalize_events_ts, table_path
+from sparketl.io import normalize_events_ts, read_parquet, table_path
 
 
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -41,9 +41,8 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.makedirs(stage, exist_ok=True)
         shutil.copyfile(src_file, staged + ".tmp")
         os.replace(staged + ".tmp", staged)
-    batch = spark.read.parquet(staged)
     stream = (
-        spark.readStream.schema(batch.schema)
+        spark.readStream.schema(read_parquet(spark, staged).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )

@@ -55,10 +55,6 @@ def main() -> int:
 
     # warm the JVM/codegen paths once
     anchor()
-    # warm the Python-worker/Arrow lane too (r15: the table write path
-    # is mapInArrow; without this the first table-backed query absorbs
-    # ~2 s of worker spawn)
-    spark.range(64).mapInArrow(lambda it: it, "id long").count()
 
     for name in names:
         fn = qs.get(name)
