@@ -7,9 +7,14 @@ Spark SQL; it is deliberately minimal — arbitrary T-SQL is out of
 scope (documented limitation, SURVEY §7.3 item 3).
 
 Rewrites (applied outside string literals and comments only):
-- ``[ident]``            → backtick-quoted identifier
+- ``[ident]``            → backtick-quoted identifier; T-SQL's doubled
+                         ``]]`` reads as one ``]`` and a backtick in the
+                         name is doubled (``[a]]b]`` → ```a]b```,
+                         ``[we`ird]`` → ```we``ird```)
 - ``SELECT TOP n`` / ``SELECT DISTINCT TOP (n)``
-                         → ``SELECT`` ... ``LIMIT n`` (appended).
+                         → ``SELECT`` ... ``LIMIT n`` (appended after
+                         the statement's last token, before any trailing
+                         comment or ``;``).
                          Only the OUTERMOST select may carry TOP: a TOP
                          inside a subquery, or a second TOP, raises
                          ``DialectError`` instead of silently becoming a
@@ -81,6 +86,15 @@ Rewrites (applied outside string literals and comments only):
 
 The lexer honors the reference's literal syntax: single-quoted
 strings (tool:399-402) and ``--`` line comments (tool:405-408).
+Every rewrite reads one token list (``_tokens``) through three shared
+helpers — ``_skip`` (next significant token: not space, not comment),
+``_close`` (the matching ``)``) and ``_split`` (depth-0 separators and
+stop words) — so comments and line breaks never change what a rewrite
+sees. Comment rule: a comment outside any construct the shim rewrites
+passes through verbatim; a comment inside one (call arguments,
+TOP/OFFSET/FETCH clauses, APPLY and ASOF operands, the QUALIFY
+predicate, MERGE expressions) is dropped; generated text never lands
+after a ``--`` comment.
 """
 
 from __future__ import annotations
@@ -111,9 +125,10 @@ _FUNC_MAP = {
 
 _TOKEN = re.compile(
     r"""
-    (?P<comment>--[^\n]*)
+    (?P<space>\s+)
+  | (?P<comment>--[^\n]*)
   | (?P<string>'(?:[^']|'')*')
-  | (?P<bracket>\[[^\]]+\])
+  | (?P<bracket>\[(?:[^\]]|\]\])+\])
   | (?P<word>[A-Za-z_][A-Za-z_0-9]*)
   | (?P<number>\d+(?:\.\d+)?)
   | (?P<other>.)
@@ -122,173 +137,199 @@ _TOKEN = re.compile(
 )
 
 
-def transpile(sql: str) -> str:
-    """Rewrite a T-SQL-flavored statement into Spark SQL."""
-    sql = _rewrite_qualify(sql)
-    out: list[str] = []
-    limit_from_top: str | None = None
-    depth = 0
-    tokens = list(_TOKEN.finditer(sql))
-    i = 0
-    while i < len(tokens):
-        m = tokens[i]
-        kind = m.lastgroup
-        text = m.group()
-        if kind in ("comment", "string", "number", "other"):
-            if kind == "other":
-                if text == "(":
-                    depth += 1
-                elif text == ")":
-                    depth = max(0, depth - 1)
-                elif text == "+" and _is_string_concat(tokens, i):
-                    out.append("||")
-                    i += 1
-                    continue
-            out.append(text)
-        elif kind == "bracket":
-            out.append("`" + text[1:-1] + "`")
-        elif kind == "word":
-            lower = text.lower()
-            # SELECT [DISTINCT] TOP n → SELECT ... LIMIT n
-            if lower == "top" and _after_select(out):
-                n, next_i = _parse_top_count(tokens, i)
-                if n is not None:
-                    if depth > 0:
-                        raise DialectError(
-                            "TOP inside a subquery is not supported: the shim "
-                            "can only attach LIMIT to the outermost query"
-                        )
-                    if limit_from_top is not None:
-                        raise DialectError(
-                            "multiple TOP clauses in one statement are not supported"
-                        )
-                    limit_from_top = n
-                    i = next_i
-                    while i < len(tokens) and tokens[i].group().isspace():
-                        i += 1
-                    continue
-                out.append(text)
-            elif lower == "offset":
-                parsed = _parse_offset_fetch(tokens, i)
-                if parsed is not None:
-                    n_off, m_fetch, next_i = parsed
-                    out.append(
-                        f"LIMIT {m_fetch} OFFSET {n_off}"
-                        if m_fetch is not None
-                        else f"OFFSET {n_off}"
-                    )
-                    i = next_i
-                    continue
-                out.append(text)
-            elif lower in (
-                "dateadd",
-                "datediff",
-                "convert",
-                "try_convert",
-                "datepart",
-                "datename",
-                "stuff",
-                "square",
-                "choose",
-                "eomonth",
-                "quotename",
-                "patindex",
-                "parsename",
-                "isnumeric",
-                "datetrunc",
-                "string_split",
-                "format",
-            ) and (_next_nonspace(tokens, i) == "("):
-                args, next_i = _parse_call_args(sql, tokens, i)
-                out.append(_rewrite_call(lower, args))
-                i = next_i
-                continue
-            elif lower == "asof" and _next_word(tokens, i) in ("join", "left"):
-                rewritten, next_i = _rewrite_asof_join(sql, tokens, i)
-                out.append(rewritten)
-                i = next_i
-                continue
-            elif lower in ("cross", "outer") and _next_word(tokens, i) == "apply":
-                # T-SQL CROSS/OUTER APPLY (subquery) alias → Spark's
-                # [LEFT] JOIN LATERAL. The subquery is transpiled as
-                # its own statement, so TOP/OFFSET/T-SQL functions work
-                # inside it (the correlated-TOP idiom APPLY exists for).
-                # APPLY of the one supported table-valued function —
-                # STRING_SPLIT — rewrites the call into its subquery
-                # form first, then LATERAL-izes like any other operand.
-                j = _word_index(tokens, i)
-                k = _word_index(tokens, j)
-                joiner = "JOIN LATERAL" if lower == "cross" else "LEFT JOIN LATERAL"
-                if (
-                    k < len(tokens)
-                    and tokens[k].lastgroup == "word"
-                    and tokens[k].group().lower() == "string_split"
-                ):
-                    args, next_i = _parse_call_args(sql, tokens, k)
-                    out.append(
-                        f"{joiner} {_rewrite_call('string_split', args)}"
-                    )
-                    i = next_i
-                    continue
-                inner, next_i = _capture_parens(sql, tokens, j)
-                out.append(f"{joiner} ({transpile(inner)})")
-                i = next_i
-                continue
-            elif lower in _FUNC_MAP and _next_nonspace(tokens, i) == "(":
-                out.append(_FUNC_MAP[lower])
-            else:
-                out.append(text)
+def _tokens(sql: str):
+    """The shim's one tokenizer: an iterator of ``_TOKEN`` matches
+    covering *sql* end to end (``lastgroup`` is the token kind)."""
+    return _TOKEN.finditer(sql)
+
+
+def _skip(toks, i: int) -> int:
+    """Index of the first significant token at or after *i* (space and
+    comments are not significant), or ``len(toks)``."""
+    while i < len(toks) and toks[i].lastgroup in ("space", "comment"):
         i += 1
-    result = "".join(out).rstrip().rstrip(";")
-    if limit_from_top is not None:
-        result = f"{result} LIMIT {limit_from_top}"
-    return result
+    return i
 
 
-def _next_word(tokens, i: int) -> str | None:
-    """The next WORD token's lowercase text after index *i* (skipping
-    whitespace), or None when something else comes first."""
-    for j in range(i + 1, len(tokens)):
-        g = tokens[j].group()
-        if g.isspace():
-            continue
-        return g.lower() if tokens[j].lastgroup == "word" else None
-    return None
+def _low(toks, i: int) -> str:
+    """Lowercase text of ``toks[i]``, or ``''`` past the end."""
+    return toks[i].group().lower() if i < len(toks) else ""
 
 
-def _word_index(tokens, i: int) -> int:
-    """Index of the next non-space token after *i*."""
-    for j in range(i + 1, len(tokens)):
-        if not tokens[j].group().isspace():
-            return j
-    return len(tokens)
-
-
-def _capture_parens(sql: str, tokens, i: int) -> tuple[str, int]:
-    """Capture the balanced ``( ... )`` group that follows token *i*
-    (skipping whitespace); returns (inner_text, index_after_close).
-    Raises when what follows is not parenthesized — T-SQL APPLY of a
-    bare table-valued function has no Spark rewrite here."""
-    k = _word_index(tokens, i)
-    if k >= len(tokens) or tokens[k].group() != "(":
-        raise DialectError(
-            "APPLY supports only a parenthesized subquery operand"
-        )
+def _close(toks, i: int) -> int:
+    """Index of the ``)`` that matches the ``(`` at *i*."""
     depth = 0
-    start = tokens[k].end()
-    while k < len(tokens):
-        g = tokens[k].group()
+    for j in range(i, len(toks)):
+        g = toks[j].group()
         if g == "(":
             depth += 1
         elif g == ")":
             depth -= 1
             if depth == 0:
-                return sql[start : tokens[k].start()], k + 1
-        k += 1
-    raise DialectError("unbalanced parentheses after APPLY")
+                return j
+    raise DialectError("unbalanced parentheses")
 
 
-def _rewrite_qualify(sql: str) -> str:
+def _split(toks, i: int, end: int, sep: str = "", stops=()):
+    """Walk ``toks[i:end]`` at depth 0, jumping each ``( … )`` group
+    with ``_close``. Returns ``(parts, stop)``: the ``(lo, hi)`` ranges
+    between depth-0 *sep* tokens (``','`` or ``'and'``) that hold a
+    significant token, and the index of the first depth-0 token whose
+    lowercase text is in *stops* (or *end*)."""
+    parts, lo, j = [], i, i
+    while j < end:
+        g = toks[j].group().lower()
+        if g == "(":
+            j = _close(toks, j) + 1
+            continue
+        if g in stops:
+            break
+        if g == sep:
+            parts.append((lo, j))
+            lo = j + 1
+        j += 1
+    parts.append((lo, j))
+    return [(lo, hi) for lo, hi in parts if _skip(toks, lo) < hi], j
+
+
+def _name(text: str) -> str:
+    """The identifier a word or ``[bracket]`` token names."""
+    return text[1:-1].replace("]]", "]") if text.startswith("[") else text
+
+
+def _backtick(text: str) -> str:
+    """Spark spelling of a ``[bracket]`` identifier token."""
+    return "`" + _name(text).replace("`", "``") + "`"
+
+
+def _text(toks, lo: int, hi: int, alias_map: dict | None = None) -> str:
+    """Source text of ``toks[lo:hi]`` without its comments, stripped.
+    With *alias_map*, a qualifier (``alias.``) becomes its mapped name."""
+    out = []
+    for j in range(lo, hi):
+        t = toks[j]
+        g = t.group()
+        if t.lastgroup == "comment":
+            continue
+        if (
+            alias_map
+            and t.lastgroup in ("word", "bracket")
+            and _name(g).lower() in alias_map
+            and _low(toks, _skip(toks, j + 1)) == "."
+        ):
+            g = alias_map[_name(g).lower()]
+        out.append(g)
+    return "".join(out).strip()
+
+
+def _call_args(toks, i: int) -> tuple[list[str], int]:
+    """Argument texts of the call whose ``(`` is ``toks[i]``, and the
+    index after its ``)``."""
+    c = _close(toks, i)
+    parts, _ = _split(toks, i + 1, c, ",")
+    return [_text(toks, lo, hi) for lo, hi in parts], c + 1
+
+
+def transpile(sql: str) -> str:
+    """Rewrite a T-SQL-flavored statement into Spark SQL."""
+    toks = list(_tokens(sql))
+    qualified = _rewrite_qualify(sql, toks)
+    if qualified != sql:
+        toks = list(_tokens(qualified))
+    # The statement ends at its last significant token; trailing space,
+    # comments and ';' follow any appended LIMIT.
+    end = len(toks)
+    while end and (
+        toks[end - 1].lastgroup in ("space", "comment")
+        or toks[end - 1].group() == ";"
+    ):
+        end -= 1
+    toks, tail = toks[:end], toks[end:]
+    out: list[str] = []
+    limit_from_top: str | None = None
+    depth = 0
+    prev = prev2 = end  # the two significant tokens before i
+    i = 0
+    while i < end:
+        t = toks[i]
+        kind, text = t.lastgroup, t.group()
+        lower = text.lower()
+        nxt = _skip(toks, i + 1)
+        emit, j = text, i + 1
+        if kind == "bracket":
+            emit = _backtick(text)
+        elif text == "(":
+            depth += 1
+        elif text == ")":
+            depth = max(0, depth - 1)
+        elif text == "+" and _is_string_concat(toks, prev, nxt):
+            emit = "||"
+        elif kind != "word":
+            pass
+        # SELECT [DISTINCT] TOP n → SELECT ... LIMIT n
+        elif lower == "top" and (
+            _low(toks, prev) == "select"
+            or (_low(toks, prev) == "distinct" and _low(toks, prev2) == "select")
+        ) and (top := _parse_top_count(toks, i)):
+            if depth > 0:
+                raise DialectError(
+                    "TOP inside a subquery is not supported: the shim "
+                    "can only attach LIMIT to the outermost query"
+                )
+            if limit_from_top is not None:
+                raise DialectError(
+                    "multiple TOP clauses in one statement are not supported"
+                )
+            limit_from_top, j = top
+            emit = ""
+            if j < end and toks[j].lastgroup == "space":
+                j += 1
+        elif lower == "offset" and (page := _parse_offset_fetch(toks, i)):
+            emit, j = page
+        elif lower in (
+            "dateadd", "datediff", "convert", "try_convert", "datepart",
+            "datename", "stuff", "square", "choose", "eomonth", "quotename",
+            "patindex", "parsename", "isnumeric", "datetrunc",
+            "string_split", "format",
+        ) and _low(toks, nxt) == "(":
+            args, j = _call_args(toks, nxt)
+            emit = _rewrite_call(lower, args)
+        elif lower == "asof" and _low(toks, nxt) in ("join", "left"):
+            emit, j = _rewrite_asof_join(toks, i)
+        elif lower in ("cross", "outer") and _low(toks, nxt) == "apply":
+            # T-SQL CROSS/OUTER APPLY (subquery) alias → Spark's
+            # [LEFT] JOIN LATERAL. The subquery is transpiled as
+            # its own statement, so TOP/OFFSET/T-SQL functions work
+            # inside it (the correlated-TOP idiom APPLY exists for).
+            # APPLY of the one supported table-valued function —
+            # STRING_SPLIT — rewrites the call into its subquery
+            # form first, then LATERAL-izes like any other operand.
+            joiner = "JOIN LATERAL" if lower == "cross" else "LEFT JOIN LATERAL"
+            k = _skip(toks, nxt + 1)
+            call = _skip(toks, k + 1)
+            if _low(toks, k) == "string_split" and _low(toks, call) == "(":
+                args, j = _call_args(toks, call)
+                emit = f"{joiner} {_rewrite_call('string_split', args)}"
+            elif _low(toks, k) == "(":
+                c = _close(toks, k)
+                emit, j = f"{joiner} ({transpile(_text(toks, k + 1, c))})", c + 1
+            else:
+                raise DialectError(
+                    "APPLY supports only a parenthesized subquery operand"
+                )
+        elif lower in _FUNC_MAP and _low(toks, nxt) == "(":
+            emit = _FUNC_MAP[lower]
+        out.append(emit)
+        if kind not in ("space", "comment"):
+            prev2, prev = prev, j - 1
+        i = j
+    result = "".join(out).rstrip()
+    if limit_from_top is not None:
+        result = f"{result} LIMIT {limit_from_top}"
+    return (result + "".join(t.group() for t in tail if t.group() != ";")).rstrip()
+
+
+def _rewrite_qualify(sql: str, toks=None) -> str:
     """Rewrite ``QUALIFY <pred>`` clauses (Teradata/Snowflake/DuckDB
     extension; not in Spark's grammar) into the equivalent subquery
     filter:
@@ -312,97 +353,45 @@ def _rewrite_qualify(sql: str) -> str:
     is a self-contained SELECT and a bare QUALIFY binds to its own
     SELECT in the Snowflake/DuckDB grammar (r11). QUALIFY in a
     parenthesized group that is not itself a query raises instead of
-    rewriting wrongly."""
-    tokens = list(_TOKEN.finditer(sql))
-    has_qualify = any(
-        t.lastgroup == "word" and t.group().lower() == "qualify"
-        for t in tokens
-    )
-    if not has_qualify:
+    rewriting wrongly. *toks* is ``sql``'s token list when the caller
+    has it."""
+    toks = list(_tokens(sql)) if toks is None else toks
+    if not any(t.group().lower() == "qualify" for t in toks):
         return sql
-
-    def _next_tok(i: int) -> int:
-        """Next non-space, non-comment token after *i*."""
-        for j in range(i + 1, len(tokens)):
-            if not tokens[j].group().isspace() and tokens[j].lastgroup != "comment":
-                return j
-        return len(tokens)
 
     # Recurse into depth-0 WITH member bodies first, so the main-query
     # pass below never sees a QUALIFY inside a CTE.
-    first_word_idx = None
-    for idx, m in enumerate(tokens):
-        if not m.group().isspace() and m.lastgroup != "comment":
-            first_word_idx = idx
-            break
-    if (
-        first_word_idx is not None
-        and tokens[first_word_idx].lastgroup == "word"
-        and tokens[first_word_idx].group().lower() == "with"
-    ):
+    first = _skip(toks, 0)
+    if _low(toks, first) == "with":
         out: list[str] = []
-        pos = tokens[first_word_idx].end()
-        i = _next_tok(first_word_idx)
-        if (
-            i < len(tokens)
-            and tokens[i].lastgroup == "word"
-            and tokens[i].group().lower() == "recursive"
-        ):
-            i = _next_tok(i)
+        pos = 0
+        i = _skip(toks, first + 1)
+        if _low(toks, i) == "recursive":
+            i = _skip(toks, i + 1)
         while True:
             # member: name [(cols)] AS ( body )
-            if i >= len(tokens) or tokens[i].lastgroup not in ("word", "bracket"):
+            if i >= len(toks) or toks[i].lastgroup not in ("word", "bracket"):
                 raise DialectError("WITH parse error: expected a CTE name")
-            i = _next_tok(i)
-            if i < len(tokens) and tokens[i].group() == "(":
-                # optional column list — skip the balanced group
-                depth = 0
-                while i < len(tokens):
-                    g = tokens[i].group()
-                    if g == "(":
-                        depth += 1
-                    elif g == ")":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    i += 1
-                i = _next_tok(i)
-            if (
-                i >= len(tokens)
-                or tokens[i].lastgroup != "word"
-                or tokens[i].group().lower() != "as"
-            ):
+            i = _skip(toks, i + 1)
+            if _low(toks, i) == "(":  # optional column list
+                i = _skip(toks, _close(toks, i) + 1)
+            if _low(toks, i) != "as":
                 raise DialectError("WITH parse error: expected AS")
-            k = _next_tok(i)
-            if k >= len(tokens) or tokens[k].group() != "(":
+            k = _skip(toks, i + 1)
+            if _low(toks, k) != "(":
                 raise DialectError("WITH parse error: expected ( after AS")
-            depth = 0
-            body_start = tokens[k].end()
-            while k < len(tokens):
-                g = tokens[k].group()
-                if g == "(":
-                    depth += 1
-                elif g == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                k += 1
-            if k >= len(tokens):
-                raise DialectError("WITH parse error: unbalanced parens")
-            body = sql[body_start : tokens[k].start()]
-            out.append(sql[pos : body_start])
-            out.append(_rewrite_qualify(body))
-            pos = tokens[k].start()
-            nxt = _next_tok(k)
-            if nxt < len(tokens) and tokens[nxt].group() == ",":
-                i = _next_tok(nxt)
-                continue
-            break
-        rewritten = sql[: tokens[first_word_idx].end()] + "".join(out) + sql[pos:]
+            c = _close(toks, k)
+            out.append(sql[pos : toks[k].end()])
+            out.append(_rewrite_qualify(sql[toks[k].end() : toks[c].start()]))
+            pos = toks[c].start()
+            i = _skip(toks, c + 1)
+            if _low(toks, i) != ",":
+                break
+            i = _skip(toks, i + 1)
+        rewritten = "".join(out) + sql[pos:]
         if rewritten != sql:
-            # re-tokenize the reassembled text for the main-query pass
             sql = rewritten
-            tokens = list(_TOKEN.finditer(sql))
+            toks = list(_tokens(sql))
 
     # Recurse into parenthesized subquery bodies — any ( SELECT … ) or
     # ( WITH … ) group rewrites independently (derived tables, IN /
@@ -411,43 +400,29 @@ def _rewrite_qualify(sql: str) -> str:
     # the inner opener gets its own chance.
     sub_out: list[str] = []
     sub_pos = 0
-    sub_changed = False
     idx = 0
-    while idx < len(tokens):
-        m = tokens[idx]
-        if m.lastgroup == "other" and m.group() == "(":
-            j = _next_tok(idx)
-            if (
-                j < len(tokens)
-                and tokens[j].lastgroup == "word"
-                and tokens[j].group().lower() in ("select", "with")
-            ):
-                depth = 0
-                k = idx
-                while k < len(tokens):
-                    g = tokens[k].group()
-                    if g == "(":
-                        depth += 1
-                    elif g == ")":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    k += 1
-                if k >= len(tokens):
-                    raise DialectError("unbalanced parentheses in subquery")
-                body = sql[m.end() : tokens[k].start()]
-                new_body = _rewrite_qualify(body)
-                if new_body != body:
-                    sub_out.append(sql[sub_pos : m.end()])
-                    sub_out.append(new_body)
-                    sub_pos = tokens[k].start()
-                    sub_changed = True
-                idx = k + 1
-                continue
+    while idx < len(toks):
+        opener = toks[idx].group() == "("
+        if opener and _low(toks, _skip(toks, idx + 1)) in ("select", "with"):
+            c = _close(toks, idx)
+            body = sql[toks[idx].end() : toks[c].start()]
+            new_body = _rewrite_qualify(body)
+            if new_body != body:
+                sub_out += [sql[sub_pos : toks[idx].end()], new_body]
+                sub_pos = toks[c].start()
+            idx = c + 1
+            continue
         idx += 1
-    if sub_changed:
+    if sub_out:
         sql = "".join(sub_out) + sql[sub_pos:]
-        tokens = list(_TOKEN.finditer(sql))
+        toks = list(_tokens(sql))
+
+    n_qualify = sum(t.group().lower() == "qualify" for t in toks)
+    if not n_qualify:
+        return sql
+    n = len(toks)
+    _, q_idx = _split(toks, 0, n, stops=("qualify",))
+    _, first_select = _split(toks, 0, n, stops=("select",))
     # r11 (judge task 5): QUALIFY composes with set operators by
     # rewriting each depth-0 branch independently — every branch of a
     # UNION/INTERSECT/EXCEPT chain is a self-contained SELECT, and in
@@ -457,82 +432,38 @@ def _rewrite_qualify(sql: str) -> str:
     # the subquery pass above; a set-level ORDER BY/LIMIT tail stays
     # textually after the last branch's rewritten text, where Spark
     # still parses it at the set-operation level.
-    depth = 0
-    first_sel = None
     set_ops: list[int] = []
-    saw_qualify0 = False
-    prev_nonspace = None
-    for idx, m in enumerate(tokens):
-        g = m.group()
-        if m.lastgroup == "other":
-            if g == "(":
-                depth += 1
-            elif g == ")":
-                depth = max(0, depth - 1)
-        elif m.lastgroup == "word" and depth == 0:
-            w = g.lower()
-            if w == "select" and first_sel is None:
-                first_sel = idx
-            elif w == "qualify":
-                saw_qualify0 = True
-            elif (
-                w in ("union", "intersect", "except")
-                and first_sel is not None
-                # `* EXCEPT (...)` is a projection, not the set operator
-                and not (w == "except" and prev_nonspace == "*")
-            ):
-                set_ops.append(idx)
-        if not g.isspace() and m.lastgroup != "comment":
-            prev_nonspace = g
-    if set_ops and saw_qualify0:
-        parts: list[str] = [sql[: tokens[first_sel].start()]]
-        seg_start = tokens[first_sel].start()
+    j = first_select
+    while j < n:
+        _, j = _split(toks, j + 1, n, stops=("union", "intersect", "except", "*"))
+        if j == n:
+            break
+        if toks[j].group() == "*":
+            # `* EXCEPT (...)` is a projection, not the set operator
+            if _low(toks, _skip(toks, j + 1)) == "except":
+                j = _skip(toks, j + 1)
+            continue
+        set_ops.append(j)
+    if set_ops:
+        parts: list[str] = [sql[: toks[first_select].start()]]
+        seg_start = toks[first_select].start()
         for oi in set_ops:
-            parts.append(_rewrite_qualify(sql[seg_start : tokens[oi].start()]))
-            j = _next_tok(oi)
-            op_end = (
-                tokens[j].end()
-                if j < len(tokens)
-                and tokens[j].lastgroup == "word"
-                and tokens[j].group().lower() in ("all", "distinct")
-                else tokens[oi].end()
-            )
-            parts.append(sql[tokens[oi].start() : op_end])
+            parts.append(_rewrite_qualify(sql[seg_start : toks[oi].start()]))
+            k = _skip(toks, oi + 1)
+            op_end = toks[k if _low(toks, k) in ("all", "distinct") else oi].end()
+            parts.append(sql[toks[oi].start() : op_end])
             seg_start = op_end
         parts.append(_rewrite_qualify(sql[seg_start:]))
         return "".join(parts)
-    depth = 0
-    q_idx = first_select = first_from = None
-    for idx, m in enumerate(tokens):
-        g = m.group()
-        if m.lastgroup == "other":
-            if g == "(":
-                depth += 1
-            elif g == ")":
-                depth = max(0, depth - 1)
-            continue
-        if m.lastgroup != "word":
-            continue
-        w = g.lower()
-        if depth > 0:
-            if w == "qualify":
-                raise DialectError(
-                    "QUALIFY inside a parenthesized group that is not "
-                    "itself a SELECT/WITH query is not supported (the "
-                    "shim rewrites the outermost query, WITH member "
-                    "bodies, and (SELECT …) subquery bodies)"
-                )
-            continue
-        if w == "select" and first_select is None:
-            first_select = idx
-        elif w == "from" and first_select is not None and first_from is None:
-            first_from = idx
-        elif w == "qualify":
-            q_idx = idx
-            break
-    if q_idx is None:
-        return sql
-    if first_select is None or first_from is None:
+    if q_idx == n or n_qualify > 1:
+        raise DialectError(
+            "QUALIFY inside a parenthesized group that is not "
+            "itself a SELECT/WITH query is not supported (the "
+            "shim rewrites the outermost query, WITH member "
+            "bodies, and (SELECT …) subquery bodies)"
+        )
+    _, first_from = _split(toks, first_select, q_idx, stops=("from",))
+    if first_from >= q_idx:
         raise DialectError("QUALIFY outside a SELECT ... FROM query")
     # DISTINCT composes (r10): QUALIFY evaluates BEFORE DISTINCT in the
     # Snowflake/DuckDB clause order, so the rewrite filters on the
@@ -540,76 +471,28 @@ def _rewrite_qualify(sql: str) -> str:
     # select — after `* EXCEPT` drops the helper, so the dedup row set
     # is exactly the original select list (verified against DuckDB's
     # native QUALIFY-with-DISTINCT evaluation).
-    has_distinct = _next_word(tokens, first_select) == "distinct"
-    # (set-operator queries never reach here — the branch pass above
-    # split and rewrote them, so this pass sees a single SELECT)
+    d_idx = _skip(toks, first_select + 1)
+    has_distinct = _low(toks, d_idx) == "distinct"
     # predicate runs to the first depth-0 ORDER/LIMIT/OFFSET/';'
-    depth = 0
-    pred_end = len(sql)
-    for m in tokens[q_idx + 1 :]:
-        g = m.group()
-        if g == "(":
-            depth += 1
-        elif g == ")":
-            depth -= 1
-        elif depth == 0 and (
-            (m.lastgroup == "word" and g.lower() in ("order", "limit", "offset"))
-            or g == ";"
-        ):
-            pred_end = m.start()
-            break
-    pred = sql[tokens[q_idx].end() : pred_end].strip()
+    _, pred_end = _split(toks, q_idx + 1, n, stops=("order", "limit", "offset", ";"))
+    pred = _text(toks, q_idx + 1, pred_end)
     if not pred:
         raise DialectError("QUALIFY requires a predicate")
-    prefix = sql[: tokens[first_select].start()]
+    prefix = sql[: toks[first_select].start()]
     if has_distinct:
         # inner select drops the DISTINCT keyword; the outer re-applies
         # it after the helper column is EXCEPT-ed away
-        d_idx = _word_index(tokens, first_select)
-        select_list = "SELECT " + sql[
-            tokens[d_idx].end() : tokens[first_from].start()
-        ]
+        select_list = "SELECT " + sql[toks[d_idx].end() : toks[first_from].start()]
         outer = "SELECT DISTINCT"
     else:
-        select_list = sql[
-            tokens[first_select].start() : tokens[first_from].start()
-        ]
+        select_list = sql[toks[first_select].start() : toks[first_from].start()]
         outer = "SELECT"
-    mid = sql[tokens[first_from].start() : tokens[q_idx].start()]
-    tail = sql[pred_end:]
+    mid = sql[toks[first_from].start() : toks[q_idx].start()]
+    tail = sql[toks[pred_end].start() :] if pred_end < n else ""
     return (
         f"{prefix}{outer} * EXCEPT (__sparketl_q) FROM ({select_list}, "
         f"({pred}) AS __sparketl_q {mid}) WHERE __sparketl_q {tail}"
     )
-
-
-def _parse_call_args(sql: str, tokens, i: int) -> tuple[list[str], int]:
-    """Collect the top-level comma-separated argument texts of the call
-    whose function-name token is *i*. Returns (raw_arg_texts,
-    index_after_closing_paren). Commas/parens inside string literals or
-    brackets are already opaque tokens, so only structural ones count."""
-    depth = 0
-    args: list[str] = []
-    start = None
-    k = i + 1
-    while k < len(tokens):
-        t = tokens[k]
-        g = t.group()
-        if t.lastgroup == "other":
-            if g == "(":
-                depth += 1
-                if depth == 1:
-                    start = t.end()
-            elif g == ")":
-                depth -= 1
-                if depth == 0:
-                    args.append(sql[start : t.start()])
-                    return args, k + 1
-            elif g == "," and depth == 1:
-                args.append(sql[start : t.start()])
-                start = t.end()
-        k += 1
-    raise DialectError("unbalanced parentheses in function call")
 
 
 _CONVERT_TYPES = {
@@ -859,62 +742,36 @@ def _rewrite_call(name: str, raw_args: list[str]) -> str:
     return f"{cast_kw}({expr} AS {target})"
 
 
-def _parse_top_count(tokens, i: int) -> tuple[str | None, int]:
-    """Parse ``TOP n`` or ``TOP (n)`` starting after token *i*.
+def _parse_top_count(toks, i: int) -> tuple[str, int] | None:
+    """Parse ``TOP n`` or ``TOP (n)`` after the TOP word at *i*.
 
-    Returns (count, index-after-count) or (None, i) if what follows is
-    not a count (then TOP was an identifier, not the keyword).
+    Returns (count, index-after-count), or None if what follows is not
+    a count (then TOP was an identifier, not the keyword).
     """
-    j = i + 1
-    while j < len(tokens) and tokens[j].group().isspace():
-        j += 1
-    if j < len(tokens) and tokens[j].group().isdigit():
-        return tokens[j].group(), j + 1
-    if j < len(tokens) and tokens[j].group() == "(":
-        k = j + 1
-        while k < len(tokens) and tokens[k].group().isspace():
-            k += 1
-        if k < len(tokens) and tokens[k].group().isdigit():
-            n = tokens[k].group()
-            k += 1
-            while k < len(tokens) and tokens[k].group().isspace():
-                k += 1
-            if k < len(tokens) and tokens[k].group() == ")":
-                return n, k + 1
-    return None, i
+    j = _skip(toks, i + 1)
+    if _low(toks, j).isdigit():
+        return toks[j].group(), j + 1
+    k = _skip(toks, j + 1)
+    c = _skip(toks, k + 1)
+    if _low(toks, j) == "(" and _low(toks, k).isdigit() and _low(toks, c) == ")":
+        return toks[k].group(), c + 1
+    return None
 
 
-def _is_string_concat(tokens, i: int) -> bool:
-    """True when the ``+`` at token *i* has a string-literal neighbor.
+def _is_string_concat(toks, prev: int, nxt: int) -> bool:
+    """True when the ``+`` between the significant tokens *prev* and
+    *nxt* has a string-literal neighbor.
 
     Raises ``DialectError`` when the other neighbor is a numeric
     literal (optionally signed): T-SQL ``1 + '2'`` implicitly converts
     the string and returns 3, so rewriting it to ``||`` ('12') would be
     a silent wrong answer — refusing is the only safe translation."""
-    prev_kind = None
-    for j in range(i - 1, -1, -1):
-        t = tokens[j]
-        if not t.group().isspace():
-            prev_kind = t.lastgroup
-            break
-    next_kind = None
-    for j in range(i + 1, len(tokens)):
-        t = tokens[j]
-        if t.group().isspace():
-            continue
-        next_kind = t.lastgroup
-        # unary sign ahead of a numeric literal ('2' + -1)
-        if next_kind == "other" and t.group() in "+-":
-            for k in range(j + 1, len(tokens)):
-                if tokens[k].group().isspace():
-                    continue
-                if tokens[k].lastgroup == "number":
-                    next_kind = "number"
-                break
-        break
-    if "string" not in (prev_kind, next_kind):
+    if _low(toks, nxt) in ("+", "-"):  # a signed operand ('2' + -1)
+        nxt = _skip(toks, nxt + 1)
+    kinds = [toks[k].lastgroup if k < len(toks) else None for k in (prev, nxt)]
+    if "string" not in kinds:
         return False
-    if "number" in (prev_kind, next_kind):
+    if "number" in kinds:
         raise DialectError(
             "number + string literal: T-SQL converts the string and adds "
             "(1 + '2' = 3); rewrite the query with an explicit CAST"
@@ -922,87 +779,46 @@ def _is_string_concat(tokens, i: int) -> bool:
     return True
 
 
-def _after_select(out: list[str]) -> bool:
-    """True when the emitted text ends with SELECT or SELECT DISTINCT —
-    the positions where a following TOP is the T-SQL keyword."""
-    words: list[str] = []
-    for piece in reversed(out):
-        if piece.strip():
-            words.append(piece.strip().lower())
-            if len(words) == 2:
-                break
-    if not words:
-        return False
-    if words[0] == "select":
-        return True
-    return words[0] == "distinct" and len(words) == 2 and words[1] == "select"
-
-
-def _next_nonspace(tokens, i: int) -> str | None:
-    for j in range(i + 1, len(tokens)):
-        t = tokens[j].group()
-        if not t.isspace():
-            return t
-    return None
-
-
-def _parse_offset_fetch(tokens, i: int):
-    """``tokens[i]`` is an OFFSET word. Match the T-SQL pagination form
+def _parse_offset_fetch(toks, i: int) -> tuple[str, int] | None:
+    """``toks[i]`` is an OFFSET word. Match the T-SQL pagination form
     ``OFFSET <n> ROW[S] [FETCH NEXT|FIRST <m> ROW[S] ONLY]``. Returns
-    ``(n, m_or_None, index_after_clause)``, or None when this OFFSET is
+    ``(spark_clause, index_after_clause)``, or None when this OFFSET is
     not the T-SQL form (e.g. ANSI ``OFFSET n`` — already Spark SQL)."""
-
-    def skip_ws(j: int) -> int:
-        while j < len(tokens) and tokens[j].group().isspace():
-            j += 1
-        return j
-
-    j = skip_ws(i + 1)
-    if j >= len(tokens) or tokens[j].lastgroup != "number":
+    n = _skip(toks, i + 1)
+    rows = _skip(toks, n + 1)
+    if not _low(toks, n).isdigit() or _low(toks, rows) not in ("row", "rows"):
         return None
-    n = tokens[j].group()
-    j = skip_ws(j + 1)
-    if j >= len(tokens) or tokens[j].group().lower() not in ("row", "rows"):
-        return None
-    j = skip_ws(j + 1)
-    if j >= len(tokens) or tokens[j].group().lower() != "fetch":
-        return n, None, j
-    j = skip_ws(j + 1)
-    if j >= len(tokens) or tokens[j].group().lower() not in ("next", "first"):
+    fetch = _skip(toks, rows + 1)
+    if _low(toks, fetch) != "fetch":
+        return f"OFFSET {toks[n].group()}", rows + 1
+    first = _skip(toks, fetch + 1)
+    count = _skip(toks, first + 1)
+    rows = _skip(toks, count + 1)
+    only = _skip(toks, rows + 1)
+    if _low(toks, first) not in ("next", "first"):
         raise DialectError("malformed FETCH clause after OFFSET")
-    j = skip_ws(j + 1)
-    if j >= len(tokens) or tokens[j].lastgroup != "number":
+    if not _low(toks, count).isdigit():
         raise DialectError("FETCH requires a literal row count")
-    m_cnt = tokens[j].group()
-    j = skip_ws(j + 1)
-    if j >= len(tokens) or tokens[j].group().lower() not in ("row", "rows"):
+    if _low(toks, rows) not in ("row", "rows"):
         raise DialectError("malformed FETCH clause after OFFSET")
-    j = skip_ws(j + 1)
-    if j >= len(tokens) or tokens[j].group().lower() != "only":
+    if _low(toks, only) != "only":
         raise DialectError("FETCH clause must end with ONLY")
-    return n, m_cnt, j + 1
+    return f"LIMIT {toks[count].group()} OFFSET {toks[n].group()}", only + 1
 
 
 def split_statements(script: str) -> list[str]:
     """Split a multi-statement batch on top-level semicolons, honoring
     the same lexical structure as the shim: ``;`` inside single-quoted
     strings, ``[bracket]`` identifiers, or ``--`` comments never
-    splits. Empty statements (stray semicolons, trailing whitespace)
-    are dropped."""
-    stmts: list[str] = []
-    buf: list[str] = []
-    for m in _TOKEN.finditer(script):
-        if m.lastgroup == "other" and m.group() == ";":
-            s = "".join(buf).strip()
-            if s:
-                stmts.append(s)
-            buf = []
-        else:
-            buf.append(m.group())
-    s = "".join(buf).strip()
-    if s:
-        stmts.append(s)
-    return stmts
+    splits. Statements without a significant token (stray semicolons,
+    trailing whitespace or comments) are dropped."""
+    toks = list(_tokens(script))
+    cuts = [-1] + [j for j, t in enumerate(toks) if t.group() == ";"] + [len(toks)]
+    return [
+        "".join(t.group() for t in toks[a + 1 : b]).strip()
+        for a, b in zip(cuts, cuts[1:])
+        if _skip(toks, a + 1) < b
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -1030,140 +846,43 @@ def split_statements(script: str) -> list[str]:
 # ---------------------------------------------------------------------------
 
 
-class _MergeLexer:
-    def __init__(self, sql: str):
-        self.sql = sql
-        self.toks = [
-            m
-            for m in _TOKEN.finditer(sql)
-            if m.lastgroup != "comment"
-            and not (m.lastgroup == "other" and m.group().isspace())
-        ]
-        self.i = 0
-
-    def peek(self, k: int = 0) -> str | None:
-        j = self.i + k
-        return self.toks[j].group() if j < len(self.toks) else None
-
-    def peek_lower(self, k: int = 0) -> str | None:
-        t = self.peek(k)
-        return t.lower() if t is not None else None
-
-    def next(self) -> str:
-        t = self.toks[self.i]
-        self.i += 1
-        return t.group()
-
-    def expect_word(self, *alternatives: str) -> str:
-        t = self.peek_lower()
-        if t not in alternatives:
-            raise DialectError(
-                f"MERGE parse error: expected {'/'.join(alternatives).upper()}"
-                f", got {self.peek()!r}"
-            )
-        return self.next().lower()
-
-    def at_end(self) -> bool:
-        return self.i >= len(self.toks) or (
-            self.peek() == ";" and self.i == len(self.toks) - 1
-        )
-
-    def capture_until(self, stop_words: set[str]) -> str:
-        """Raw source text from here to the first depth-0 stop word
-        (or end); consumes up to but not including the stop token."""
-        if self.i >= len(self.toks):
-            raise DialectError("MERGE parse error: unexpected end of statement")
-        start = self.toks[self.i].start()
-        depth = 0
-        end = len(self.sql)
-        while self.i < len(self.toks):
-            t = self.toks[self.i]
-            g = t.group()
-            if g == "(":
-                depth += 1
-            elif g == ")":
-                depth -= 1
-            elif depth == 0 and (
-                g.lower() in stop_words or (g == ";" and ";" in stop_words)
-            ):
-                end = t.start()
-                break
-            self.i += 1
-        else:
-            end = len(self.sql)
-        return self.sql[start:end].strip()
-
-    def capture_parens(self) -> str:
-        """Consume a balanced ( ... ) group, returning the inner text."""
-        if self.peek() != "(":
-            raise DialectError("MERGE parse error: expected '('")
-        open_tok = self.toks[self.i]
-        self.next()
-        depth = 1
-        while self.i < len(self.toks):
-            g = self.next()
-            if g == "(":
-                depth += 1
-            elif g == ")":
-                depth -= 1
-                if depth == 0:
-                    close = self.toks[self.i - 1]
-                    return self.sql[open_tok.end() : close.start()].strip()
-        raise DialectError("MERGE parse error: unbalanced parentheses")
-
-
-def _split_top_level_commas(text: str) -> list[str]:
-    parts, depth, start = [], 0, 0
-    for m in _TOKEN.finditer(text):
-        g = m.group()
-        if m.lastgroup in ("comment", "string"):
-            continue
-        if g == "(":
-            depth += 1
-        elif g == ")":
-            depth -= 1
-        elif g == "," and depth == 0:
-            parts.append(text[start : m.start()].strip())
-            start = m.end()
-    parts.append(text[start:].strip())
-    return [p for p in parts if p]
-
-
-def _requalify(expr: str, alias_map: dict[str, str]) -> str:
-    """Rewrite ``<alias>.`` qualifiers to ``target.``/``source.``."""
-    if not alias_map:
-        return expr
-    out = []
-    toks = list(_TOKEN.finditer(expr))
-    for j, m in enumerate(toks):
-        g = m.group()
-        if (
-            m.lastgroup == "word"
-            and g.lower() in alias_map
-            and j + 1 < len(toks)
-            and toks[j + 1].group() == "."
-        ):
-            out.append(alias_map[g.lower()])
-        else:
-            out.append(g)
-    return "".join(out)
-
-
-def _name_or_error(lex: _MergeLexer, what: str) -> str:
-    t = lex.peek()
-    if t is None or lex.toks[lex.i].lastgroup not in ("word", "bracket"):
-        raise DialectError(f"MERGE parse error: expected {what}")
-    g = lex.next()
-    return g[1:-1] if g.startswith("[") else g
-
-
 _MERGE_KEYWORDS = {"when", "on", "using", ";"}
+
+
+def _expect(toks, i: int, *words: str) -> tuple[str, int]:
+    """The MERGE keyword at *i* (one of *words*) and the index of the
+    significant token after it."""
+    if _low(toks, i) not in words:
+        got = toks[i].group() if i < len(toks) else None
+        raise DialectError(
+            f"MERGE parse error: expected {'/'.join(words).upper()}, got {got!r}"
+        )
+    return _low(toks, i), _skip(toks, i + 1)
+
+
+def _merge_name(toks, i: int, what: str) -> tuple[str, int]:
+    """The table name at *i* and the index of the token after it."""
+    if i >= len(toks) or toks[i].lastgroup not in ("word", "bracket"):
+        raise DialectError(f"MERGE parse error: expected {what}")
+    return _name(toks[i].group()), _skip(toks, i + 1)
+
+
+def _merge_alias(toks, i: int, alias_map: dict, role: str) -> int:
+    """Read an optional ``[AS] alias`` at *i* into *alias_map* as
+    *role*; returns the index after it."""
+    if _low(toks, i) == "as":
+        i = _skip(toks, i + 1)
+    if i < len(toks) and _low(toks, i) not in _MERGE_KEYWORDS:
+        alias_map[_name(toks[i].group()).lower()] = role
+        i = _skip(toks, i + 1)
+    return i
 
 
 def parse_merge(sql: str) -> dict | None:
     """Parse a MERGE statement into an executable spec, or return
-    ``None`` when the statement is not a MERGE. The spec's expressions
-    are already re-qualified and transpiled Spark SQL:
+    ``None`` when the statement is not a MERGE (decided from its first
+    significant token; nothing after it is lexed). The spec's
+    expressions are already re-qualified and transpiled Spark SQL:
 
     ``{"target": str, "source_table": str | None,
        "source_subquery": str | None, "condition": str,
@@ -1173,119 +892,117 @@ def parse_merge(sql: str) -> dict | None:
     ``None`` for INSERT * (insert-by-name), or a positional expr list
     (INSERT VALUES without a column list).
     """
-    lex = _MergeLexer(sql)
-    if lex.peek_lower() != "merge":
+    stream = _tokens(sql)
+    toks = []
+    for m in stream:
+        toks.append(m)
+        if m.lastgroup not in ("space", "comment"):
+            break
+    if not toks or toks[-1].group().lower() != "merge":
         return None
-    lex.next()
-    if lex.peek_lower() == "into":
-        lex.next()
-    target = _name_or_error(lex, "target table name")
-    alias_map: dict[str, str] = {target.lower(): "target"}
-    if lex.peek_lower() == "as":
-        lex.next()
-    if lex.peek_lower() not in _MERGE_KEYWORDS:
-        alias_map[lex.next().lower()] = "target"
-    lex.expect_word("using")
+    i = len(toks)
+    toks.extend(stream)
+    n = len(toks)
+    i = _skip(toks, i)
+    if _low(toks, i) == "into":
+        i = _skip(toks, i + 1)
+    target, i = _merge_name(toks, i, "target table name")
+    alias_map = {target.lower(): "target"}
+    i = _merge_alias(toks, i, alias_map, "target")
+    _, i = _expect(toks, i, "using")
     source_table = source_subquery = None
-    if lex.peek() == "(":
-        source_subquery = lex.capture_parens()
+    if _low(toks, i) == "(":
+        c = _close(toks, i)
+        source_subquery, i = _text(toks, i + 1, c), _skip(toks, c + 1)
     else:
-        source_table = _name_or_error(lex, "source table name")
+        source_table, i = _merge_name(toks, i, "source table name")
         alias_map[source_table.lower()] = "source"
-    if lex.peek_lower() == "as":
-        lex.next()
-    if lex.peek_lower() not in _MERGE_KEYWORDS:
-        alias_map[lex.next().lower()] = "source"
-    lex.expect_word("on")
+    i = _merge_alias(toks, i, alias_map, "source")
+    _, i = _expect(toks, i, "on")
 
-    def fix(expr: str) -> str:
-        return transpile(_requalify(expr, alias_map)).strip()
+    def fix(lo: int, hi: int) -> str:
+        return transpile(_text(toks, lo, hi, alias_map)).strip()
 
-    condition = fix(lex.capture_until({"when"}))
+    _, j = _split(toks, i, n, stops=("when",))
+    condition, i = fix(i, j), j
     if not condition:
         raise DialectError("MERGE parse error: empty ON condition")
 
     clauses: list[tuple] = []
-    while lex.peek_lower() == "when":
-        lex.next()
-        if lex.peek_lower() == "matched":
-            lex.next()
-            category = "matched"
+    while _low(toks, i) == "when":
+        i = _skip(toks, i + 1)
+        if _low(toks, i) == "matched":
+            category, i = "matched", _skip(toks, i + 1)
         else:
-            lex.expect_word("not")
-            lex.expect_word("matched")
+            _, i = _expect(toks, i, "not")
+            _, i = _expect(toks, i, "matched")
             category = "not_matched"
-            if lex.peek_lower() == "by":
-                lex.next()
-                which = lex.expect_word("target", "source")
+            if _low(toks, i) == "by":
+                which, i = _expect(toks, _skip(toks, i + 1), "target", "source")
                 if which == "source":
                     category = "by_source"
         cond = None
-        if lex.peek_lower() == "and":
-            lex.next()
-            cond = fix(lex.capture_until({"then"}))
-        lex.expect_word("then")
-        verb = lex.expect_word("update", "delete", "insert")
+        if _low(toks, i) == "and":
+            _, j = _split(toks, i + 1, n, stops=("then",))
+            cond, i = fix(i + 1, j), j
+        _, i = _expect(toks, i, "then")
+        verb, i = _expect(toks, i, "update", "delete", "insert")
+        if verb != "insert" and category == "not_matched":
+            raise DialectError("WHEN NOT MATCHED supports only INSERT")
         if verb == "delete":
-            if category == "not_matched":
-                raise DialectError("WHEN NOT MATCHED supports only INSERT")
             clauses.append((category, "delete", None, cond))
         elif verb == "update":
-            if category == "not_matched":
-                raise DialectError("WHEN NOT MATCHED supports only INSERT")
-            lex.expect_word("set")
-            raw = lex.capture_until({"when", ";"})
+            _, i = _expect(toks, i, "set")
+            parts, i = _split(toks, i, n, ",", ("when", ";"))
             assigns: dict[str, str] = {}
-            for part in _split_top_level_commas(raw):
-                col, eq, val = part.partition("=")
-                if not eq:
-                    raise DialectError(f"bad SET assignment: {part!r}")
-                name = col.strip()
-                if name.startswith("[") and name.endswith("]"):
-                    name = name[1:-1]
-                if "." in name:  # strip a target qualifier on the LHS
-                    name = name.split(".")[-1]
-                assigns[name] = fix(val)
+            for lo, hi in parts:
+                _, eq = _split(toks, lo, hi, stops=("=",))
+                # the column is the last name on the left (a target
+                # qualifier is dropped)
+                names, _ = _split(toks, lo, eq, ".")
+                if eq == hi or not names:
+                    raise DialectError(
+                        f"bad SET assignment: {_text(toks, lo, hi)!r}"
+                    )
+                col = _name(toks[_skip(toks, names[-1][0])].group())
+                assigns[col] = fix(eq + 1, hi)
             clauses.append((category, "update", assigns, cond))
         else:  # insert
             if category != "not_matched":
                 raise DialectError(
                     "INSERT is only valid in WHEN NOT MATCHED [BY TARGET]"
                 )
-            if lex.peek() == "*":
-                lex.next()
+            if _low(toks, i) == "*":
+                i = _skip(toks, i + 1)
                 clauses.append((category, "insert", None, cond))
+                continue
+            cols = None
+            if _low(toks, i) == "(":
+                c = _close(toks, i)
+                cols = [
+                    _name(toks[_skip(toks, lo)].group())
+                    for lo, _ in _split(toks, i + 1, c, ",")[0]
+                ]
+                i = _skip(toks, c + 1)
+            _, i = _expect(toks, i, "values")
+            if _low(toks, i) != "(":
+                raise DialectError("MERGE parse error: expected '('")
+            c = _close(toks, i)
+            vals = [fix(lo, hi) for lo, hi in _split(toks, i + 1, c, ",")[0]]
+            i = _skip(toks, c + 1)
+            if cols is None:
+                clauses.append((category, "insert", vals, cond))
+            elif len(cols) != len(vals):
+                raise DialectError("INSERT column list and VALUES lengths differ")
             else:
-                cols = None
-                if lex.peek() == "(" :
-                    first = lex.capture_parens()
-                    if lex.peek_lower() == "values":
-                        cols = [
-                            c[1:-1] if c.startswith("[") else c
-                            for c in _split_top_level_commas(first)
-                        ]
-                    else:
-                        raise DialectError(
-                            "MERGE parse error: expected VALUES after the "
-                            "INSERT column list"
-                        )
-                lex.expect_word("values")
-                vals = [fix(v) for v in _split_top_level_commas(lex.capture_parens())]
-                if cols is not None:
-                    if len(cols) != len(vals):
-                        raise DialectError(
-                            "INSERT column list and VALUES lengths differ"
-                        )
-                    clauses.append((category, "insert", dict(zip(cols, vals)), cond))
-                else:
-                    clauses.append((category, "insert", list(vals), cond))
+                clauses.append((category, "insert", dict(zip(cols, vals)), cond))
     if not clauses:
         raise DialectError("MERGE requires at least one WHEN clause")
-    if lex.peek() == ";":
-        lex.next()
-    if lex.i < len(lex.toks):
+    if _low(toks, i) == ";":
+        i = _skip(toks, i + 1)
+    if i < n:
         raise DialectError(
-            f"MERGE parse error: unexpected trailing {lex.peek()!r}"
+            f"MERGE parse error: unexpected trailing {toks[i].group()!r}"
         )
     return {
         "target": target,
@@ -1323,7 +1040,7 @@ def parse_merge(sql: str) -> dict | None:
 _ASOF_STOP = {
     "where", "group", "order", "limit", "union", "intersect", "except",
     "join", "left", "right", "inner", "full", "cross", "outer", "asof",
-    "qualify", "having", "window",
+    "qualify", "having", "window", ";",
 }
 
 _INEQ = re.compile(r"^(.*?[^<>=!])(>=|<=|>|<)([^<>=].*)$", re.DOTALL)
@@ -1331,91 +1048,51 @@ _INEQ = re.compile(r"^(.*?[^<>=!])(>=|<=|>|<)([^<>=].*)$", re.DOTALL)
 _EQ = re.compile(r"^(.*?[^<>=!])=([^=].*)$", re.DOTALL)
 
 
-def _split_top_level_ands(text: str) -> list[str]:
-    parts, depth, start = [], 0, 0
-    for m in _TOKEN.finditer(text):
-        g = m.group()
-        if m.lastgroup in ("comment", "string"):
-            continue
-        if g == "(":
-            depth += 1
-        elif g == ")":
-            depth -= 1
-        elif m.lastgroup == "word" and g.lower() == "and" and depth == 0:
-            parts.append(text[start : m.start()].strip())
-            start = m.end()
-    parts.append(text[start:].strip())
-    return [p for p in parts if p]
-
-
-def _rewrite_asof_join(sql: str, tokens, i: int) -> tuple[str, int]:
+def _rewrite_asof_join(toks, i: int) -> tuple[str, int]:
     """Rewrite the ASOF JOIN whose ASOF keyword is token *i*; returns
     (replacement_text, index_after_consumed_tokens)."""
-    j = _word_index(tokens, i)  # JOIN or LEFT
+    j = _skip(toks, i + 1)  # JOIN or LEFT
     outer = "JOIN"
-    if tokens[j].group().lower() == "left":
+    if _low(toks, j) == "left":
         outer = "LEFT JOIN"
-        j = _word_index(tokens, j)
-    if j >= len(tokens) or tokens[j].group().lower() != "join":
+        j = _skip(toks, j + 1)
+    if _low(toks, j) != "join":
         raise DialectError("ASOF must be followed by JOIN or LEFT JOIN")
     # right operand: table name or (subquery)
-    k = _word_index(tokens, j)
-    if k < len(tokens) and tokens[k].group() == "(":
-        inner_sql, k_after = _capture_parens(sql, tokens, j)
-        right_src = f"({transpile(inner_sql)})"
-        k = k_after
+    k = _skip(toks, j + 1)
+    if _low(toks, k) == "(":
+        c = _close(toks, k)
+        right_src = f"({transpile(_text(toks, k + 1, c))})"
+    elif k < len(toks) and toks[k].lastgroup in ("word", "bracket"):
+        c = k
+        g = toks[k].group()
+        right_src = _backtick(g) if g.startswith("[") else g
     else:
-        if k >= len(tokens) or tokens[k].lastgroup not in ("word", "bracket"):
-            raise DialectError("ASOF JOIN needs a table or subquery operand")
-        g = tokens[k].group()
-        right_src = "`" + g[1:-1] + "`" if g.startswith("[") else g
-        k += 1
+        raise DialectError("ASOF JOIN needs a table or subquery operand")
     # optional [AS] alias
-    k2 = _word_index(tokens, k - 1)
+    k = _skip(toks, c + 1)
+    if _low(toks, k) == "as":
+        k = _skip(toks, k + 1)
     alias = None
-    if k2 < len(tokens) and tokens[k2].lastgroup == "word":
-        w = tokens[k2].group().lower()
-        if w == "as":
-            k2 = _word_index(tokens, k2)
-            alias = tokens[k2].group()
-            k = k2 + 1
-        elif w != "on":
-            alias = tokens[k2].group()
-            k = k2 + 1
+    if k < len(toks) and toks[k].lastgroup == "word" and _low(toks, k) != "on":
+        alias = toks[k].group()
+        k = _skip(toks, k + 1)
     if alias is None:
         if right_src.startswith("("):
             raise DialectError("ASOF JOIN subquery operand needs an alias")
         alias = right_src.strip("`")
-    # ON <condition>
-    k_on = _word_index(tokens, k - 1)
-    if k_on >= len(tokens) or tokens[k_on].group().lower() != "on":
+    if _low(toks, k) != "on":
         raise DialectError("ASOF JOIN requires an ON condition")
-    # capture condition to the first depth-0 stop word
-    depth = 0
-    cond_start = tokens[k_on].end()
-    cond_end = len(sql)
-    m_idx = k_on + 1
-    while m_idx < len(tokens):
-        t = tokens[m_idx]
-        g = t.group()
-        if g == "(":
-            depth += 1
-        elif g == ")":
-            depth -= 1
-        elif depth == 0 and (
-            (t.lastgroup == "word" and g.lower() in _ASOF_STOP) or g == ";"
-        ):
-            cond_end = t.start()
-            break
-        m_idx += 1
-    cond = sql[cond_start:cond_end].strip()
-    if not cond:
+    # the condition runs to the first depth-0 stop word; T-SQL spellings
+    # inside it (EOMONTH, GETDATE, DATEDIFF, [bracket] identifiers, ...)
+    # must not reach Spark verbatim — each conjunct is transpiled before
+    # left_expr / partition columns are derived from it, as
+    # parse_merge's fix() does.
+    parts, end = _split(toks, k + 1, len(toks), "and", _ASOF_STOP)
+    conjuncts = [transpile(_text(toks, lo, hi)) for lo, hi in parts]
+    if not conjuncts:
         raise DialectError("ASOF JOIN requires an ON condition")
-    # T-SQL spellings inside the captured condition (EOMONTH, GETDATE,
-    # DATEDIFF, [bracket] identifiers, ...) must not reach Spark
-    # verbatim — transpile the fragment before deriving left_expr /
-    # partition columns from it, as parse_merge's fix() does.
-    cond = transpile(cond).strip()
+    cond = " AND ".join(conjuncts)
 
     def is_right(expr: str) -> bool:
         return re.match(rf"^{re.escape(alias)}\s*\.", expr, re.IGNORECASE) is not None
@@ -1427,7 +1104,7 @@ def _rewrite_asof_join(sql: str, tokens, i: int) -> tuple[str, int]:
 
     ineq = None
     eq_right_cols: list[str] = []
-    for c in _split_top_level_ands(cond):
+    for c in conjuncts:
         m = _INEQ.match(c)
         if m:
             lhs, op, rhs = m.group(1).strip(), m.group(2), m.group(3).strip()
@@ -1467,17 +1144,12 @@ def _rewrite_asof_join(sql: str, tokens, i: int) -> tuple[str, int]:
     # [t, next_t) — neighbor via LEAD; forward asof mirrors with LAG
     backward = op in (">=", ">")
     neighbor = "LEAD" if backward else "LAG"
-    order_dir = ""  # ascending either way; LEAD/LAG pick the side
     if backward:
         bound = {">=": "<", ">": "<="}[op]
     else:
         bound = {"<=": ">", "<": ">="}[op]
-    part = ", ".join(eq_right_cols) if eq_right_cols else ""
-    over = (
-        f"PARTITION BY {part} ORDER BY {r_col}{order_dir}"
-        if part
-        else f"ORDER BY {r_col}{order_dir}"
-    )
+    part = ", ".join(eq_right_cols)
+    over = f"PARTITION BY {part} ORDER BY {r_col}" if part else f"ORDER BY {r_col}"
     sub = (
         f"(SELECT {alias}.*, {neighbor}({r_col}) OVER ({over}) "
         f"AS __sparketl_nxt FROM {right_src} AS {alias})"
@@ -1486,4 +1158,4 @@ def _rewrite_asof_join(sql: str, tokens, i: int) -> tuple[str, int]:
         f"{outer} {sub} {alias} ON {cond} "
         f"AND ({alias}.__sparketl_nxt IS NULL "
         f"OR {left_expr} {bound} {alias}.__sparketl_nxt) "
-    ), m_idx
+    ), end

@@ -15,7 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from sparketl.catalog import Catalog
-from sparketl.dialect import transpile
+from sparketl.dialect import parse_merge, split_statements, transpile
 from sparketl.operators.relational import stringify_for_display
 
 PREVIEW_ROWS = 100  # tool:619, 846
@@ -68,8 +68,6 @@ class Engine:
             raise QueryError("Query is empty")  # tool:1093-1095
         if database:
             self.catalog.use_database(database)  # tool:272 → 146-153
-        from sparketl.dialect import parse_merge
-
         spec = parse_merge(sql)
         if spec is not None:
             if params is not None:
@@ -146,8 +144,6 @@ class Engine:
         statement — the reference's users paste T-SQL batches, and
         sequential semantics (later statements see earlier DDL/USE)
         match the server behavior."""
-        from sparketl.dialect import split_statements
-
         stmts = split_statements(script)
         if not stmts:
             raise QueryError("Query is empty")

@@ -505,3 +505,12 @@ def test_tsql_batch7():
         transpile("SELECT value FROM STRING_SPLIT(x, ',', 1)")
     with pytest.raises(DialectError, match="string literal"):
         transpile("SELECT value FROM STRING_SPLIT(x, sep_col)")
+
+
+def test_split_statements_drops_comment_only_statements():
+    from sparketl.dialect import split_statements
+
+    assert split_statements("SELECT 1; -- done\n;; SELECT 2 -- two") == [
+        "SELECT 1",
+        "SELECT 2 -- two",
+    ]

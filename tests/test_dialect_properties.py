@@ -7,14 +7,19 @@ The shim's invariants, for arbitrary inputs:
    text preserved verbatim
 4. transpiling is idempotent: transpile(transpile(s)) == transpile(s)
 5. plain ANSI SQL without any T-SQL construct passes through unchanged
+6. layout never changes a rewrite: ``-- c`` comments and extra
+   whitespace at any token boundary leave the output equal (comments
+   stripped, whitespace dropped) to the output of the clean text, keep
+   a refusal a refusal, and leave ``parse_merge`` specs equal
 """
 
 import re
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from sparketl.dialect import transpile
+from sparketl.dialect import DialectError, parse_merge, transpile
 
 # identifier-ish inner text for brackets: no brackets/backticks/newlines
 ident = st.text(
@@ -267,3 +272,152 @@ def test_qualify_in_setop_branches_rewrite_structure(
     if tail:
         assert out.rstrip().endswith("ORDER BY 1 LIMIT 7")
     assert transpile(out) == out
+
+
+# -- invariant 6: layout invariance ------------------------------------------
+
+# One statement per rewrite: TOP, OFFSET/FETCH, every _rewrite_call
+# name, _FUNC_MAP names, string concatenation (and the number+string
+# refusal), QUALIFY in a CTE / derived table / set-op branches,
+# CROSS/OUTER APPLY, ASOF, and MERGE with SET, VALUES and INSERT *.
+LAYOUT_CORPUS = {
+    "top_brackets": "SELECT TOP 5 [id] FROM t ORDER BY [id]",
+    "distinct_top_paren": "SELECT DISTINCT TOP (3) a FROM t ORDER BY a;",
+    "top_twice_refused": (
+        "SELECT TOP 2 a FROM t UNION ALL SELECT TOP 4 b FROM u"
+    ),
+    "offset_rows": "SELECT a FROM t ORDER BY a OFFSET 95 ROWS",
+    "offset_fetch_nested": (
+        "SELECT * FROM (SELECT a FROM t ORDER BY a OFFSET 3 ROWS FETCH "
+        "FIRST 4 ROW ONLY) s"
+    ),
+    "fetch_without_only_refused": (
+        "SELECT a FROM t ORDER BY a OFFSET 10 ROWS FETCH NEXT 5 ROWS"
+    ),
+    "dateadd": (
+        "SELECT DATEADD(day, 7, d), DATEADD(month, n + 1, d), "
+        "DATEADD(year, 2, d) FROM t"
+    ),
+    "datediff": "SELECT DATEDIFF(day, a, b), DATEDIFF(month, a, b) FROM t",
+    "datediff_hour_refused": "SELECT DATEDIFF(hour, a, b) FROM t",
+    "convert": (
+        "SELECT CONVERT(INT, id), CONVERT(VARCHAR(3), x), "
+        "TRY_CONVERT(DECIMAL(10, 2), y) FROM t"
+    ),
+    "datepart_datename_datetrunc": (
+        "SELECT DATEPART(year, d), DATENAME(month, d), DATETRUNC(month, "
+        "d) FROM t"
+    ),
+    "datepart_week_refused": "SELECT DATEPART(week, d) FROM t",
+    "stuff_square_choose": (
+        "SELECT STUFF(s, 2, 3, 'xy'), SQUARE(x + 1), CHOOSE(n, 'a', "
+        "'b') FROM t"
+    ),
+    "eomonth_quotename_patindex": (
+        "SELECT EOMONTH(d, 2), QUOTENAME(c), PATINDEX('%abc%', c) FROM "
+        "t"
+    ),
+    "parsename_isnumeric": (
+        "SELECT PARSENAME('a.b.c', 1), ISNUMERIC(col) FROM t"
+    ),
+    "string_split": "SELECT value FROM STRING_SPLIT('a b', ' ') s",
+    "format_refused": "SELECT FORMAT(x, 'N2') FROM t",
+    "func_map": (
+        "SELECT ISNULL(a, b), LEN(c), GETDATE(), IIF(a > 1, 'hi', 'lo') "
+        "FROM t"
+    ),
+    "string_concat": "SELECT a + ' / ' + b, 'x' + [c] FROM t",
+    "number_plus_string_refused": "SELECT 'x' + 1 FROM t",
+    "signed_number_plus_string_refused": "SELECT '2' + -1",
+    "qualify_cte": (
+        "WITH c0 AS (SELECT a, g FROM t QUALIFY ROW_NUMBER() OVER "
+        "(PARTITION BY g ORDER BY a) <= 2) SELECT * FROM c0 ORDER BY a"
+    ),
+    "qualify_derived_distinct": (
+        "SELECT * FROM (SELECT DISTINCT g FROM t QUALIFY RANK() OVER "
+        "(ORDER BY g) = 1) d"
+    ),
+    "qualify_setop_branches": (
+        "SELECT g FROM t QUALIFY RANK() OVER (ORDER BY g) = 1 UNION ALL "
+        "SELECT * EXCEPT (h) FROM u QUALIFY RANK() OVER (ORDER BY g) = "
+        "2 ORDER BY g"
+    ),
+    "qualify_in_call_refused": "SELECT f(a QUALIFY b) FROM t",
+    "cross_apply": (
+        "SELECT * FROM a CROSS APPLY (SELECT TOP 2 x FROM b WHERE b.k = "
+        "a.k ORDER BY x) s"
+    ),
+    "outer_apply_string_split": (
+        "SELECT * FROM a OUTER APPLY STRING_SPLIT(a.c, '|') s"
+    ),
+    "apply_tvf_refused": "SELECT * FROM a CROSS APPLY some_tvf(a.k) s",
+    "asof": (
+        "SELECT e.id, p.px FROM q e ASOF JOIN prices p ON e.sym = p.sym "
+        "AND e.ts >= p.ts WHERE e.id > 0"
+    ),
+    "asof_left_subquery": (
+        "SELECT * FROM q e ASOF LEFT JOIN (SELECT * FROM prices) p ON "
+        "DATEADD(day, 1, e.[t]) >= p.[t]"
+    ),
+    "merge_set_values": (
+        "MERGE INTO accounts AS tgt USING changes AS s ON tgt.[id] = "
+        "s.[id] WHEN MATCHED AND s.bal < 0 THEN DELETE WHEN MATCHED "
+        "THEN UPDATE SET name = ISNULL(s.name, tgt.name), tgt.[bal] = "
+        "s.bal WHEN NOT MATCHED THEN INSERT (id, name, bal) VALUES "
+        "(s.id, s.name, s.bal * 2);"
+    ),
+    "merge_insert_star": (
+        "MERGE accounts t USING (SELECT TOP 1 * FROM raw ORDER BY id) s "
+        "ON t.id = s.id WHEN NOT MATCHED BY SOURCE THEN DELETE WHEN NOT "
+        "MATCHED THEN INSERT *"
+    ),
+    "merge_positional_values": (
+        "MERGE INTO t USING s ON t.id = s.id WHEN NOT MATCHED THEN "
+        "INSERT VALUES (s.id, 'x' + s.name)"
+    ),
+}
+
+# a token of the clean text: literal, bracket name, word/number,
+# multi-character operator, or any other single character
+_LAYOUT_TOKEN = re.compile(
+    r"'(?:[^']|'')*'|\[(?:[^\]]|\]\])+\]|\w+(?:\.\d+)?|<=|>=|<>|!=|\|\||\S"
+)
+# what normalisation keeps: literals verbatim, comments and space dropped
+_NORM_TOKEN = re.compile(r"('(?:[^']|'')*')|--[^\n]*|\s+")
+_NOISE = st.sampled_from(["", " ", "\n\t ", " -- c\n", " -- )\n"])
+
+
+def _normalise(value):
+    if isinstance(value, str):
+        return _NORM_TOKEN.sub(lambda m: m.group(1) or "", value)
+    if isinstance(value, dict):
+        return {_normalise(k): _normalise(v) for k, v in value.items()}
+    if isinstance(value, (list, tuple)):
+        return [_normalise(v) for v in value]
+    return value
+
+
+def _front_end(sql):
+    """What Engine.execute makes of *sql*, normalised: a MERGE spec,
+    the Spark SQL, or a refusal."""
+    try:
+        spec = parse_merge(sql)
+        return _normalise(spec if spec is not None else transpile(sql))
+    except DialectError:
+        return "refused"
+
+
+@pytest.mark.parametrize("clean", LAYOUT_CORPUS.values(), ids=LAYOUT_CORPUS.keys())
+@given(data=st.data())
+@settings(max_examples=25, deadline=None)
+def test_layout_never_changes_a_rewrite(clean, data):
+    toks = list(_LAYOUT_TOKEN.finditer(clean))
+    noise = data.draw(
+        st.lists(_NOISE, min_size=len(toks) + 1, max_size=len(toks) + 1)
+    )
+    pieces, pos = [], 0
+    for tok, extra in zip(toks, noise):
+        pieces += [clean[pos : tok.start()], extra, tok.group()]
+        pos = tok.end()
+    noisy = "".join(pieces) + clean[pos:] + noise[-1]
+    assert _front_end(noisy) == _front_end(clean), noisy

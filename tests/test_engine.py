@@ -111,3 +111,24 @@ def test_execute_positional_and_named_params(spark):
         params=["' OR '1'='1"],
     ).collect()[0]
     assert inj.n == 0  # bound as a value, not spliced into the query
+
+
+def test_top_survives_a_trailing_comment(spark):
+    """The LIMIT that replaces TOP lands before a trailing comment,
+    whether the comment ends the last line, sits on its own line, or
+    follows the statement's ';'."""
+    spark.range(100).createOrReplaceTempView("top_src")
+    eng = Engine(spark)
+    for sql in (
+        "SELECT TOP 5 id FROM top_src -- first five",
+        "SELECT TOP 5 id FROM top_src\n-- first five",
+        "SELECT TOP 5 id FROM top_src; -- first five",
+    ):
+        assert eng.execute(sql).count() == 5, sql
+
+
+def test_bracket_identifier_escapes(spark):
+    """T-SQL's doubled ``]]`` is one ``]``; a backtick in a bracket
+    name is doubled in the Spark spelling."""
+    df = Engine(spark).execute("SELECT 1 AS [a]]b], 2 AS [we`ird]")
+    assert df.columns == ["a]b", "we`ird"]
