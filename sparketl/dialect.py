@@ -156,30 +156,37 @@ def _low(toks, i: int) -> str:
     return toks[i].group().lower() if i < len(toks) else ""
 
 
+_GROUPS = {"(": ")", "case": "end"}
+
+
 def _close(toks, i: int) -> int:
-    """Index of the ``)`` that matches the ``(`` at *i*."""
-    depth = 0
+    """Index of the token that closes the group opened at *i*: the
+    ``)`` of a ``(``, or the ``END`` of a ``CASE``."""
+    opener = _low(toks, i)
+    closer, depth = _GROUPS[opener], 0
     for j in range(i, len(toks)):
-        g = toks[j].group()
-        if g == "(":
+        g = toks[j].group().lower()
+        if g == opener:
             depth += 1
-        elif g == ")":
+        elif g == closer:
             depth -= 1
             if depth == 0:
                 return j
-    raise DialectError("unbalanced parentheses")
+    raise DialectError(
+        "CASE without END" if closer == "end" else "unbalanced parentheses"
+    )
 
 
 def _split(toks, i: int, end: int, sep: str = "", stops=()):
-    """Walk ``toks[i:end]`` at depth 0, jumping each ``( … )`` group
-    with ``_close``. Returns ``(parts, stop)``: the ``(lo, hi)`` ranges
-    between depth-0 *sep* tokens (``','`` or ``'and'``) that hold a
-    significant token, and the index of the first depth-0 token whose
-    lowercase text is in *stops* (or *end*)."""
+    """Walk ``toks[i:end]`` at depth 0, jumping each ``( … )`` and
+    ``CASE … END`` group with ``_close``. Returns ``(parts, stop)``: the
+    ``(lo, hi)`` ranges between depth-0 *sep* tokens (``','`` or
+    ``'and'``) that hold a significant token, and the index of the
+    first depth-0 token whose lowercase text is in *stops* (or *end*)."""
     parts, lo, j = [], i, i
     while j < end:
         g = toks[j].group().lower()
-        if g == "(":
+        if g in _GROUPS:
             j = _close(toks, j) + 1
             continue
         if g in stops:
@@ -1074,13 +1081,19 @@ def _rewrite_asof_join(toks, i: int) -> tuple[str, int]:
     if _low(toks, k) == "as":
         k = _skip(toks, k + 1)
     alias = None
-    if k < len(toks) and toks[k].lastgroup == "word" and _low(toks, k) != "on":
+    named = k < len(toks) and toks[k].lastgroup in ("word", "bracket")
+    if named and _low(toks, k) != "on":
         alias = toks[k].group()
         k = _skip(toks, k + 1)
     if alias is None:
         if right_src.startswith("("):
             raise DialectError("ASOF JOIN subquery operand needs an alias")
-        alias = right_src.strip("`")
+        alias = toks[c].group()
+    # conjuncts may qualify by the bare or the backticked name, however
+    # the alias itself was quoted
+    name = _name(alias)
+    qual = rf"(?:{re.escape(name)}|{re.escape(_backtick(name))})\s*\."
+    alias = _backtick(alias) if alias.startswith("[") else alias
     if _low(toks, k) != "on":
         raise DialectError("ASOF JOIN requires an ON condition")
     # the condition runs to the first depth-0 stop word; T-SQL spellings
@@ -1095,12 +1108,10 @@ def _rewrite_asof_join(toks, i: int) -> tuple[str, int]:
     cond = " AND ".join(conjuncts)
 
     def is_right(expr: str) -> bool:
-        return re.match(rf"^{re.escape(alias)}\s*\.", expr, re.IGNORECASE) is not None
+        return re.match(qual, expr, re.IGNORECASE) is not None
 
     def strip_alias(expr: str) -> str:
-        return re.sub(
-            rf"\b{re.escape(alias)}\s*\.\s*", "", expr, flags=re.IGNORECASE
-        )
+        return re.sub(rf"(?<![\w`]){qual}\s*", "", expr, flags=re.IGNORECASE)
 
     ineq = None
     eq_right_cols: list[str] = []

@@ -12,6 +12,7 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from sparketl.catalog import Catalog
@@ -130,7 +131,11 @@ class Engine:
                     payload = dict(zip(table_cols, payload))
                 builder.when_not_matched_insert(payload, cond)
         version = builder.execute()
-        df = self.spark.createDataFrame([(version,)], "version: bigint")
+        # an Arrow-built frame is a local relation: collecting it runs no
+        # job (a Python list would become a Python RDD)
+        df = self.spark.createDataFrame(
+            pa.table({"version": pa.array([version], pa.int64())})
+        )
         self.last_result = df
         return df
 

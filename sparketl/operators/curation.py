@@ -3129,6 +3129,8 @@ def cdc_rank_apply_batch(base, view, batch: DataFrame, k: int = CDC_TOPK_K) -> N
             "value_cents",
         )
     )
+    import pyarrow as pa
+
     from sparketl.tables import _collect_bounded
 
     spark = batch.sparkSession
@@ -3202,8 +3204,10 @@ def cdc_rank_apply_batch(base, view, batch: DataFrame, k: int = CDC_TOPK_K) -> N
     if users is not None:
         if not users:
             return
+        # an Arrow-built frame is a local relation (a Python list would
+        # be a Python RDD whose read starts Python workers)
         touched = F.broadcast(
-            spark.createDataFrame([(u,) for u in users], "user_id long")
+            spark.createDataFrame(pa.table({"user_id": pa.array(users, pa.int64())}))
         )
         in_users = "user_id IN (%s)" % ",".join(str(u) for u in users)
         base_scan = base.read(where=in_users, prune_only=True)

@@ -15,6 +15,38 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(
+    meminfo: str = "/proc/meminfo", cgroup: str = "/sys/fs/cgroup/memory.max"
+) -> str:
+    """``spark.driver.memory`` for this process: ``SPARKETL_DRIVER_MEM``
+    when set, else half the memory the process may use, in whole GiB
+    (at least 1g). "May use" is the smaller of the kernel's
+    ``MemAvailable`` and the cgroup's ``memory.max`` when one is set;
+    where neither can be read, the physical memory. A local-mode driver
+    JVM is the whole engine, and a heap sized past the machine (the old
+    fixed 48g) lets it grow until the OOM killer takes it."""
+    if os.environ.get("SPARKETL_DRIVER_MEM"):
+        return os.environ["SPARKETL_DRIVER_MEM"]
+    limits = []
+    try:
+        with open(cgroup, encoding="ascii") as f:
+            raw = f.read().strip()
+        if raw.isdigit():
+            limits.append(int(raw))
+    except OSError:
+        pass
+    try:
+        with open(meminfo, encoding="ascii") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    limits.append(int(line.split()[1]) * 1024)
+    except OSError:
+        pass
+    if not limits:
+        limits.append(os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE"))
+    return f"{max(1, min(limits) // 2 // 2**30)}g"
+
+
 def get_spark(
     app_name: str = "sparketl",
     shuffle_partitions: int | None = None,
@@ -37,7 +69,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARKETL_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -723,11 +723,20 @@ class ManagedTable:
             schema = T.StructType.fromJson(json.loads(m["schema"]))
             files = m["files"]
         apply_filter = bool(where) and not prune_only
-        if not files:
-            df = self.spark.createDataFrame([], schema)
-            return df.filter(where) if apply_filter else df
-        df = self.spark.read.schema(schema).parquet(*files)
+        df = self._scan(schema, files)
         return df.filter(where) if apply_filter else df
+
+    def _scan(self, schema: T.StructType, files: list[str]) -> DataFrame:
+        """``files`` read as ``schema``; no files give a 0-row local
+        relation, which a collect, filter or join reads without a Spark
+        job (``createDataFrame([], schema)`` is a Python RDD, whose
+        read starts Python workers)."""
+        if files:
+            return self.spark.read.schema(schema).parquet(*files)
+        jss = self.spark._jsparkSession
+        rows = self.spark._jvm.java.util.ArrayList()
+        jdf = jss.createDataFrame(rows, jss.parseDataType(schema.json()))
+        return DataFrame(jdf, self.spark)
 
     def data_files(self, version: int | None = None) -> list[str]:
         """Public accessor for the snapshot's data-file list (the
@@ -859,12 +868,11 @@ class ManagedTable:
         from_only = [f for f in m_from["files"] if f not in shared]
         to_only = [f for f in m_to["files"] if f not in shared]
 
-        def _read(files: list[str]) -> DataFrame:
-            if not files:
-                return self.spark.createDataFrame([], schema)
-            return self.spark.read.schema(schema).parquet(*files)
-
-        old, new = _read(from_only), _read(to_only)
+        old, new = self._scan(schema, from_only), self._scan(schema, to_only)
+        if not from_only or not to_only:
+            # one side is empty: the other side's rows are the whole feed
+            change, df = ("insert", new) if to_only else ("delete", old)
+            return df.withColumn("_change", F.lit(change))
         return new.exceptAll(old).withColumn("_change", F.lit("insert")).unionByName(
             old.exceptAll(new).withColumn("_change", F.lit("delete"))
         )
@@ -1028,11 +1036,7 @@ class ManagedTable:
         retained = [f for f in all_files if f not in cand_set]
         captured: list = []
         if cand or may_create_rows:
-            if cand:
-                df = self.spark.read.schema(schema).parquet(*cand)
-            else:
-                df = self.spark.createDataFrame([], schema)
-            out = transform(df)
+            out = transform(self._scan(schema, cand))
             cols = [F.col(f.name).cast(f.dataType) for f in schema.fields]
             if capture:
                 cols += [F.col("_sparketl_omit"), F.col("_sparketl_cap")]
@@ -1342,7 +1346,9 @@ class ManagedTable:
 
 # A MERGE source of at most this many rows takes the driver shape (see
 # MergeBuilder.execute): it is collected once as Arrow and rebuilt as a
-# literal broadcast frame.
+# literal broadcast frame. A source whose Catalyst estimate exceeds it
+# goes distributed without that collect; the collect's limit is the
+# only hard bound, since an estimate can err both ways.
 _DRIVER_SOURCE_ROWS = 100_000
 
 
@@ -1405,33 +1411,30 @@ def incremental_agg(
     ``sum_expr`` is a SQL expression evaluated per changed row (cast to
     an exact decimal inside to keep merge order irrelevant); the output
     sum column is named ``sum_col``."""
-    delta = table.diff(v_from)
-    sign = F.when(F.col("_change") == F.lit("insert"), F.lit(1)).otherwise(
-        F.lit(-1)
+    sign = F.when(F.col("_change") == "insert", F.lit(1)).otherwise(F.lit(-1))
+    return _signed_fold(
+        prev_agg, [(table.diff(v_from), sign)], group_cols, count_col, sum_col, sum_expr
     )
-    aggs = [F.sum(sign).alias(count_col)]
-    cols = [*group_cols, count_col]
-    if sum_col is not None:
-        expr = sum_expr if sum_expr is not None else sum_col
-        aggs.append(
-            F.sum(sign.cast("decimal(20,2)") * F.expr(expr).cast("decimal(20,2)"))
-            .alias(sum_col)
-        )
-        cols.append(sum_col)
-    d_agg = delta.groupBy(*group_cols).agg(*aggs)
-    prev = prev_agg.select(*cols)
-    merged = (
-        prev.unionByName(d_agg.select(*cols))
-        .groupBy(*group_cols)
-        .agg(
-            *(
-                [F.sum(count_col).alias(count_col)]
-                + ([F.sum(sum_col).alias(sum_col)] if sum_col else [])
-            )
-        )
+
+
+def _signed_fold(prev_agg, terms, group_cols, count_col, sum_col, sum_expr):
+    """``prev_agg`` plus each ``(frame, sign)`` term's signed count (and
+    exact-decimal ``sum_expr`` sum) per group; groups whose count falls
+    to 0 drop out."""
+    cols = [*group_cols, count_col] + ([sum_col] if sum_col else [])
+    merged = prev_agg.select(*cols)
+    for frame, sign in terms:
+        aggs = [F.sum(sign).alias(count_col)]
+        if sum_col is not None:
+            value = F.expr(sum_expr if sum_expr is not None else sum_col)
+            dec = sign.cast("decimal(20,2)") * value.cast("decimal(20,2)")
+            aggs.append(F.sum(dec).alias(sum_col))
+        merged = merged.unionByName(frame.groupBy(*group_cols).agg(*aggs).select(*cols))
+    return (
+        merged.groupBy(*group_cols)
+        .agg(*[F.sum(c).alias(c) for c in cols[len(group_cols):]])
         .filter(F.col(count_col) > 0)
     )
-    return merged
 
 
 def incremental_join_agg(
@@ -1612,41 +1615,12 @@ def signed_join_agg(
     reuse the identical algebra."""
     sign_a = F.when(F.col("_ch_a") == "insert", F.lit(1)).otherwise(F.lit(-1))
     sign_b = F.when(F.col("_ch_b") == "insert", F.lit(1)).otherwise(F.lit(-1))
-
     terms = [
         (da.join(b_new, join_key), sign_a),
         (a_new.join(db, join_key), sign_b),
         (da.join(db, join_key), -(sign_a * sign_b)),
     ]
-    parts = []
-    for joined, sign in terms:
-        aggs = [F.sum(sign).alias(count_col)]
-        cols = [*group_cols, count_col]
-        if sum_col is not None:
-            expr = sum_expr if sum_expr is not None else sum_col
-            aggs.append(
-                F.sum(
-                    sign.cast("decimal(20,2)")
-                    * F.expr(expr).cast("decimal(20,2)")
-                ).alias(sum_col)
-            )
-            cols.append(sum_col)
-        parts.append(joined.groupBy(*group_cols).agg(*aggs).select(*cols))
-    cols = [*group_cols, count_col] + ([sum_col] if sum_col else [])
-    delta = parts[0].unionByName(parts[1]).unionByName(parts[2])
-    merged = (
-        prev_agg.select(*cols)
-        .unionByName(delta)
-        .groupBy(*group_cols)
-        .agg(
-            *(
-                [F.sum(count_col).alias(count_col)]
-                + ([F.sum(sum_col).alias(sum_col)] if sum_col else [])
-            )
-        )
-        .filter(F.col(count_col) > 0)
-    )
-    return merged
+    return _signed_fold(prev_agg, terms, group_cols, count_col, sum_col, sum_expr)
 
 
 class MergeBuilder:
@@ -1787,6 +1761,21 @@ class MergeBuilder:
             return F.expr(assigns[col])
         return F.lit(None)
 
+    def _estimated_rows(self) -> int | None:
+        """Catalyst's row estimate for the source, read without a job:
+        the optimized plan's ``sizeInBytes`` over its row width (8 bytes
+        plus each column's default size, the arithmetic a
+        ``LocalRelation`` sizes itself by, so a local source estimates
+        exactly). None when a leaf's size is unknown: a ``LogicalRDD``
+        reports ``spark.sql.defaultSizeInBytes``."""
+        plan = self.source._jdf.queryExecution().optimizedPlan()
+        conf = self.table.spark._jsparkSession.sessionState().conf()
+        leaves = plan.collectLeaves()
+        sizes = [leaves.apply(i).stats().sizeInBytes() for i in range(leaves.size())]
+        if max(sizes, default=0) >= conf.defaultSizeInBytes():
+            return None
+        return plan.stats().sizeInBytes() // (8 + plan.schema().defaultSize())
+
     def _driver_probe(self, table_schema: T.StructType, src_key: str | None):
         """The driver shape's one bounded collect: the source's columns,
         plus ``_sparketl_i`` (the id of the insert clause that fires on
@@ -1795,13 +1784,13 @@ class MergeBuilder:
         not a same-typed ``source.<col>`` already in the frame. Returns
         ``(arrow_table, {table_col: arrow column name})``, or None when
         the ON is not a single-key equality, the key is not integral or
-        string, a column has no Arrow mapping, or the source holds more
-        than ``_DRIVER_SOURCE_ROWS`` rows."""
+        string, a column has no Arrow mapping, or the source holds, or
+        is estimated to hold, more than ``_DRIVER_SOURCE_ROWS`` rows."""
         src_fields = {f.name: f.dataType for f in self.source.schema.fields}
         if not isinstance(
             src_fields.get(src_key),
             (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.StringType),
-        ):
+        ) or (self._estimated_rows() or 0) > _DRIVER_SOURCE_ROWS:
             return None
         # (predicate, values) per insert clause, in declaration order:
         # chained WHENs pick the first clause that fires, as in T-SQL
@@ -1838,7 +1827,7 @@ class MergeBuilder:
         # an unmatched source row sees an all-NULL target, as in the
         # distributed shape's outer join: joining an empty target gives
         # the insert clauses that scope (the optimizer folds it away)
-        empty = self.table.spark.createDataFrame([], table_schema)
+        empty = self.table._scan(table_schema, [])
         probe = (
             self.source.alias("source")
             .join(empty.alias("target"), F.lit(False), "left")
@@ -1864,9 +1853,13 @@ class MergeBuilder:
         - **driver shape**, when the ON is a single-key equality, the
           source key is integral or string, every source and table
           column maps to Arrow and the source holds at most
-          ``_DRIVER_SOURCE_ROWS`` rows. One bounded Arrow collect
-          fetches the source and evaluates the insert clauses; the key
-          bounds and key uniqueness are read from the collected keys.
+          ``_DRIVER_SOURCE_ROWS`` rows. Catalyst's estimate
+          (``_estimated_rows``, no job) above the bound goes distributed
+          at once; one within it, or an unknown one (a Python-list
+          source), is checked by the bounded collect itself. That one
+          bounded Arrow collect fetches the source and evaluates the
+          insert clauses; the key bounds and key uniqueness are read
+          from the collected keys.
           The candidate files are rewritten through a broadcast LEFT
           join of the literal source (map-only, no shuffle), which also
           captures the matched keys, and the source rows whose key

@@ -479,6 +479,38 @@ def test_asof_join_rewrite_and_refusals():
     assert "[t]" not in out and "DATEADD" not in out
     assert "date_add" in out and "`t`" in out
     assert "LEAD(`t`)" in out
+    # a bracket-quoted alias or table is the right side, whichever way
+    # the conjuncts quote it
+    for right in ("prices AS [p]", "prices [p]", "prices AS p"):
+        out = transpile(
+            f"SELECT * FROM e ASOF JOIN {right} ON e.s = p.s AND e.ts >= [p].ts"
+        )
+        assert "LEAD(ts) OVER (PARTITION BY s ORDER BY ts)" in out, right
+    out = transpile(
+        "SELECT * FROM e ASOF JOIN [prices] ON e.s = [prices].s AND e.ts >= prices.ts"
+    )
+    assert "FROM `prices` AS `prices`) `prices`" in out
+    assert "LEAD(ts) OVER (PARTITION BY s ORDER BY ts)" in out
+
+
+def test_parse_merge_keeps_case_expressions_whole():
+    from sparketl.dialect import parse_merge
+
+    spec = parse_merge(
+        "MERGE INTO t USING s ON t.id = s.id "
+        "WHEN MATCHED AND CASE WHEN s.v > 0 THEN 1 END = 1 "
+        "THEN UPDATE SET v = CASE WHEN s.v > 0 THEN s.v ELSE 0 END, w = 1 "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+    assert spec["clauses"] == [
+        (
+            "matched",
+            "update",
+            {"v": "CASE WHEN source.v > 0 THEN source.v ELSE 0 END", "w": "1"},
+            "CASE WHEN source.v > 0 THEN 1 END = 1",
+        ),
+        ("not_matched", "insert", None, None),
+    ]
 
 
 def test_tsql_batch7():

@@ -279,7 +279,9 @@ def test_qualify_in_setop_branches_rewrite_structure(
 # One statement per rewrite: TOP, OFFSET/FETCH, every _rewrite_call
 # name, _FUNC_MAP names, string concatenation (and the number+string
 # refusal), QUALIFY in a CTE / derived table / set-op branches,
-# CROSS/OUTER APPLY, ASOF, and MERGE with SET, VALUES and INSERT *.
+# CROSS/OUTER APPLY, ASOF (bracket-quoted right sides too), and MERGE
+# with SET, VALUES, INSERT * and CASE … END in a SET value or a WHEN
+# condition.
 LAYOUT_CORPUS = {
     "top_brackets": "SELECT TOP 5 [id] FROM t ORDER BY [id]",
     "distinct_top_paren": "SELECT DISTINCT TOP (3) a FROM t ORDER BY a;",
@@ -374,6 +376,23 @@ LAYOUT_CORPUS = {
     "merge_positional_values": (
         "MERGE INTO t USING s ON t.id = s.id WHEN NOT MATCHED THEN "
         "INSERT VALUES (s.id, 'x' + s.name)"
+    ),
+    "merge_case_set": (
+        "MERGE INTO t USING s ON t.id = s.id WHEN MATCHED THEN UPDATE "
+        "SET v = CASE WHEN s.v > 0 THEN s.v ELSE 0 END, w = s.w"
+    ),
+    "merge_case_condition": (
+        "MERGE INTO t USING s ON t.id = s.id WHEN MATCHED AND CASE WHEN "
+        "s.v > 0 THEN 1 ELSE CASE WHEN s.w > 0 THEN 1 END END = 1 THEN "
+        "DELETE WHEN NOT MATCHED THEN INSERT *"
+    ),
+    "asof_bracket_alias": (
+        "SELECT * FROM e ASOF JOIN prices AS [p] ON e.s = [p].s AND "
+        "e.ts >= p.ts"
+    ),
+    "asof_bracket_table": (
+        "SELECT * FROM e ASOF JOIN [prices] ON e.s = [prices].s AND "
+        "e.ts >= [prices].ts"
     ),
 }
 

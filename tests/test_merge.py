@@ -556,3 +556,147 @@ def test_collect_bounded_one_job_and_conf_untouched(spark, preset):
         assert spark.conf.get(LIMIT_CONF, None) == preset
     finally:
         spark.conf.unset(LIMIT_CONF)
+
+
+# -- local frames and the estimated shape -------------------------------------
+# Status-store checks: frames the driver builds on the commit path are
+# local relations (no job to read them), and a source Catalyst sizes
+# above _DRIVER_SOURCE_ROWS skips the driver shape's bounded collect.
+
+
+def _job_names(spark, fn):
+    """Run ``fn`` and return (its result, the names of the Spark jobs it
+    started), read from the status tracker under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-merge-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "test_merge")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    store = sc._jsc.sc().statusStore()
+    return out, [store.job(j).name() for j in sc.statusTracker().getJobIdsForGroup(group)]
+
+
+def test_merge_result_and_empty_frames_run_no_jobs(spark, tmp_path):
+    t = make(spark, tmp_path / "t")
+    eng = Engine(spark, saved_queries_path=str(tmp_path / "q.json"))
+    eng.register_managed("accounts", t)
+    spark.createDataFrame([(3, "C", 30.0)], SCHEMA).createOrReplaceTempView("chg")
+    res = eng.execute(
+        "MERGE INTO accounts AS t USING chg AS s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET bal = s.bal"
+    )
+    rows, jobs = _job_names(spark, res.collect)
+    assert rows[0]["version"] == t.history()[-1] and jobs == []
+
+    empty = ManagedTable(spark, str(tmp_path / "empty"))
+    empty.create(SCHEMA)
+    for df in (empty.read(), empty.read(where="id > 1"), empty.diff(1)):
+        rows, jobs = _job_names(spark, df.collect)
+        assert rows == [] and jobs == []
+    v = t.set_properties({"note": "x"})  # no data files change
+    rows, jobs = _job_names(spark, t.diff(v - 1, v).collect)
+    assert rows == [] and jobs == []
+    assert t.diff(v - 1, v).columns == [*SCHEMA.fieldNames(), "_change"]
+
+
+def test_diff_with_one_empty_side_is_that_side(spark, tmp_path):
+    t = make(spark, tmp_path / "t")
+    v_app = t.append(spark.createDataFrame([(4, "d", 4.0)], SCHEMA))
+    assert sorted(tuple(r) for r in t.diff(v_app - 1).collect()) == [
+        (4, "d", 4.0, "insert")
+    ]
+    t.delete_where("id >= 0")  # every file removed, none added
+    assert sorted(tuple(r)[0::3] for r in t.diff(v_app).collect()) == [
+        (1, "delete"), (2, "delete"), (3, "delete"), (4, "delete")
+    ]
+
+
+def _shapes(monkeypatch):
+    """Record what each bounded collect returned: 'driver' for a table,
+    'distributed' for an over-bound probe."""
+    import sparketl.tables as tables
+
+    shapes = []
+    collect = tables._collect_bounded
+
+    def spy(df, max_rows):
+        out = collect(df, max_rows)
+        shapes.append("driver" if out is not None else "distributed")
+        return out
+
+    monkeypatch.setattr(tables, "_collect_bounded", spy)
+    return shapes
+
+
+def test_local_source_over_the_bound_skips_the_probe(spark, tmp_path, monkeypatch):
+    import pandas as pd
+
+    import sparketl.tables as tables
+
+    shapes = _shapes(monkeypatch)
+    t = make(spark, tmp_path / "t")
+    n = tables._DRIVER_SOURCE_ROWS + 1
+    src = spark.createDataFrame(
+        pd.DataFrame({"id": range(n), "name": "x", "bal": 1.0})
+    )
+    assert tables.MergeBuilder(t, src, "")._estimated_rows() == n
+    _, jobs = _job_names(spark, lambda: t.upsert(src, "id"))
+    assert shapes == [] and not any(j.startswith("toArrow") for j in jobs)
+    assert not any("part-local-" in f for f in t.data_files())
+    assert t.read().count() == n
+    assert sorted(tuple(r) for r in t.read(where="id < 2").collect()) == [
+        (0, "x", 1.0), (1, "x", 1.0)
+    ]
+
+
+def test_list_source_within_the_bound_takes_the_driver_shape(spark, tmp_path, monkeypatch):
+    import sparketl.tables as tables
+
+    shapes = _shapes(monkeypatch)
+    t = make(spark, tmp_path / "t")
+    src = spark.createDataFrame([(2, "B", 20.0), (9, "i", 9.0)], SCHEMA)
+    assert tables.MergeBuilder(t, src, "")._estimated_rows() is None  # a Python RDD
+    t.upsert(src, "id")
+    assert shapes == ["driver"]
+    assert state(t) == [(1, "a", 1.0), (2, "B", 20.0), (3, "c", 3.0), (9, "i", 9.0)]
+
+
+def test_underestimated_parquet_source_falls_back_through_the_probe(
+    spark, tmp_path, monkeypatch
+):
+    import sparketl.tables as tables
+
+    monkeypatch.setattr(tables, "_DRIVER_SOURCE_ROWS", 3_000)
+    shapes = _shapes(monkeypatch)
+    t = make(spark, tmp_path / "t")
+    path = str(tmp_path / "src.parquet")
+    spark.range(5_000).selectExpr("id", "'x' AS name", "1.0D AS bal").coalesce(
+        1
+    ).write.parquet(path)
+    src = spark.read.parquet(path)
+    # compressed parquet bytes over the row width undercount the rows
+    assert tables.MergeBuilder(t, src, "")._estimated_rows() <= 3_000
+    t.upsert(src, "id")
+    assert shapes == ["distributed"]
+    assert t.read().count() == 5_000
+
+
+def test_sql_merge_case_expressions(spark, tmp_path):
+    t = make(spark, tmp_path / "t")
+    eng = Engine(spark, saved_queries_path=str(tmp_path / "q.json"))
+    eng.register_managed("accounts", t)
+    spark.createDataFrame(
+        [(1, "a", -1.0), (2, "b", 5.0), (3, "c", 0.5)], SCHEMA
+    ).createOrReplaceTempView("chg")
+    eng.execute(
+        "MERGE INTO accounts AS t USING chg AS s ON t.id = s.id "
+        "WHEN MATCHED AND CASE WHEN s.bal > 1 THEN 'big' ELSE 'small' END = 'small' "
+        "THEN UPDATE SET bal = CASE WHEN s.bal > 0 THEN s.bal ELSE 0 END"
+    )
+    assert state(t) == [(1, "a", 0.0), (2, "b", 2.0), (3, "c", 0.5)]

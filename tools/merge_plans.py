@@ -1,14 +1,23 @@
-"""Dump the physical plans of the two MERGE rewrite shapes.
+"""Dump the physical plans and Spark jobs of the MERGE rewrite shapes.
 
-Upserts one 2,000-row batch (half matched keys, half new) into a fresh
-20,000-row ManagedTable twice: once as is, which takes the driver shape,
-and once with ``tables._DRIVER_SOURCE_ROWS = 0``, which forces the
-distributed shape. For each, the final (post-AQE) plan of the rewrite's
-write job is read from Spark's SQL status store and written to
-``plans/r<round>/merge_driver.txt`` and ``merge_distributed.txt``,
-with the shuffle bytes the whole upsert wrote on the first line.
+Upserts into a fresh 20,000-row ManagedTable three times:
 
-    python tools/merge_plans.py --round 16
+- ``driver``: a 2,000-row batch (half matched keys, half new) built
+  from a Python list, which takes the driver shape;
+- ``distributed``: the same batch with ``tables._DRIVER_SOURCE_ROWS =
+  0``, which forces the distributed shape;
+- ``estimated``: an Arrow-built (local) batch of
+  ``_DRIVER_SOURCE_ROWS + 1`` rows, which Catalyst's row estimate sends
+  to the distributed shape without the driver shape's bounded
+  ``toArrow`` collect.
+
+For each, the final (post-AQE) plan of the rewrite's write job is read
+from Spark's SQL status store and written to
+``plans/r<round>/merge_<case>.txt``, with the shuffle bytes the whole
+upsert wrote on the first line and its Spark jobs (name, tasks,
+duration) after them.
+
+    python tools/merge_plans.py --round 20
 """
 
 from __future__ import annotations
@@ -18,7 +27,8 @@ import os
 import sys
 import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from sparketl import tables  # noqa: E402
 from sparketl.session import get_spark  # noqa: E402
@@ -46,7 +56,35 @@ def _shuffle_bytes(spark, job_ids) -> int:
     return total
 
 
-def rewrite_plan(spark, root: str) -> tuple[str, int]:
+def _jobs(spark, job_ids) -> list[str]:
+    """``name | tasks | duration`` of each job, in job-id order, with
+    call-site paths made relative to the repo."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    out = []
+    for jid in sorted(job_ids):
+        job = store.job(jid)
+        ms = job.completionTime().get().getTime() - job.submissionTime().get().getTime()
+        name = job.name().replace(REPO + os.sep, "")
+        out.append(f"job {jid}: {name} | {job.numTasks()} tasks | {ms} ms")
+    return out
+
+
+def _batch(spark, case: str):
+    if case == "estimated":
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        n = tables._DRIVER_SOURCE_ROWS + 1
+        keys = pa.array(range(19_000, 19_000 + n), pa.int64())
+        return spark.createDataFrame(
+            pa.table({"k": keys, "v": pc.negate(keys), "tag": ["new"] * n})
+        )
+    return spark.createDataFrame(
+        [(i, -i, "new") for i in range(19_000, 21_000)], SCHEMA
+    ).coalesce(1)
+
+
+def rewrite_plan(spark, root: str, case: str) -> tuple[str, int, list[str]]:
     t = tables.ManagedTable(spark, root)
     t.create(spark.createDataFrame([], SCHEMA).schema)
     t.append(
@@ -54,9 +92,7 @@ def rewrite_plan(spark, root: str) -> tuple[str, int]:
             [(i, i, f"t{i % 7}") for i in range(20_000)], SCHEMA
         ).repartition(4)
     )
-    batch = spark.createDataFrame(
-        [(i, -i, "new") for i in range(19_000, 21_000)], SCHEMA
-    ).coalesce(1)
+    batch = _batch(spark, case)
     sc = spark.sparkContext._jsc.sc()
     sc.listenerBus().waitUntilEmpty(10_000)
     seen = {e.executionId() for e in _executions(spark)}
@@ -70,29 +106,28 @@ def rewrite_plan(spark, root: str) -> tuple[str, int]:
         if "Join" in e.physicalPlanDescription()
         and "Scan parquet" in e.physicalPlanDescription()
     ]
-    return writes[-1], _shuffle_bytes(spark, _job_ids(spark) - jobs_before)
+    new_jobs = _job_ids(spark) - jobs_before
+    return writes[-1], _shuffle_bytes(spark, new_jobs), _jobs(spark, new_jobs)
 
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--round", type=int, required=True)
     args = ap.parse_args()
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        f"r{args.round}",
-    )
+    out_dir = os.path.join(REPO, "plans", f"r{args.round}")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("merge-plans")
     with tempfile.TemporaryDirectory() as tmp:
-        for shape in ("driver", "distributed"):
-            if shape == "distributed":
-                tables._DRIVER_SOURCE_ROWS = 0
-            plan, shuffled = rewrite_plan(spark, os.path.join(tmp, shape))
-            path = os.path.join(out_dir, f"merge_{shape}.txt")
+        bound = tables._DRIVER_SOURCE_ROWS
+        for case in ("driver", "distributed", "estimated"):
+            tables._DRIVER_SOURCE_ROWS = 0 if case == "distributed" else bound
+            plan, shuffled, jobs = rewrite_plan(spark, os.path.join(tmp, case), case)
+            path = os.path.join(out_dir, f"merge_{case}.txt")
             with open(path, "w", encoding="utf-8") as f:
-                f.write(f"-- upsert shuffle write bytes: {shuffled}\n{plan}\n")
-            print(path, "shuffle bytes", shuffled)
+                f.write(f"-- upsert shuffle write bytes: {shuffled}\n")
+                f.write("".join(f"-- {j}\n" for j in jobs))
+                f.write(f"{plan}\n")
+            print(path, "shuffle bytes", shuffled, "jobs", len(jobs))
     spark.stop()
 
 
