@@ -16,9 +16,20 @@ the inferred ``StructType`` per file, keyed by the file's identity
 (absolute path, size and mtime in ns; for a directory, the sorted
 ``(name, size, mtime_ns)`` listing) plus the session values of the
 parquet confs that steer inference. A hit reads with
-``spark.read.schema(cached)``: no job. Only the schema is kept, never
-a DataFrame, so every call still lists the files afresh and a
-rewritten file changes the key and is re-inferred.
+``spark.read.schema(cached)``: no job. A rewritten file changes the
+key and is re-inferred.
+
+Frame memo: building a relation still lists its files and analyses
+the scan, and ``load_tables`` runs before every T-SQL query. So
+``load_table`` also keeps the frame it returns (after
+``normalize_events_ts`` for ``events``), keyed by the session plus the
+schema key. A hit returns that same DataFrame: no relation is built
+and no file listed. It is reused only while the schema-memo entry it
+was built from still stands, so resetting ``_SCHEMAS`` drops it too;
+another session (``newSession()``, a restarted one) misses.
+``load_tables`` re-registers a temp view only when the session's view
+of that name is not the one it registered from that frame (a raw
+catalog lookup, no analysis), so a view a user replaced is restored.
 """
 
 from __future__ import annotations
@@ -134,7 +145,13 @@ _SCHEMAS_MAX = 1024
 _SCHEMAS: dict[tuple, StructType] = {}
 
 
-def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+def _infer_confs(spark: SparkSession) -> tuple:
+    return tuple(spark.conf.get(c, None) for c in _INFER_CONFS)
+
+
+def _schema_key(
+    spark: SparkSession, path: str, confs: tuple | None = None
+) -> tuple | None:
     """None for a path this process cannot stat (a remote URI, a missing
     file): such reads go uncached and fail, if at all, in Spark."""
     path = os.path.abspath(path)
@@ -147,15 +164,18 @@ def _schema_key(spark: SparkSession, path: str) -> tuple | None:
             ident = (st.st_size, st.st_mtime_ns)
     except OSError:
         return None
-    return (path, ident, tuple(spark.conf.get(c, None) for c in _INFER_CONFS))
+    return (path, ident, confs if confs is not None else _infer_confs(spark))
+
+
+def _put(memo: dict, limit: int, key: tuple, value) -> None:
+    while len(memo) >= limit:
+        memo.pop(next(iter(memo)), None)
+    memo[key] = value
 
 
 def _store(key: tuple | None, schema: StructType) -> None:
-    if key is None:
-        return
-    while len(_SCHEMAS) >= _SCHEMAS_MAX:
-        _SCHEMAS.pop(next(iter(_SCHEMAS)), None)
-    _SCHEMAS[key] = schema
+    if key is not None:
+        _put(_SCHEMAS, _SCHEMAS_MAX, key, schema)
 
 
 def remember_schema(spark: SparkSession, path: str, schema: StructType) -> None:
@@ -164,12 +184,7 @@ def remember_schema(spark: SparkSession, path: str, schema: StructType) -> None:
     _store(_schema_key(spark, path), schema)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` that infers the schema only the first
-    time it sees this file under these confs (key: module docstring)."""
-    # Key taken before inference: a file rewritten meanwhile stores its
-    # schema under the old identity, which never matches again.
-    key = _schema_key(spark, path)
+def _read(spark: SparkSession, path: str, key: tuple | None) -> DataFrame:
     schema = _SCHEMAS.get(key)
     if schema is not None:
         return spark.read.schema(schema).parquet(path)
@@ -178,7 +193,31 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema only the first
+    time it sees this file under these confs (key: module docstring)."""
+    # Key taken before inference: a file rewritten meanwhile stores its
+    # schema under the old identity, which never matches again.
+    return _read(spark, path, _schema_key(spark, path))
+
+
+class _Frame:
+    """A memoized fixture frame, the schema-memo entry it was read with
+    and the raw temp view ``load_tables`` last registered from it."""
+
+    __slots__ = ("session", "schema", "df", "view")
+
+    def __init__(self, session, schema, df):
+        self.session, self.schema, self.df, self.view = session, schema, df, None
+
+
+# Keyed by ``id(session)``: each entry holds its session, so that id
+# names no other live session. A few sessions' fixture sets fit.
+_FRAMES_MAX = 64
+_FRAMES: dict[tuple, _Frame] = {}
+
+
+def _session_prereqs(spark: SparkSession) -> None:
     # Every entry point must be self-sufficient under an externally
     # constructed vanilla SparkSession (the driver's), so session-level
     # prerequisites are (re)applied here, not only in the session factory.
@@ -191,10 +230,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass
-    df = read_parquet(spark, table_path(sf_dir, name))
+
+
+def _frame(
+    spark: SparkSession, sf_dir: str, name: str, confs: tuple | None = None
+) -> _Frame:
+    path = table_path(sf_dir, name)
+    key = _schema_key(spark, path, confs)
+    fkey = (id(spark), name, key)
+    hit = _FRAMES.get(fkey)
+    if hit is not None and _SCHEMAS.get(key) is hit.schema:
+        return hit
+    df = _read(spark, path, key)
     if name == "events":
         df = normalize_events_ts(df)
-    return df
+    frame = _Frame(spark, _SCHEMAS.get(key), df)
+    if frame.schema is not None:
+        _put(_FRAMES, _FRAMES_MAX, fkey, frame)
+    return frame
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One fixture table; the same DataFrame while its file, the
+    inference confs and the session are unchanged (module docstring)."""
+    _session_prereqs(spark)
+    return _frame(spark, sf_dir, name).df
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -244,13 +304,18 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
 def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
 ) -> dict[str, DataFrame]:
-    """Load every fixture table and register it as a temp view."""
+    """Load every fixture table and register it as a temp view; a view
+    still holding the frame it was registered from is left alone."""
+    _session_prereqs(spark)
+    confs = _infer_confs(spark)
+    catalog = spark._jsparkSession.sessionState().catalog()
     out: dict[str, DataFrame] = {}
     for name in names:
-        path = table_path(sf_dir, name)
-        if not os.path.exists(path):
+        if not os.path.exists(table_path(sf_dir, name)):
             continue
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
+        frame = _frame(spark, sf_dir, name, confs)
+        if frame.view is None or not catalog.getRawTempView(name).equals(frame.view):
+            frame.df.createOrReplaceTempView(name)
+            frame.view = catalog.getRawTempView(name)
+        out[name] = frame.df
     return out

@@ -136,7 +136,13 @@ def q_prj_03_null_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # PRJ-04 — stringify for display: str(value) on every cell (tool:625,852).
 # ---------------------------------------------------------------------------
 def stringify_for_display(df: DataFrame) -> DataFrame:
-    return df.select([F.col(c).cast("string").alias(c) for c in df.columns])
+    # By position, not name: a join's output may repeat a column name
+    # (``SELECT * FROM t1 JOIN t2 ON …``), and the grid shows both.
+    names = df.columns
+    pos = [f"_{i}" for i in range(len(names))]
+    return df.toDF(*pos).select(
+        [F.col(p).cast("string").alias(c) for p, c in zip(pos, names)]
+    )
 
 
 def q_prj_04_stringify(spark: SparkSession, sf_dir: str) -> DataFrame:

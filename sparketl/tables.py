@@ -47,7 +47,7 @@ import os
 import re
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -1091,7 +1091,7 @@ class ManagedTable:
             *dict.fromkeys([key, *set_columns])
         )
         return (
-            self.merge(src, f"target.`{key}` = source.`{key}`")
+            self._keyed_merge(src, key)
             .when_matched_update({c: f"source.`{c}`" for c in set_columns})
             .execute()
         )
@@ -1122,11 +1122,18 @@ class ManagedTable:
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
         )
         return (
-            self.merge(src, f"target.`{key}` = source.`{key}`")
+            self._keyed_merge(src, key)
             .when_matched_update({c: f"source.`{c}`" for c in table_cols})
             .when_not_matched_insert()
             .execute()
         )
+
+    def _keyed_merge(self, source: DataFrame, key: str) -> "MergeBuilder":
+        """A MERGE on ``key`` over ``_latest_per_key`` output, whose
+        non-NULL keys are unique by construction."""
+        builder = self.merge(source, f"target.`{key}` = source.`{key}`")
+        builder._unique_keys = True
+        return builder
 
     def merge(self, source: DataFrame, condition: str) -> "MergeBuilder":
         """General MERGE (T-SQL ``MERGE INTO`` / Delta ``merge``):
@@ -1657,6 +1664,8 @@ class MergeBuilder:
         self.table = table
         self.source = source
         self.condition = condition
+        # set by keyed writers: the source keys are known to be unique
+        self._unique_keys = False
         # (category, action, assignments, clause_condition)
         self._clauses: list[tuple[str, str, dict | None, str | None]] = []
 
@@ -1866,8 +1875,11 @@ class MergeBuilder:
           matched nothing are written driver-side as one insert file
           in the same commit.
         - **distributed shape**, otherwise. A single-key source is
-          pinned with ``localCheckpoint`` and one aggregate over it
-          gives the key count, distinct count, min and max; the
+          pinned with ``localCheckpoint``. For ``upsert`` and
+          ``keyed_update`` (keys unique by construction) an
+          ``observe`` on the checkpoint gives the key count, min and
+          max with no extra job; a general MERGE runs one aggregate
+          over the pinned source that adds the distinct count. The
           rewrite is a full-outer join (a left join without insert
           clauses), and AQE decides whether it broadcasts.
 
@@ -1916,17 +1928,22 @@ class MergeBuilder:
         else:
             source = self.source
             if src_key is not None:
-                # the aggregate and the rewrite both read the source, and
+                # the key stats and the rewrite both read the source, and
                 # a keyed writer's source is a window: compute it once
-                source = source.localCheckpoint(eager=True)
                 c = F.col(f"`{src_key}`")
-                st = source.agg(
-                    F.count(c).alias("n"),
-                    F.countDistinct(c).alias("nd"),
-                    F.min(c).alias("mn"),
-                    F.max(c).alias("mx"),
-                ).first()
-                n, nd, mn, mx = st["n"], st["nd"], st["mn"], st["mx"]
+                stats = (F.count(c).alias("n"), F.min(c).alias("mn"), F.max(c).alias("mx"))
+                if self._unique_keys:
+                    # no distinct count needed, and the checkpoint's own
+                    # job fills the observation: no extra job
+                    obs = Observation()
+                    source = source.observe(obs, *stats).localCheckpoint(eager=True)
+                    st = obs.get
+                    nd = st["n"]
+                else:
+                    source = source.localCheckpoint(eager=True)
+                    st = source.agg(*stats, F.countDistinct(c).alias("nd")).first()
+                    nd = st["nd"]
+                n, mn, mx = st["n"], st["mn"], st["mx"]
         unique = src_key is not None and n == nd
         prune = None
         if (

@@ -35,6 +35,17 @@ def test_preview_caps_and_stringifies(spark):
     assert all(isinstance(v, str) for v in pdf["l_quantity"])  # tool:625 str()
 
 
+def test_preview_keeps_duplicate_column_names(spark):
+    spark.sql("SELECT * FROM VALUES (1, 'a'), (2, 'b') AS t(id, v)").createOrReplaceTempView("dup_t1")
+    spark.sql("SELECT * FROM VALUES (1, 10), (3, 30) AS t(id, w)").createOrReplaceTempView("dup_t2")
+    eng = Engine(spark)
+    df = eng.execute("SELECT * FROM dup_t1 JOIN dup_t2 ON dup_t1.id = dup_t2.id")
+    assert [tuple(r) for r in df.collect()] == [(1, "a", 1, 10)]
+    pdf = eng.preview()
+    assert list(pdf.columns) == ["id", "v", "id", "w"]
+    assert [list(r) for r in pdf.itertuples(index=False)] == [["1", "a", "1", "10"]]
+
+
 def test_preview_without_query_raises(spark):
     with pytest.raises(QueryError):
         Engine(spark).preview()

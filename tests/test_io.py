@@ -112,3 +112,98 @@ def test_event_stream_staged_copy_uses_memo(spark):
     read_event_stream(spark, SF_SMOKE)
     _, n = _jobs(spark, lambda: read_event_stream(spark, SF_SMOKE))
     assert n == 0
+
+
+# -- frame memo and view check in load_tables --------------------------------
+
+
+def _raw_views(spark, names):
+    """JVM identity of each temp view the session holds now (0: none)."""
+    catalog = spark._jsparkSession.sessionState().catalog()
+    ident = spark._jvm.System.identityHashCode
+    out = {}
+    for name in names:
+        view = catalog.getRawTempView(name)
+        out[name] = ident(view.get()) if view.isDefined() else 0
+    return out
+
+
+def test_warm_load_tables_reuses_frames_and_views(spark):
+    first = io.load_tables(spark, SF_SMOKE)
+    views = _raw_views(spark, first)
+    second, n = _jobs(spark, lambda: io.load_tables(spark, SF_SMOKE))
+    assert n == 0
+    assert all(second[k] is first[k] for k in first)
+    assert _raw_views(spark, first) == views  # no view registered again
+    assert io.load_table(spark, SF_SMOKE, "orders") is first["orders"]
+
+
+def test_replaced_fixture_view_is_restored(spark):
+    tables = io.load_tables(spark, SF_SMOKE)
+    spark.sql("CREATE OR REPLACE TEMP VIEW orders AS SELECT 1 AS x")
+    assert spark.table("orders").columns == ["x"]
+    views = _raw_views(spark, tables)
+    io.load_tables(spark, SF_SMOKE)
+    assert spark.table("orders").columns == tables["orders"].columns
+    after = _raw_views(spark, tables)
+    assert after["orders"] != views["orders"]
+    assert {k: v for k, v in after.items() if k != "orders"} == {
+        k: v for k, v in views.items() if k != "orders"
+    }
+
+
+def test_rewritten_fixture_gives_its_new_rows(spark, tmp_path):
+    s2 = spark.newSession()  # keeps the fixture views of `spark` intact
+    sf = str(tmp_path)
+    path = io.table_path(sf, "nation")
+
+    def rows():
+        return sorted(tuple(r) for r in io.load_tables(s2, sf)["nation"].collect())
+
+    pq.write_table(pa.table({"k": [1, 2]}), path)
+    assert rows() == [(1,), (2,)]
+    pq.write_table(pa.table({"k": [1, 2, 3]}), path)  # new size
+    assert rows() == [(1,), (2,), (3,)]
+    assert sorted(tuple(r) for r in s2.table("nation").collect()) == [(1,), (2,), (3,)]
+    st = os.stat(path)
+    pq.write_table(pa.table({"k": [7, 8, 9]}), path)  # same size, new mtime
+    assert os.stat(path).st_size == st.st_size
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert rows() == [(7,), (8,), (9,)]
+
+
+def test_new_session_gets_its_own_frames_and_views(spark):
+    mine = io.load_tables(spark, SF_SMOKE)
+    views = _raw_views(spark, mine)
+    s2 = spark.newSession()
+    theirs = io.load_tables(s2, SF_SMOKE)
+    assert set(theirs) == set(mine)
+    assert all(theirs[k] is not mine[k] for k in mine)
+    assert all(theirs[k].sparkSession is s2 for k in theirs)
+    assert all(v != 0 for v in _raw_views(s2, theirs).values())
+    assert _raw_views(spark, mine) == views
+    assert io.load_tables(s2, SF_SMOKE)["orders"] is theirs["orders"]
+    assert io.load_tables(spark, SF_SMOKE)["orders"] is mine["orders"]
+
+
+def test_changed_inference_conf_misses_the_frame_memo(spark):
+    conf = "spark.sql.parquet.binaryAsString"
+    before = spark.conf.get(conf, None)
+    base = io.load_table(spark, SF_SMOKE, "documents")
+    try:
+        spark.conf.set(conf, "false" if before == "true" else "true")
+        assert io.load_table(spark, SF_SMOKE, "documents") is not base
+    finally:
+        if before is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, before)
+    assert io.load_table(spark, SF_SMOKE, "documents") is base
+
+
+def test_reset_schema_memo_drops_the_frame(spark, monkeypatch):
+    base = io.load_table(spark, SF_SMOKE, "region")
+    monkeypatch.setattr(io, "_SCHEMAS", {})
+    df, n = _jobs(spark, lambda: io.load_table(spark, SF_SMOKE, "region"))
+    assert n == 1 and df is not base
+    assert io.load_table(spark, SF_SMOKE, "region") is df

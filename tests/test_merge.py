@@ -700,3 +700,34 @@ def test_sql_merge_case_expressions(spark, tmp_path):
         "THEN UPDATE SET bal = CASE WHEN s.bal > 0 THEN s.bal ELSE 0 END"
     )
     assert state(t) == [(1, "a", 0.0), (2, "b", 2.0), (3, "c", 0.5)]
+
+
+@pytest.mark.parametrize(
+    "rows,key",
+    # an empty source passes the bounded probe, so it takes a double key,
+    # which no bound lets into the driver shape
+    [([(2, "B", 20.0), (9, "i", 9.0)], "id"), ([], "bal")],
+)
+def test_distributed_upsert_reads_key_stats_without_an_aggregate(
+    spark, tmp_path, monkeypatch, rows, key
+):
+    import sparketl.tables as tables
+
+    monkeypatch.setattr(tables, "_DRIVER_SOURCE_ROWS", 0)
+    shapes = _shapes(monkeypatch)
+    t = make(spark, tmp_path / "t")
+    src = spark.createDataFrame(rows, SCHEMA)
+    _, jobs = _job_names(spark, lambda: t.upsert(src, key))
+    assert shapes in ([], ["distributed"])
+    assert not any(j.startswith("first") for j in jobs), jobs
+    expect = {1: (1, "a", 1.0), 2: (2, "b", 2.0), 3: (3, "c", 3.0)}
+    expect.update({r[0]: r for r in rows})
+    assert state(t) == sorted(expect.values())
+    # a general MERGE cannot assume unique keys and keeps its aggregate
+    _, jobs = _job_names(
+        spark,
+        lambda: t.merge(src, f"target.{key} = source.{key}")
+        .when_matched_update({"name": "source.name"})
+        .execute(),
+    )
+    assert any(j.startswith("first") for j in jobs), jobs

@@ -17,7 +17,7 @@ from Spark's SQL status store and written to
 upsert wrote on the first line and its Spark jobs (name, tasks,
 duration) after them.
 
-    python tools/merge_plans.py --round 20
+    python tools/merge_plans.py --round 21
 """
 
 from __future__ import annotations
