@@ -145,13 +145,7 @@ _SCHEMAS_MAX = 1024
 _SCHEMAS: dict[tuple, StructType] = {}
 
 
-def _infer_confs(spark: SparkSession) -> tuple:
-    return tuple(spark.conf.get(c, None) for c in _INFER_CONFS)
-
-
-def _schema_key(
-    spark: SparkSession, path: str, confs: tuple | None = None
-) -> tuple | None:
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
     """None for a path this process cannot stat (a remote URI, a missing
     file): such reads go uncached and fail, if at all, in Spark."""
     path = os.path.abspath(path)
@@ -164,7 +158,7 @@ def _schema_key(
             ident = (st.st_size, st.st_mtime_ns)
     except OSError:
         return None
-    return (path, ident, confs if confs is not None else _infer_confs(spark))
+    return (path, ident, tuple(spark.conf.get(c, None) for c in _INFER_CONFS))
 
 
 def _put(memo: dict, limit: int, key: tuple, value) -> None:
@@ -232,11 +226,9 @@ def _session_prereqs(spark: SparkSession) -> None:
         pass
 
 
-def _frame(
-    spark: SparkSession, sf_dir: str, name: str, confs: tuple | None = None
-) -> _Frame:
+def _frame(spark: SparkSession, sf_dir: str, name: str) -> _Frame:
     path = table_path(sf_dir, name)
-    key = _schema_key(spark, path, confs)
+    key = _schema_key(spark, path)
     fkey = (id(spark), name, key)
     hit = _FRAMES.get(fkey)
     if hit is not None and _SCHEMAS.get(key) is hit.schema:
@@ -307,13 +299,12 @@ def load_tables(
     """Load every fixture table and register it as a temp view; a view
     still holding the frame it was registered from is left alone."""
     _session_prereqs(spark)
-    confs = _infer_confs(spark)
     catalog = spark._jsparkSession.sessionState().catalog()
     out: dict[str, DataFrame] = {}
     for name in names:
         if not os.path.exists(table_path(sf_dir, name)):
             continue
-        frame = _frame(spark, sf_dir, name, confs)
+        frame = _frame(spark, sf_dir, name)
         if frame.view is None or not catalog.getRawTempView(name).equals(frame.view):
             frame.df.createOrReplaceTempView(name)
             frame.view = catalog.getRawTempView(name)

@@ -1080,7 +1080,8 @@ class ManagedTable:
         ``MergeBuilder.execute`` picks the physical shape from the
         source and file-prunes the rewrite to the source's key range.
         """
-        table_cols = [f.name for f in self.schema().fields]
+        schema = self.schema()
+        table_cols = [f.name for f in schema.fields]
         if key not in table_cols:
             raise TableError(f"identifier column '{key}' not in table")
         set_columns = set_columns or [c for c in source.columns if c != key]
@@ -1091,7 +1092,7 @@ class ManagedTable:
             *dict.fromkeys([key, *set_columns])
         )
         return (
-            self._keyed_merge(src, key)
+            self._keyed_merge(src, key, source, schema)
             .when_matched_update({c: f"source.`{c}`" for c in set_columns})
             .execute()
         )
@@ -1122,17 +1123,25 @@ class ManagedTable:
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
         )
         return (
-            self._keyed_merge(src, key)
+            self._keyed_merge(src, key, source, schema)
             .when_matched_update({c: f"source.`{c}`" for c in table_cols})
             .when_not_matched_insert()
             .execute()
         )
 
-    def _keyed_merge(self, source: DataFrame, key: str) -> "MergeBuilder":
-        """A MERGE on ``key`` over ``_latest_per_key`` output, whose
-        non-NULL keys are unique by construction."""
-        builder = self.merge(source, f"target.`{key}` = source.`{key}`")
-        builder._unique_keys = True
+    def _keyed_merge(
+        self, src: DataFrame, key: str, raw: DataFrame, schema: T.StructType
+    ) -> "MergeBuilder":
+        """A MERGE on ``key`` over ``src``, the ``_latest_per_key`` output
+        of ``raw``. Its keys are unique as ``raw`` typed them; they stay
+        unique against the table only when that type is the table's,
+        since a cast ('1' and '01' to int, 1.2 and 1.7 to int) or the
+        ON's implicit coercion can merge two of them."""
+        builder = self.merge(src, f"target.`{key}` = source.`{key}`")
+        raw_type = next(
+            (f.dataType for f in raw.schema.fields if f.name == key), None
+        )
+        builder._unique_keys = raw_type == schema[key].dataType
         return builder
 
     def merge(self, source: DataFrame, condition: str) -> "MergeBuilder":
@@ -1876,10 +1885,11 @@ class MergeBuilder:
           in the same commit.
         - **distributed shape**, otherwise. A single-key source is
           pinned with ``localCheckpoint``. For ``upsert`` and
-          ``keyed_update`` (keys unique by construction) an
-          ``observe`` on the checkpoint gives the key count, min and
-          max with no extra job; a general MERGE runs one aggregate
-          over the pinned source that adds the distinct count. The
+          ``keyed_update`` whose source key already has the table's
+          type (keys unique by construction) an ``observe`` on the
+          checkpoint gives the key count, min and max with no extra
+          job; any other MERGE runs one aggregate over the pinned
+          source that adds the distinct count. The
           rewrite is a full-outer join (a left join without insert
           clauses), and AQE decides whether it broadcasts.
 

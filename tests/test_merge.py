@@ -731,3 +731,24 @@ def test_distributed_upsert_reads_key_stats_without_an_aggregate(
         .execute(),
     )
     assert any(j.startswith("first") for j in jobs), jobs
+
+
+@pytest.mark.parametrize(
+    "key_type,keys", [(T.StringType(), ["1", "01"]), (T.DoubleType(), [1.2, 1.7])]
+)
+def test_distributed_upsert_keys_merged_by_the_cast_raise(
+    spark, tmp_path, monkeypatch, key_type, keys
+):
+    """Source keys distinct in their own type become one key in the
+    table's once upsert casts them. Both then match target row 1 and
+    the commit raises the duplicate match error rather than writing
+    that row twice."""
+    import sparketl.tables as tables
+
+    monkeypatch.setattr(tables, "_DRIVER_SOURCE_ROWS", 0)
+    t = make(spark, tmp_path / "t")
+    schema = T.StructType([T.StructField("id", key_type), *SCHEMA.fields[1:]])
+    src = spark.createDataFrame([(k, "x", 9.0) for k in keys], schema)
+    with pytest.raises(TableError, match="more than once"):
+        t.upsert(src, "id")
+    assert state(t) == [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)]
