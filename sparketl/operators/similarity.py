@@ -308,9 +308,8 @@ def q_ext_03_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# IVF ANN — inverted-file index: spherical k-means coarse quantizer,
-# then search only the nprobe nearest cells (rows-only driver check;
-# pytest asserts recall vs the brute-force baseline).
+# The integer-Lloyd kernel of the ANN family (ext_03 IVF, ext_133 k-means,
+# ext_151 PQ, ext_159/165 IVFADC, ext_163 IVF maintenance)
 # ---------------------------------------------------------------------------
 
 
@@ -321,89 +320,185 @@ def _unit(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     )
 
 
-def _milli_unit_cells(
-    vecs: DataFrame, id_col: str, out_id: str, vec_col: str = "embedding"
+def _scaled(
+    vecs: DataFrame, id_col: str, out_id: str, vec_col: str = "embedding",
+    unit: bool = True,
 ) -> DataFrame:
-    """(out_id, d, m) — milli-quantized UNIT-vector cells: the one
-    identical double expression tree (element / correctly-rounded
-    sqrt norm, then floor×1000) both engines share, after which every
-    quantizer step is exact integer arithmetic."""
-    return _unit(vecs, vec_col).select(
+    """(out_id, rmarr): every component milli-quantized, floor(x·1000),
+    then scaled by 1000 — the bigints every kernel step works on. With
+    ``unit`` the vector is L2-normalized first through the one double
+    tree both engines share (element / correctly-rounded sqrt norm)."""
+    src, arr = (_unit(vecs, vec_col), "_unit") if unit else (vecs, vec_col)
+    return src.select(
         F.col(id_col).alias(out_id),
-        F.posexplode("_unit").alias("d", "uf"),
-    ).select(
-        out_id,
-        "d",
-        F.expr("CAST(FLOOR(uf * 1000.0) AS BIGINT)").alias("m"),
+        F.expr(
+            f"transform({arr}, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000.0) "
+            "AS BIGINT) * CAST(1000 AS BIGINT))"
+        ).alias("rmarr"),
     )
 
 
-def _milli_unit_arr(
-    vecs: DataFrame, id_col: str, out_id: str, vec_col: str = "embedding"
-) -> DataFrame:
-    """(out_id, marr) — the milli-quantized unit vector as ONE array
-    row: element-for-element the same bigints ``_milli_unit_cells``
-    explodes (identical double tree: element / correctly-rounded sqrt
-    norm, then floor×1000), kept packed so distance/argmin passes run
-    as map-only array expressions instead of a ×n_cells exploded
-    broadcast join + two shuffles (r14, guide §8: move the decision
-    math to small packed rows; only genuine aggregations shuffle)."""
-    return _unit(vecs, vec_col).select(
-        F.col(id_col).alias(out_id),
-        F.expr("transform(_unit, x -> CAST(FLOOR(x * 1000.0) AS BIGINT))").alias(
-            "marr"
-        ),
-    )
-
-
-def _pack_cents(
-    cents: DataFrame, c_col: str = "c", v_col: str = "cq", out_col: str = "ccents"
-) -> DataFrame:
-    """Pack a (c, d, v) centroid frame into a ONE-ROW frame holding
-    ``array<struct<c, cqarr>>`` sorted by c, each ``cqarr`` ordered by
-    d — the broadcastable shape the map-only argmin consumes. k×dim
-    integers: tiny at any scale (the guide's 'decide with small rows').
-    Never inlined as a literal (the r11 Catalyst-blowup rule): it stays
-    a DataFrame and reaches the scan via one broadcast."""
+def _dist(sub: int | None) -> str:
+    """Exact bigint Σ (x − q)² from the row's ``rmarr`` — the slice of
+    subspace ``p.s`` when ``sub`` is set — to the packed centroid ``p``."""
+    x = "rmarr" if sub is None else f"slice(rmarr, p.s * {sub} + 1, {sub})"
     return (
-        cents.groupBy(c_col)
+        f"aggregate(zip_with({x}, p.parr, (x, q) -> (x - q) * (x - q)), "
+        "CAST(0 AS BIGINT), (acc, y) -> acc + y)"
+    )
+
+
+def _dists(sub: int | None = None, sq: str = "0") -> str:
+    """struct(dist, c) per centroid of subspace ``sq`` (every centroid
+    when ``sub`` is None); array_min / array_sort order these by
+    (dist, c), so ties go to the smaller c."""
+    cands = "cents" if sub is None else f"filter(cents, p -> p.s = {sq})"
+    return f"transform({cands}, p -> struct({_dist(sub)} AS dist, p.c AS c))"
+
+
+def _argmin(sub: int | None = None, sq: str = "0") -> str:
+    """struct(dist, c) of the nearest centroid."""
+    return f"array_min({_dists(sub, sq)})"
+
+
+def _probe(nprobe: int) -> str:
+    """The ``nprobe`` nearest cell ids, nearest first."""
+    return f"transform(slice(array_sort({_dists()}), 1, {nprobe}), x -> x.c)"
+
+
+def _residual(cell: str) -> str:
+    """rmarr − the packed centroid of ``cell``: x − q1(x), micro units."""
+    return (
+        f"zip_with(rmarr, filter(cents, p -> p.c = {cell})[0].parr, "
+        "(x, q) -> x - q)"
+    )
+
+
+def _per_sub(sub: int | None, code) -> str:
+    """carr: ``code(sq)`` for every subspace sq of the row (one subspace,
+    the whole vector, when ``sub`` is None)."""
+    if sub is None:
+        return f"array({code('0')})"
+    return (
+        f"transform(sequence(0, CAST(size(rmarr) div {sub} AS INT) - 1), "
+        f"sq -> {code('sq')})"
+    )
+
+
+def _codes(sub: int | None) -> str:
+    """carr: the nearest code of every subspace."""
+    return _per_sub(sub, lambda sq: f"{_argmin(sub, sq)}.c")
+
+
+def _centroids(assigned: DataFrame, sub: int | None) -> DataFrame:
+    """(s, c, n, parr): per (subspace, code) the member count and the
+    integer centroid Σx div n of every dim, packed in dim order."""
+    s = "0" if sub is None else f"CAST(d div {sub} AS INT)"
+    return (
+        assigned.select("carr", F.posexplode("rmarr").alias("d", "x"))
+        .select(F.expr(s).alias("s"), F.expr(f"carr[{s}]").alias("c"), "d", "x")
+        .groupBy("s", "c", "d")
         .agg(
-            F.array_sort(F.collect_list(F.struct("d", F.col(v_col)))).alias("_p")
+            F.expr("sum(x) div count(1)").alias("cq"),
+            F.count(F.lit(1)).alias("n"),
         )
+        .groupBy("s", "c")
+        .agg(
+            F.max("n").alias("n"),
+            F.array_sort(F.collect_list(F.struct("d", "cq"))).alias("_p"),
+        )
+        .select("s", "c", "n", F.expr("transform(_p, e -> e.cq)").alias("parr"))
+    )
+
+
+def _pack(cents: DataFrame) -> DataFrame:
+    """ONE row ``cents: array<struct<s, c, parr>>`` sorted by (s, c) —
+    k×dim integers, broadcast to the map-only argmin. Never inlined as a
+    literal (the centroid-literal analysis blowup)."""
+    return cents.agg(
+        F.array_sort(F.collect_list(F.struct("s", "c", "parr"))).alias("cents")
+    )
+
+
+def _lloyd(
+    vecs: DataFrame, k: int, iters: int, *, sub: int | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """Integer Lloyd over ``vecs`` (vid, rmarr): ``k`` codes per
+    subspace of ``sub`` dims, or ``k`` cells over the whole vector when
+    ``sub`` is None. Returns the final centroid frame (``_centroids``)
+    and the last assignment (vid, rmarr, carr) it was computed from.
+
+    Coarse k-means is product quantization with one subspace spanning
+    the vector, so one kernel trains both: the coarse stage feeds
+    rmarr = 1000·m, where the PQ rule Σrm div n is the coarse rule
+    (1000·Σm) div n and (rm − cq)² is (m·1000 − cq)²; IVFADC's residual
+    stage feeds rmarr = m·1000 − cq unchanged. Init is residue-class,
+    c = pmod(vid, k) in every subspace, and every later code is the
+    (dist, c) argmin against the packed centroids of the round before.
+    All integer, so the DuckDB oracles replay every round bit for bit.
+
+    Plan shape: an assignment is a map-only array argmin against the
+    broadcast one-row ``_pack``; the only shuffles per round are the
+    centroid aggregation (map-combinable sum and count per (s, c, d))
+    and its pack. No collects, no windows; ``iters`` unrolls into the
+    DAG, so callers pin ``vecs`` (localCheckpoint) when it is costly."""
+    init = _per_sub(sub, lambda sq: f"CAST(pmod(vid, {k}) AS INT)")
+    assigned = vecs.select("vid", "rmarr", F.expr(init).alias("carr"))
+    cents = _centroids(assigned, sub)
+    for _ in range(iters):
+        assigned = vecs.crossJoin(F.broadcast(_pack(cents))).select(
+            "vid", "rmarr", F.expr(_codes(sub)).alias("carr")
+        )
+        cents = _centroids(assigned, sub)
+    return cents, assigned
+
+
+def _adc_topk(
+    q: DataFrame, cents: DataFrame, codes: DataFrame, by: list[str],
+    sub: int, k: int,
+) -> DataFrame:
+    """The ADC score-and-rank tail of PQ and IVFADC: per query row (qid,
+    *by, rmarr) the exact bigint distance to every packed codebook
+    entry — a (qid, *by, s, c, dist) table, broadcast — then ONE
+    equi-join with the (vid, *by, s, c) code rows, a map-combinable
+    sum per (qid, vid) and the top ``k`` by (adc_dist, vid)."""
+    dtab = (
+        q.crossJoin(F.broadcast(cents))
         .select(
-            F.col(c_col).alias("c"),
-            F.expr(f"transform(_p, x -> x.{v_col})").alias("cqarr"),
+            "qid",
+            *by,
+            F.explode_outer(
+                F.expr(
+                    "transform(cents, p -> struct(p.s AS s, p.c AS c, "
+                    f"{_dist(sub)} AS dist))"
+                )
+            ).alias("e"),
         )
-        .agg(F.array_sort(F.collect_list(F.struct("c", "cqarr"))).alias(out_col))
+        .select("qid", *by, "e.s", "e.c", "e.dist")
     )
-
-
-# exact bigint squared distance of a packed milli vector to one packed
-# centroid: Σ_d (m·1000 − cq)² — the identical arithmetic the exploded
-# join + sum computed, now one codegen'd array expression per row
-_ARR_DIST = (
-    "aggregate(zip_with(marr, ct.cqarr, (m, cq) -> "
-    "(m * CAST(1000 AS BIGINT) - cq) * (m * CAST(1000 AS BIGINT) - cq)), "
-    "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-)
-
-# nearest cell id: argmin over cells with ties on the smaller c —
-# array_min over struct(dist, c) is the same lexicographic order as
-# the previous min(struct(dist, c)) aggregate
-_CELL_ARGMIN = (
-    f"array_min(transform(ccents, ct -> struct({_ARR_DIST} AS dist, "
-    "ct.c AS c))).c"
-)
-
-
-def _probe_cells_expr(nprobe: int) -> str:
-    """The nprobe nearest cells, nearest first — identical selection to
-    row_number() over (dist, c) ≤ nprobe (array_sort on struct(dist, c)
-    is the same order), computed per query row with no shuffle."""
+    adc = (
+        codes.join(F.broadcast(dtab), [*by, "s", "c"])
+        .where(F.col("vid") != F.col("qid"))
+        .groupBy("qid", "vid")
+        .agg(F.sum("dist").alias("adc_dist"))
+    )
+    w = W.partitionBy("qid").orderBy("adc_dist", "vid")
     return (
-        f"transform(slice(array_sort(transform(ccents, ct -> "
-        f"struct({_ARR_DIST} AS dist, ct.c AS c))), 1, {nprobe}), x -> x.c)"
+        adc.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            F.col("qid").alias("query_id"),
+            F.col("vid").alias("neighbor_id"),
+            "rank",
+            "adc_dist",
+        )
     )
+
+
+# ---------------------------------------------------------------------------
+# IVF ANN — inverted-file index: spherical k-means coarse quantizer,
+# then search only the nprobe nearest cells
+# ---------------------------------------------------------------------------
 
 
 def ann_ivf_topk(
@@ -422,65 +517,33 @@ def ann_ivf_topk(
     column is the partition key: each probe is a co-located scan, and
     raising n_cells keeps per-cell size constant as the corpus grows.
 
-    Engine-exact coarse quantizer (r9, FULL oracle — the earlier
-    float spherical-k-means trainer was rows-only): the corpus unit-
-    normalizes through one shared double tree, milli-quantizes, and
-    trains by kmeans_fixed's integer Lloyd devices — residue-class
-    init (window-free), centroids cq = (1000·Σm) div n, exact bigint
-    distances, struct-min ties — so DuckDB replays training,
-    assignment and probing bit for bit; only the final candidate
-    cosine is a double, written identically in the oracle (the
-    cosine_topk precedent). Cells that lose all members simply stop
-    existing — deterministic in both engines, no driver state, no
-    k×dim literal inlining (the centroid-literal analysis blowup the
-    old collect-based trainer worked around with a broadcast join).
+    Engine-exact coarse quantizer: the corpus unit-normalizes and
+    trains by the integer-Lloyd kernel (``_lloyd``), so DuckDB replays
+    training, assignment and probing bit for bit; only the final
+    candidate cosine is a double, written identically in the oracle
+    (the cosine_topk precedent). Cells that lose all members simply
+    stop existing — deterministic in both engines, no driver state.
     """
-    # the packed milli-vector frame feeds every training round plus the
-    # final home assignment — pin it so the normalize pass runs once (a
-    # production pipeline persists the milli-vector table between
-    # training and indexing the same way). r14: packed arrays replace
-    # the exploded (vid, d, m) cell frame — each Lloyd round is now ONE
-    # genuine aggregation shuffle (centroid sums) instead of three (the
-    # ×n_cells exploded distance join's partial agg, the per-vid
-    # argmin, and the cells⋈assign re-join); assignment itself is
-    # map-only against the broadcast packed centroids. Identical
-    # integer arithmetic, identical tie-breaks (see _ARR_DIST /
-    # _CELL_ARGMIN) — proven by the unchanged oracle hash.
-    vecs = _milli_unit_arr(spread(corpus), id_col, "vid", vec_col).localCheckpoint(
+    vecs = _scaled(spread(corpus), id_col, "vid", vec_col).localCheckpoint(
         eager=True
     )
-
-    def centroids_of(assigned: DataFrame) -> DataFrame:
-        return (
-            assigned.select("c", F.posexplode("marr").alias("d", "m"))
-            .groupBy("c", "d")
-            .agg(F.sum("m").alias("s"), F.count(F.lit(1)).alias("n"))
-            .select("c", "d", F.expr("(1000 * s) div n").alias("cq"))
-        )
-
-    assigned = vecs.select(
-        "vid", (F.col("vid") % F.lit(n_cells)).cast("int").alias("c"), "marr"
-    )
-    for _ in range(n_iters):
-        packed = _pack_cents(centroids_of(assigned))
-        assigned = vecs.crossJoin(F.broadcast(packed)).select(
-            "vid", F.expr(_CELL_ARGMIN).alias("c"), "marr"
-        )
-
-    cents = _pack_cents(centroids_of(assigned)).localCheckpoint(
+    cents = _pack(_lloyd(vecs, n_cells, n_iters)[0]).localCheckpoint(
         eager=True
     )  # 2 consumers
     home = vecs.crossJoin(F.broadcast(cents)).select(
         F.col("vid").alias("neighbor_id"),
-        F.expr(_CELL_ARGMIN).alias("cell"),
+        F.expr(f"{_argmin()}.c").alias("cell"),
     )
-    q_vecs = _milli_unit_arr(queries, id_col, "qid", vec_col)
-    probes = q_vecs.crossJoin(F.broadcast(cents)).select(
-        F.col("qid").alias("query_id"),
-        # explode_outer: the probe array is non-empty by construction
-        # (cells exist); plain explode would admit the
-        # InferFiltersFromGenerate pushdown (the r10 perf rule)
-        F.explode_outer(F.expr(_probe_cells_expr(nprobe))).alias("cell"),
+    probes = (
+        _scaled(queries, id_col, "qid", vec_col)
+        .crossJoin(F.broadcast(cents))
+        .select(
+            F.col("qid").alias("query_id"),
+            # explode_outer: the probe array is non-empty by construction
+            # (cells exist); plain explode would admit the
+            # InferFiltersFromGenerate pushdown (the r10 perf rule)
+            F.explode_outer(F.expr(_probe(nprobe))).alias("cell"),
+        )
     )
     c_vecs = _unit(spread(corpus), vec_col).select(
         F.col(id_col).alias("neighbor_id"), F.col("_unit").alias("c_vec")
@@ -622,18 +685,11 @@ def pq_adc_topk(
     raw vectors. This is the compression companion to ext_03's IVF
     (which prunes WHICH vectors to scan; IVF-PQ composes both).
 
-    Engine-exact: reuses the ann_ivf integer-Lloyd devices — milli-
-    quantized unit cells, residue-class init, centroids
-    (1000·Σm) div n, exact-bigint squared distances, struct-min ties —
-    keyed by (subspace, code) instead of cell, so DuckDB replays
-    training, encoding and the ADC sum bit for bit; adc_dist itself is
-    a bigint (squared milli-distance), no float ever enters.
-
-    Plan shape: training is n_iters×(groupBy + broadcast-join) rounds
-    over the exploded cell frame; encoding is the final assignment;
-    the distance table is corpus-independent and broadcast; the ADC
-    scan is ONE equi-join on (subspace, code) + a map-combinable sum.
-    No collects, no windows over raw data.
+    Engine-exact: the codebooks train by the integer-Lloyd kernel
+    (``_lloyd`` with ``sub=sub_dim``) and the codes are its last
+    assignment; the ADC tail (``_adc_topk``) sums exact bigint squared
+    milli-distances, so DuckDB replays training, encoding and the ADC
+    sum bit for bit and no float ever enters.
 
     No reference analogue (SQL_DATA_INTEGRATION_TOOL.py:273 has no
     vector surface); [EXT] ANN suite alongside ext_03.
@@ -647,84 +703,13 @@ def pq_adc_topk(
             f"residue-class init seeds the codebooks but vectors are "
             f"only encoded by the first assignment round"
         )
-    # r14 shape (see _ivfadc_train): packed milli arrays + broadcast
-    # packed codebooks — code assignment and the query distance table
-    # are map-only array expressions; the only shuffles are the
-    # genuine per-(s, c, d) centroid aggregations. rmarr = m·1000 keeps
-    # (m·1000 − cq)² literally the same bigint as the exploded join's
-    # dx² — the oracle replays it unchanged.
-    vecs = (
-        _milli_unit_arr(spread(corpus), id_col, "vid", vec_col)
-        .withColumn(
-            "rmarr", F.expr("transform(marr, m -> m * CAST(1000 AS BIGINT))")
-        )
-        .localCheckpoint(eager=True)  # feeds every round + encoding
-    )
-
-    def _agg_centroids(grouped: DataFrame) -> DataFrame:
-        return grouped.agg(
-            F.sum("m").alias("sm"), F.count(F.lit(1)).alias("n")
-        ).select("s", "c", "d", F.expr("(1000 * sm) div n").alias("cq"))
-
-    # residue-class init folds INTO the first centroid aggregate —
-    # c = vid % n_codes is a map-side expression on the vector frame,
-    # so round 0 skips materializing and shuffle-joining a synthetic
-    # (vid, s, c) assignment (same integers the oracle's a0 CTE joins)
-    cent = _agg_centroids(
-        vecs.select(
-            "vid",
-            F.pmod(F.col("vid"), F.lit(n_codes)).cast("int").alias("c"),
-            F.posexplode("marr").alias("d", "m"),
-        )
-        .select(F.expr(f"CAST(d div {sub_dim} AS INT)").alias("s"), "c", "d", "m")
-        .groupBy("s", "c", "d")
-    )
-    coded = None
-    for _ in range(n_iters):
-        coded = vecs.crossJoin(F.broadcast(_pack_pq(cent, v_col="cq"))).select(
-            "vid", "marr", F.expr(_pq_code_arr(sub_dim)).alias("carr")
-        )
-        cent = _agg_centroids(
-            coded.select("vid", "carr", F.posexplode("marr").alias("d", "m"))
-            .select(
-                F.expr(f"CAST(d div {sub_dim} AS INT)").alias("s"),
-                F.expr(f"carr[d div {sub_dim}]").alias("c"),
-                "d",
-                "m",
-            )
-            .groupBy("s", "c", "d")
-        )
-    # (vid, s, c): the compressed representation
+    vecs = _scaled(spread(corpus), id_col, "vid", vec_col).localCheckpoint(
+        eager=True
+    )  # feeds every round + encoding
+    cents, coded = _lloyd(vecs, n_codes, n_iters, sub=sub_dim)
     codes = coded.select("vid", F.posexplode("carr").alias("s", "c"))
-
-    dtab = (
-        _milli_unit_arr(queries, id_col, "qid", vec_col)
-        .withColumn(
-            "rmarr", F.expr("transform(marr, m -> m * CAST(1000 AS BIGINT))")
-        )
-        .crossJoin(F.broadcast(_pack_pq(cent, v_col="cq")))
-        .select(
-            "qid", F.explode_outer(F.expr(_adc_tab_expr(sub_dim))).alias("e")
-        )
-        .select("qid", "e.s", "e.c", "e.dist")
-    )
-    adc = (
-        codes.join(F.broadcast(dtab), ["s", "c"])
-        .where(F.col("vid") != F.col("qid"))
-        .groupBy("qid", "vid")
-        .agg(F.sum("dist").alias("adc_dist"))
-    )
-    w = W.partitionBy("qid").orderBy("adc_dist", "vid")
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("vid").alias("neighbor_id"),
-            "rank",
-            "adc_dist",
-        )
-    )
+    q = _scaled(queries, id_col, "qid", vec_col)
+    return _adc_topk(q, _pack(cents), codes, [], sub_dim, k)
 
 
 def q_ext_151_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -776,21 +761,16 @@ def ivfadc_topk(
     ADC lookup table is built per (query, probed cell) because the
     query's residual differs per cell.
 
-    Engine-exact, the ext_03/ext_151 device family: milli-quantized
-    unit cells, residue-class inits folded into the first centroid
-    aggregate, integer centroids (Σ div n), exact-bigint squared
-    distances, struct-min ties. Residuals rm = m·1000 − cq live in
-    micro units; PQ centroids pcq = Σrm div n stay micro (no extra
-    ×1000 — the coarse step already scaled); worst-case ADC sum is
+    Engine-exact: both stages are the integer-Lloyd kernel
+    (``_lloyd``). Residuals rm = m·1000 − cq live in micro units and
+    the PQ centroids Σrm div n stay micro; worst-case ADC sum is
     n_sub·sub_dim·(2·10⁶)² ≈ 2.6·10¹⁴, inside int64. DuckDB replays
     every step bit for bit.
 
-    Plan shape: training is (coarse_iters + pq_iters + 2) rounds of
-    groupBy + broadcast-join over the exploded cell frame (pinned
-    once); the codes and home tables are the only per-vector state;
-    the ADC table is queries×nprobe×n_sub×n_codes rows — broadcast;
-    the scan is ONE equi-join on (cell, s, code) + a map-combinable
-    sum. No collects, no windows over corpus-sized frames.
+    Plan shape: the two trainings are the kernel's; the codes and home
+    tables are the only per-vector state; the ADC table is
+    queries×nprobe×n_sub×n_codes rows — broadcast; the scan is ONE
+    equi-join on (cell, s, code) + a map-combinable sum.
 
     No reference analogue (SQL_DATA_INTEGRATION_TOOL.py:273 has no
     vector surface); [EXT] ANN suite — composes ext_03 + ext_151.
@@ -802,65 +782,13 @@ def ivfadc_topk(
     return _ivfadc_serve(idx, queries, k, nprobe, sub_dim, vec_col, id_col)
 
 
-def _ivfadc_coarse_cents(grouped) -> DataFrame:
-    return grouped.agg(
-        F.sum("m").alias("sm"), F.count(F.lit(1)).alias("n")
-    ).select("c", "d", F.expr("(1000 * sm) div n").alias("cq"))
-
-
-def _ivfadc_pq_cents(grouped) -> DataFrame:
-    return grouped.agg(
-        F.sum("rm").alias("sr"), F.count(F.lit(1)).alias("n")
-    ).select("s", "c", "d", F.expr("sr div n").alias("pcq"))
-
-
-# residual against the assigned cell's packed centroid: rm_d = m_d·1000
-# − cq_d — the identical bigints the exploded (cell, d) join produced
-_RES_ARR = (
-    "zip_with(marr, filter(ccents, x -> x.c = cell)[0].cqarr, "
-    "(m, cq) -> m * CAST(1000 AS BIGINT) - cq)"
-)
-
-
-def _pack_pq(pcent: DataFrame, v_col: str = "pcq") -> DataFrame:
-    """Pack a (s, c, d, <v_col>) PQ codebook frame into a ONE-ROW frame
-    holding ``array<struct<s, c, parr>>`` (parr ordered by d within the
-    subspace) — n_sub×n_codes×sub_dim integers, broadcast to the
-    map-only code assignment."""
+def _home_residual(vecs: DataFrame, ccent_pk: DataFrame) -> DataFrame:
+    """(vid, cell, rmarr): each vector's nearest coarse cell and its
+    residual against that cell, one map-only pass."""
     return (
-        pcent.groupBy("s", "c")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("d", F.col(v_col)))).alias("_p")
-        )
-        .select("s", "c", F.expr(f"transform(_p, x -> x.{v_col})").alias("parr"))
-        .agg(F.array_sort(F.collect_list(F.struct("s", "c", "parr"))).alias("pcents"))
-    )
-
-
-def _adc_tab_expr(sub_dim: int) -> str:
-    """Per-row ADC lookup table: for every packed (s, c) codebook entry
-    the exact bigint distance Σ_j (rm_{s·sub_dim+j} − p_j)² of the
-    row's residual/scaled vector ``rmarr`` — one struct array to
-    explode into the broadcastable (s, c, dist) table."""
-    return (
-        f"transform(pcents, p -> struct(p.s AS s, p.c AS c, "
-        f"aggregate(zip_with(slice(rmarr, p.s * {sub_dim} + 1, "
-        f"{sub_dim}), p.parr, (rm, pcq) -> (rm - pcq) * (rm - pcq)), "
-        f"CAST(0 AS BIGINT), (acc, x) -> acc + x) AS dist))"
-    )
-
-
-def _pq_code_arr(sub_dim: int) -> str:
-    """Per-row PQ assignment: for each subspace s, the argmin code over
-    the packed codebooks — carr[s] = argmin_c Σ_j (rm_{s·sub_dim+j} −
-    pcq_j)², ties to the smaller c (array_min on struct(dist, c), the
-    same order as the previous min(struct(dist, c)) aggregate)."""
-    return (
-        f"transform(sequence(0, CAST(size(rmarr) div {sub_dim} AS INT) - 1), "
-        f"sq -> array_min(transform(filter(pcents, p -> p.s = sq), "
-        f"p -> struct(aggregate(zip_with(slice(rmarr, sq * {sub_dim} + 1, "
-        f"{sub_dim}), p.parr, (rm, pcq) -> (rm - pcq) * (rm - pcq)), "
-        f"CAST(0 AS BIGINT), (acc, x) -> acc + x) AS dist, p.c AS c))).c)"
+        vecs.crossJoin(F.broadcast(ccent_pk))
+        .select("vid", F.expr(f"{_argmin()}.c").alias("cell"), "rmarr", "cents")
+        .select("vid", "cell", F.expr(_residual("cell")).alias("rmarr"))
     )
 
 
@@ -877,20 +805,11 @@ def _ivfadc_train(
     """The TRAIN half of the IVFADC lifecycle (FAISS ``train``): learn
     the coarse centroids and residual-PQ codebooks, and produce the
     trained corpus's own index rows. Returns the frozen index as a
-    dict: ``ccent_pk`` (packed coarse centroids, one row of
-    array<struct<c, cqarr>>), ``pcent_pk`` (packed PQ codebooks, one
-    row of array<struct<s, c, parr>>), ``home`` ((vid, cell)) and
-    ``codes`` ((vid, s, c)) for the training vectors. ``_ivfadc_encode``
-    adds new vectors against this frozen state; ``_ivfadc_serve``
-    answers queries over any (home, codes) rows.
-
-    r14 shape: packed milli-vector arrays + broadcast packed codebooks
-    make every ASSIGNMENT (coarse and PQ) a map-only array expression;
-    the only shuffles left are the genuine centroid aggregations — one
-    per Lloyd round per stage instead of the previous three (exploded
-    ×n_cells/×n_codes distance join partial agg, per-vid argmin,
-    cells⋈assign re-join). Same integer arithmetic, same (dist, c)
-    tie-breaks — the oracle replays it bit for bit."""
+    dict: ``ccent_pk`` and ``pcent_pk`` (the ``_pack``ed coarse
+    centroids and PQ codebooks), ``home`` ((vid, cell)) and ``codes``
+    ((vid, s, c)) for the training vectors. ``_ivfadc_encode`` adds new
+    vectors against this frozen state; ``_ivfadc_serve`` answers
+    queries over any (home, codes) rows."""
     if coarse_iters < 1 or pq_iters < 1:
         raise ValueError(
             f"ivfadc: coarse_iters and pq_iters must be >= 1 "
@@ -898,75 +817,21 @@ def _ivfadc_train(
             f"seed centroids, but cells/codes only exist after the "
             f"first assignment round of each stage"
         )
-    vecs = _milli_unit_arr(
-        spread(corpus), id_col, "vid", vec_col
-    ).localCheckpoint(eager=True)  # feeds every round of both stages
-
-    def coarse_cents_of(assigned: DataFrame) -> DataFrame:
-        return _ivfadc_coarse_cents(
-            assigned.select("c", F.posexplode("marr").alias("d", "m")).groupBy(
-                "c", "d"
-            )
-        )
-
-    # ---- stage 1: coarse quantizer (ext_03's integer Lloyd) ----
-    assigned = vecs.select(
-        "vid", F.pmod(F.col("vid"), F.lit(n_cells)).cast("int").alias("c"), "marr"
-    )
-    ccent_pk = _pack_cents(coarse_cents_of(assigned))
-    for _ in range(coarse_iters):
-        assigned = vecs.crossJoin(F.broadcast(ccent_pk)).select(
-            "vid", F.expr(_CELL_ARGMIN).alias("c"), "marr"
-        )
-        ccent_pk = _pack_cents(coarse_cents_of(assigned))
-    ccent_pk = ccent_pk.localCheckpoint(eager=True)  # home/res + serve consumer
-    # final home assignment + residual in ONE map-only pass
-    res = (
-        vecs.crossJoin(F.broadcast(ccent_pk))
-        .select(
-            "vid",
-            F.expr(_CELL_ARGMIN).alias("cell"),
-            "marr",
-            "ccents",
-        )
-        .select("vid", "cell", F.expr(_RES_ARR).alias("rmarr"))
-        .localCheckpoint(eager=True)  # feeds every PQ round + home/codes
-    )
-    home = res.select("vid", "cell")
-
-    # ---- stage 2: residual PQ (ext_151's devices, on rm not m) ----
-    pcent = _ivfadc_pq_cents(
-        res.select(
-            "vid", F.pmod(F.col("vid"), F.lit(n_codes)).cast("int").alias("c"),
-            F.posexplode("rmarr").alias("d", "rm"),
-        )
-        .select("vid", F.expr(f"CAST(d div {sub_dim} AS INT)").alias("s"), "c", "d", "rm")
-        .groupBy("s", "c", "d")
-    )
-    codes = None
-    for _ in range(pq_iters):
-        coded = res.crossJoin(F.broadcast(_pack_pq(pcent))).select(
-            "vid", "rmarr", F.expr(_pq_code_arr(sub_dim)).alias("carr")
-        )
-        codes = coded.select(
-            "vid", F.posexplode("carr").alias("s", "c")
-        )
-        pcent = _ivfadc_pq_cents(
-            coded.select("vid", "carr", F.posexplode("rmarr").alias("d", "rm"))
-            .select(
-                F.expr(f"CAST(d div {sub_dim} AS INT)").alias("s"),
-                F.expr(f"carr[d div {sub_dim}]").alias("c"),
-                "d",
-                "rm",
-            )
-            .groupBy("s", "c", "d")
-        )
-    pcent_pk = _pack_pq(pcent).localCheckpoint(eager=True)  # dtab + encode
+    vecs = _scaled(spread(corpus), id_col, "vid", vec_col).localCheckpoint(
+        eager=True
+    )  # feeds every coarse round + the residuals
+    ccent_pk = _pack(_lloyd(vecs, n_cells, coarse_iters)[0]).localCheckpoint(
+        eager=True
+    )  # residuals + serve
+    res = _home_residual(vecs, ccent_pk).localCheckpoint(
+        eager=True
+    )  # feeds every PQ round + home
+    pcents, coded = _lloyd(res, n_codes, pq_iters, sub=sub_dim)
     return {
         "ccent_pk": ccent_pk,
-        "pcent_pk": pcent_pk,
-        "home": home,
-        "codes": codes,
+        "pcent_pk": _pack(pcents).localCheckpoint(eager=True),  # dtab + encode
+        "home": res.select("vid", "cell"),
+        "codes": coded.select("vid", F.posexplode("carr").alias("s", "c")),
     }
 
 
@@ -978,26 +843,20 @@ def _ivfadc_encode(
     id_col: str,
 ) -> dict:
     """The ADD half of the IVFADC lifecycle (FAISS ``add``): encode new
-    arrivals against the FROZEN index — nearest frozen coarse centroid
-    (one broadcast join + argmin, a query probe's cost), residual
-    against that cell, per-subspace argmin against the frozen PQ
-    codebooks. NO retrain of either quantizer: at 100 TB vectors
-    append daily and both codebooks stay fixed between scheduled
-    retrains (ext_163's triggers decide when). Returns {"home",
-    "codes"} rows for the new vectors, union-compatible with the
-    trained index's — ``_ivfadc_serve`` scans both identically.
-
-    r14: one map-only pass against the broadcast packed codebooks
-    (cell argmin + residual + per-subspace code argmin), then a single
-    explode for the codes rows — no exploded distance joins, no argmin
-    shuffles. Per-batch cost stays O(|delta|) rows touched once."""
-    vecs = _milli_unit_arr(spread(vectors), id_col, "vid", vec_col)
+    arrivals against the FROZEN index — nearest frozen coarse centroid,
+    residual against that cell, per-subspace argmin against the frozen
+    PQ codebooks, all in one map-only pass. NO retrain of either
+    quantizer: at 100 TB vectors append daily and both codebooks stay
+    fixed between scheduled retrains (ext_163's triggers decide when).
+    Returns {"home", "codes"} rows for the new vectors,
+    union-compatible with the trained index's — ``_ivfadc_serve`` scans
+    both identically."""
     enc = (
-        vecs.crossJoin(F.broadcast(idx["ccent_pk"]))
-        .select("vid", F.expr(_CELL_ARGMIN).alias("cell"), "marr", "ccents")
-        .select("vid", "cell", F.expr(_RES_ARR).alias("rmarr"))
+        _home_residual(
+            _scaled(spread(vectors), id_col, "vid", vec_col), idx["ccent_pk"]
+        )
         .crossJoin(F.broadcast(idx["pcent_pk"]))
-        .select("vid", "cell", F.expr(_pq_code_arr(sub_dim)).alias("carr"))
+        .select("vid", "cell", F.expr(_codes(sub_dim)).alias("carr"))
         .localCheckpoint(eager=True)  # home + codes consumers
     )
     home = enc.select("vid", "cell")
@@ -1014,71 +873,28 @@ def _ivfadc_serve(
     vec_col: str,
     id_col: str,
 ) -> DataFrame:
-    """The SEARCH half: probe the nprobe nearest coarse cells, build
-    the per-(query, cell) ADC table against the frozen codebooks, scan
-    the index rows in ``idx['home']``/``idx['codes']`` with one
-    equi-join. Works identically over trained-only or trained+added
-    index rows — the serving path never knows which vectors were
-    ``train``ed and which were ``add``ed.
-
-    r14: the probe selection, per-probe query residual and the ADC
-    lookup table all compute map-only per query row against the
-    broadcast packed codebooks (the table is queries×nprobe×n_sub×
-    n_codes rows either way — it only EXPLODES at the end instead of
-    being assembled by two exploded joins + an aggregation); the scan
-    stays the one (cell, s, c) equi-join + map-combinable sum."""
-    home, codes = idx["home"], idx["codes"]
-    q_vecs = _milli_unit_arr(queries, id_col, "qid", vec_col)
-    # per query: the nprobe nearest cells (same (dist, c) order as the
-    # previous row_number window) each carrying the query's residual
-    # against THAT cell — one struct array, exploded once
+    """The SEARCH half: probe the nprobe nearest coarse cells, take the
+    query's residual against each, and score the index rows in
+    ``idx['home']``/``idx['codes']`` with the ADC tail. Works
+    identically over trained-only or trained+added index rows — the
+    serving path never knows which vectors were ``train``ed and which
+    were ``add``ed."""
     qres = (
-        q_vecs.crossJoin(F.broadcast(idx["ccent_pk"]))
+        _scaled(queries, id_col, "qid", vec_col)
+        .crossJoin(F.broadcast(idx["ccent_pk"]))
         .select(
             "qid",
             F.explode_outer(
                 F.expr(
-                    f"transform(slice(array_sort(transform(ccents, ct -> "
-                    f"struct({_ARR_DIST} AS dist, ct.c AS c))), 1, {nprobe}), "
-                    f"pr -> struct(pr.c AS cell, "
-                    f"zip_with(marr, filter(ccents, x -> x.c = pr.c)[0].cqarr, "
-                    f"(m, cq) -> m * CAST(1000 AS BIGINT) - cq) AS rmarr))"
+                    f"transform({_probe(nprobe)}, pc -> struct(pc AS cell, "
+                    f"{_residual('pc')} AS rmarr))"
                 )
             ).alias("p"),
         )
-        .select(
-            "qid",
-            F.col("p.cell").alias("cell"),
-            F.col("p.rmarr").alias("rmarr"),
-        )
+        .select("qid", "p.cell", "p.rmarr")
     )
-    dtab = (
-        qres.crossJoin(F.broadcast(idx["pcent_pk"]))
-        .select(
-            "qid",
-            "cell",
-            F.explode_outer(F.expr(_adc_tab_expr(sub_dim))).alias("e"),
-        )
-        .select("qid", "cell", "e.s", "e.c", "e.dist")
-    )
-    adc = (
-        codes.join(home, "vid")
-        .join(F.broadcast(dtab), ["cell", "s", "c"])
-        .where(F.col("vid") != F.col("qid"))
-        .groupBy("qid", "vid")
-        .agg(F.sum("dist").alias("adc_dist"))
-    )
-    w = W.partitionBy("qid").orderBy("adc_dist", "vid")
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("vid").alias("neighbor_id"),
-            "rank",
-            "adc_dist",
-        )
-    )
+    codes = idx["codes"].join(idx["home"], "vid")
+    return _adc_topk(qres, idx["pcent_pk"], codes, ["cell"], sub_dim, k)
 
 
 def q_ext_159_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1113,9 +929,10 @@ def ivfadc_add_report(
     against that cell, per-subspace argmin code against the frozen PQ
     codebooks. Neither quantizer retrains: this is FAISS's
     ``index.add()`` on an IVFADC index, the operation a 100 TB corpus
-    runs daily between scheduled retrains (per-batch cost = two
-    broadcast joins + two argmin aggregates over |delta| rows — a
-    query probe's shape, never a corpus rescan).
+    runs daily between scheduled retrains (per-batch cost = one
+    map-only ``_ivfadc_encode`` pass over |delta| rows against the two
+    broadcast codebooks — a query probe's shape, never a corpus
+    rescan).
 
     The report extends ext_163's occupancy/growth triggers down to the
     CODE level, per cell:
@@ -1302,19 +1119,19 @@ def ivf_maintenance_report(
       distribution has moved off the trained centroids and probes
       will scan the wrong cells.
 
-    Engine-exact: the base training replays ext_03's integer Lloyd;
-    both assignments use the same exact-bigint distance argmin
-    (struct-min ties); mean errors are truncated integer division.
-    Cells the delta never touches report ``n_delta = 0``, and cells
-    with zero final-assignment base vectors but delta arrivals report
+    Engine-exact: the base training is the integer-Lloyd kernel
+    (``_lloyd``); both assignments are its (dist, c) argmin; mean
+    errors are truncated integer division. Cells the delta never
+    touches report ``n_delta = 0``, and cells with zero
+    final-assignment base vectors but delta arrivals report
     ``n_base = 0`` — the join is FULL outer, so neither side of a
     drift signal can be dropped (an emptying cell and a delta-only
     cell are both exactly what the report exists to surface).
 
-    Plan shape: training cost is the ext_03 shape on the base ONCE;
-    maintenance cost per batch is |delta|·n_cells distance rows
-    against a BROADCAST centroid frame, then a map-combinable argmin +
-    aggregate. No retrain, no corpus rescan, no collects.
+    Plan shape: training is the kernel's, on the base ONCE; per batch
+    the delta is one map-only argmin against the broadcast centroids
+    and one per-cell aggregate. No retrain, no corpus rescan, no
+    collects.
 
     No reference analogue (tool:273 has no vector surface); [EXT] ANN
     suite — the maintenance companion to ext_03/ext_151/ext_159.
@@ -1324,66 +1141,30 @@ def ivf_maintenance_report(
             f"ivf_maintenance_report: coarse_iters must be >= 1 "
             f"(got {coarse_iters})"
         )
-    # r14 shape (see _ivfadc_train): packed milli arrays + broadcast
-    # packed centroids — every assignment (training rounds, final base
-    # home, delta maintenance) is a map-only array argmin; only the
-    # centroid aggregations shuffle. Identical integers/tie-breaks.
-    vecs = _milli_unit_arr(
-        spread(base), id_col, "vid", vec_col
-    ).localCheckpoint(eager=True)
+    vecs = _scaled(spread(base), id_col, "vid", vec_col).localCheckpoint(
+        eager=True
+    )
+    cents = _pack(_lloyd(vecs, n_cells, coarse_iters)[0]).localCheckpoint(
+        eager=True
+    )  # frozen: base + delta
 
-    def _cents_of(assigned: DataFrame) -> DataFrame:
+    def _occupancy(pts: DataFrame, n: str, dist: str) -> DataFrame:
+        # nearest cell WITH its distance: the report needs the Lloyd
+        # objective, not just the label
         return (
-            assigned.select("c", F.posexplode("marr").alias("d", "m"))
-            .groupBy("c", "d")
-            .agg(F.sum("m").alias("sm"), F.count(F.lit(1)).alias("n"))
-            .select("c", "d", F.expr("(1000 * sm) div n").alias("cq"))
+            pts.crossJoin(F.broadcast(cents))
+            .select(F.expr(_argmin()).alias("mn"))
+            .groupBy(F.col("mn.c").alias("cell"))
+            .agg(F.count(F.lit(1)).alias(n), F.sum("mn.dist").alias(dist))
         )
 
-    # nearest cell WITH its distance (the maintenance report needs the
-    # Lloyd objective, not just the label)
-    argmin_struct = (
-        f"array_min(transform(ccents, ct -> struct({_ARR_DIST} AS dist, "
-        "ct.c AS c)))"
-    )
-
-    def _home(pts: DataFrame, pid: str) -> DataFrame:
-        return (
-            pts.crossJoin(F.broadcast(ccent_pk))
-            .select(pid, F.expr(argmin_struct).alias("mn"))
-            .select(
-                pid,
-                F.col("mn.c").alias("cell"),
-                F.col("mn.dist").alias("dist"),
-            )
-        )
-
-    assigned = vecs.select(
-        "vid", F.pmod(F.col("vid"), F.lit(n_cells)).cast("int").alias("c"), "marr"
-    )
-    ccent_pk = _pack_cents(_cents_of(assigned))
-    for _ in range(coarse_iters):
-        assigned = vecs.crossJoin(F.broadcast(ccent_pk)).select(
-            "vid", F.expr(_CELL_ARGMIN).alias("c"), "marr"
-        )
-        ccent_pk = _pack_cents(_cents_of(assigned))
-    ccent_pk = ccent_pk.localCheckpoint(eager=True)  # frozen: base + delta
-
-    home_base = _home(vecs, "vid")
-    d_vecs = _milli_unit_arr(spread(delta), id_col, "did", vec_col)
-    assign_delta = _home(d_vecs, "did")
-
-    b = home_base.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("n_base"),
-        F.sum("dist").alias("sum_base_dist"),
-    )
-    d = assign_delta.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("n_delta"),
-        F.sum("dist").alias("sum_delta_dist"),
+    b = _occupancy(vecs, "n_base", "sum_base_dist")
+    d = _occupancy(
+        _scaled(spread(delta), id_col, "vid", vec_col), "n_delta", "sum_delta_dist"
     )
     # FULL outer: a cell can hold zero final-assignment base vectors
     # while delta arrivals map to it (assignments may shift between
-    # the last Lloyd round and the final home_base argmin) — that
+    # the last Lloyd round and the final base argmin) — that
     # delta-only cell is the loudest drift signal the report exists to
     # surface, and a left join would silently drop it (r12 judge).
     # growth_permille for such a cell reads as 1000·n_delta (divisor
@@ -1858,72 +1639,27 @@ def q_ext_108_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def kmeans_fixed(emb: DataFrame, k: int = 4, iters: int = 2) -> DataFrame:
     """Lloyd's k-means with a FIXED iteration count and deterministic
-    init (cluster j starts as the mean of rows with vec_id % k == j) —
-    the embedding-space clustering pass behind corpus mixing /
+    init (cluster j starts as the mean of rows with pmod(vec_id, k) ==
+    j) — the embedding-space clustering pass behind corpus mixing /
     semantic bucketing, expressed so an engine with no ML library can
-    oracle it: every step is exact integer arithmetic, so DuckDB
-    reproduces the run assignment-for-assignment via unrolled CTEs.
-
-    Exactness devices: per-dim values quantize to milli bigints (one
-    identical double multiply + floor per cell); centroids are exact
-    integer divisions cq = (1000·Σx) div n (micro units); distances
-    compare Σ(1000·x − cq)² in exact bigints (≈10^13 max — headroom
-    documented); argmin ties break to the lowest cluster id via a
-    struct-min. NO floats flow between iterations, so there is no
-    divergence to accumulate.
-
-    Scale: the cell frame is |rows|×dim; each iteration is one
-    cell-level join against a BROADCAST k×dim centroid table, one
-    (vec, cluster) aggregate, and one vec-level argmin — all
-    map-combinable shuffles keyed on vec_id. The iteration count is a
-    declarative unrolled DAG (no driver collect at all); real
+    oracle it: it is the integer-Lloyd kernel (``_lloyd``, whose
+    docstring gives the plan shape) over the raw milli-quantized
+    vectors, so DuckDB reproduces the run assignment-for-assignment
+    via unrolled CTEs. Centroids are micro units, (1000·Σx) div n;
+    distances are exact bigints (≈10^13 max); NO floats flow between
+    iterations, so there is no divergence to accumulate. Real
     convergence loops would checkpoint the assignment between rounds
     exactly as ext_41's pagerank does.
     """
-    # r14 shape (see _ivfadc_train): packed milli arrays + broadcast
-    # packed centroids — the per-vector argmin is a map-only array
-    # expression; only the per-(c, d) centroid aggregations shuffle.
-    # Identical integers and (dist, c) tie-breaks — unchanged oracle.
-    vecs = emb.select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, xf -> "
-            "CAST(FLOOR(CAST(xf AS DOUBLE) * 1000.0) AS BIGINT))"
-        ).alias("marr"),
-    )
-
-    def centroids_of(a: DataFrame) -> DataFrame:
-        return (
-            a.select("c", F.posexplode("marr").alias("d", "x"))
-            .groupBy("c", "d")
-            .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-            .select("c", "d", F.expr("(1000 * s) div n").alias("cq"))
-        )
-
-    assigned = vecs.select(
-        "vec_id", (F.col("vec_id") % F.lit(k)).cast("int").alias("c"), "marr"
-    )
-    for _ in range(iters):
-        cents_pk = _pack_cents(centroids_of(assigned))
-        assigned = vecs.crossJoin(F.broadcast(cents_pk)).select(
-            "vec_id", F.expr(_CELL_ARGMIN).alias("c"), "marr"
-        )
-
-    final = centroids_of(assigned)
-    sizes = assigned.groupBy("c").agg(F.count(F.lit(1)).alias("n_members"))
-    return (
-        final.groupBy("c")
-        .agg(
-            *[
-                F.max(F.when(F.col("d") == j, F.col("cq"))).alias(f"c{j}")
-                for j in range(4)
-            ],
-            F.sum("cq").alias("c_sum"),
-        )
-        .join(sizes, "c")
-        .select("c", "n_members", "c0", "c1", "c2", "c3", "c_sum")
-        .orderBy("c")
-    )
+    cents, _ = _lloyd(_scaled(emb, "vec_id", "vid", unit=False), k, iters)
+    return cents.select(
+        "c",
+        F.col("n").alias("n_members"),
+        *[F.get("parr", j).alias(f"c{j}") for j in range(4)],
+        F.aggregate("parr", F.lit(0).cast("long"), lambda a, x: a + x).alias(
+            "c_sum"
+        ),
+    ).orderBy("c")
 
 
 def q_ext_133_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:

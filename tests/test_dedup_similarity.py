@@ -119,6 +119,65 @@ def test_ann_ivf_deterministic(spark, emb):
     assert a == b and len(a) > 0
 
 
+def _lloyd_rows(cents, assigned):
+    return (
+        sorted(tuple(r) for r in cents.collect()),
+        sorted((r["vid"], list(r["carr"])) for r in assigned.collect()),
+    )
+
+
+def test_lloyd_one_subspace_is_coarse_kmeans(spark):
+    """The identity the kernel rests on: coarse k-means (sub=None) is
+    product quantization with one subspace spanning the vector, so
+    both give the same centroids, sizes and assignments."""
+    from sparketl.operators.similarity import _lloyd
+
+    rows = [
+        (i, [((i * 37 + d * 11) % 23 - 11) * 1000 for d in range(3)])
+        for i in range(-4, 8)
+    ]
+    vecs = spark.createDataFrame(rows, "vid long, rmarr array<bigint>")
+    coarse = _lloyd_rows(*_lloyd(vecs, 3, 2))
+    one_sub = _lloyd_rows(*_lloyd(vecs, 3, 2, sub=3))
+    assert coarse == one_sub
+    assert {c[1] for c in coarse[0]} <= {0, 1, 2}
+
+
+def test_lloyd_two_rounds_by_hand(spark):
+    """Two rounds worked out by hand. Residue-class init puts vids
+    {0, 2} and {1, 3} together: centroids [3999, 1500] and [5000, 1500].
+    Round 1 moves vid 1 to cell 0 and vid 2 to cell 1, so the centroids
+    become [-1001, 1] div 2 = [-500, 0] (div truncates toward zero) and
+    [19001, 6000] div 2 = [9500, 3000]; round 2 changes nothing."""
+    from sparketl.operators.similarity import _lloyd
+
+    vecs = spark.createDataFrame(
+        [(0, [-1001, 0]), (1, [0, 1]), (2, [9000, 3000]), (3, [10001, 3000])],
+        "vid long, rmarr array<bigint>",
+    )
+    cents, assigned = _lloyd_rows(*_lloyd(vecs, 2, 2))
+    assert cents == [(0, 0, 2, [-500, 0]), (0, 1, 2, [9500, 3000])]
+    assert assigned == [(0, [0]), (1, [0]), (2, [1]), (3, [1])]
+
+
+def test_residue_init_keeps_negative_ids_in_range(spark):
+    """Residue-class init is pmod(vid, k): negative ids start no extra
+    cluster, so every cell id is in [0, k) and an IVF probe of all
+    n_cells cells scans the whole corpus."""
+    from sparketl.operators.similarity import ann_ivf_topk, kmeans_fixed
+
+    rows = [
+        (i, [float((i * 7 + d * 5) % 11 - 5) + 0.5 for d in range(4)])
+        for i in range(-6, 6)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    for iters in (0, 2):
+        cells = [r["c"] for r in kmeans_fixed(emb, k=2, iters=iters).collect()]
+        assert set(cells) <= {0, 1} and len(cells) <= 2, (iters, cells)
+    out = ann_ivf_topk(emb, emb, k=11, n_cells=2, nprobe=2, n_iters=0).collect()
+    assert len(out) == 12 * 11, len(out)
+
+
 def test_dup_clusters_equal_bfs_components(spark, docs):
     """Label propagation must produce exactly the BFS connected
     components of the candidate-pair graph."""

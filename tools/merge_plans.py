@@ -17,7 +17,7 @@ from Spark's SQL status store and written to
 upsert wrote on the first line and its Spark jobs (name, tasks,
 duration) after them.
 
-    python tools/merge_plans.py --round 21
+    python tools/merge_plans.py --round 22
 """
 
 from __future__ import annotations
@@ -26,6 +26,7 @@ import argparse
 import os
 import sys
 import tempfile
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -99,15 +100,29 @@ def rewrite_plan(spark, root: str, case: str) -> tuple[str, int, list[str]]:
     jobs_before = _job_ids(spark)
     t.upsert(batch, "k")
     sc.listenerBus().waitUntilEmpty(10_000)
-    new = [e for e in _executions(spark) if e.executionId() not in seen]
-    writes = [
-        e.physicalPlanDescription()
-        for e in new
-        if "Join" in e.physicalPlanDescription()
-        and "Scan parquet" in e.physicalPlanDescription()
-    ]
+    plan = _final_plan(spark, seen)
     new_jobs = _job_ids(spark) - jobs_before
-    return writes[-1], _shuffle_bytes(spark, new_jobs), _jobs(spark, new_jobs)
+    return plan, _shuffle_bytes(spark, new_jobs), _jobs(spark, new_jobs)
+
+
+def _final_plan(spark, seen: set) -> str:
+    """The plan of the last new execution that joins a parquet scan
+    (the rewrite's write), once it is AQE's final plan: the status
+    store can take that execution's last plan update after the
+    listener bus drains, so poll until it reads ``== Final Plan ==``."""
+    deadline = time.monotonic() + 30
+    while True:
+        new = [
+            e.physicalPlanDescription()
+            for e in _executions(spark)
+            if e.executionId() not in seen
+        ]
+        plan = [d for d in new if "Join" in d and "Scan parquet" in d][-1]
+        if "== Final Plan ==" in plan:
+            return plan
+        if time.monotonic() > deadline:
+            raise RuntimeError("the rewrite's plan never became final")
+        time.sleep(0.2)
 
 
 def main() -> None:

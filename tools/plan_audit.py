@@ -99,8 +99,7 @@ BROADCAST_SCALAR_OK = {
     # centroid/codebook frame (k×dim ints) crossJoin-broadcast onto the
     # vector scan — the shape that replaced the ×n_cells exploded
     # distance join + per-vid argmin shuffles (see similarity.py
-    # _pack_cents/_pack_pq). One broadcast row per attach, never
-    # data-sized.
+    # _pack). One broadcast row per attach, never data-sized.
     "ext_03_ann_ivf",
     "ext_133_kmeans",
     "ext_151_pq_adc",
