@@ -21,51 +21,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_flagship_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
-# Round-13 rotation (r12 verdict task 1): the driver checks the FIRST
-# 50 entries in iteration order. Window layout: (a) the FULL 44-entry
-# round-7-stale cohort — recomputed from CORRECTNESS_r01..r12 as every
-# live registry entry whose latest driver verdict is round 7 (census:
-# r7x44, r8x42, r9x42, r10x48, r11x49, r12x50; zero never-verified);
-# (b) the new round-13 entries (IVFADC frozen-codebook `add` path,
-# delete-bearing CDC -> ranked-view maintenance); (c) the remaining
-# slots fall to the alphabetically-first round-8-stale entries (extra
-# coverage, no displacement). After this window no live entry's latest
-# driver verdict is older than round 8 — the r12 verdict's done
-# criterion.
-#
-# Previous (round-12) rotation note, kept for the audit trail:
-# the driver checks the FIRST 50
-# entries in iteration order. Window layout: (a) ext_75_substring_dup
-# FIRST — the entry the r11 rotation cut off at position 51 (sections
-# (a)+(b) summed to 51, so the last (b) entry fell outside the
-# 50-entry window; counted carefully this time) — followed by the
-# full 42-entry round-6-stale cohort, computed from
-# CORRECTNESS_r01..r11 as every live registry entry whose latest
-# driver verdict is round 6; (b) the six new round-12 entries
-# (IVFADC, streaming top-k IVM, Z-order two-predicate skipping, PCA
-# whitening, IVF maintenance, grouped quantile bands). 43 + 6 = 49;
-# slot 50 falls to the first r11 entry below (ext_157 — extra
-# coverage, no displacement). After this window no entry's latest
-# driver verdict is older than round 7.
-#
-# Previous (round-11) rotation note, kept for the audit trail:
-# the driver checks the FIRST 50
-# entries in iteration order. Window layout: (a) the 9 entries that
-# are new or whose code/oracle changed in round 11 — the new
-# ext_147_histogram_quantiles (deterministic, fully-oracled sketch)
-# and tierc_qualify_setop, the never-driver-checked tierc_qualify_distinct
-# plus the rest of the QUALIFY family (the set-operator branch split
-# touched the shared _rewrite_qualify path), the two BPE entries
-# upgraded from rows-only to full oracles (whose new oracles also
-# exposed and fixed the trailing-empty char-split engine bug), and
-# ext_146 whose oracle gained the NULL-exclusion filter; (b) ALL 31
-# remaining round-5-stale entries (judge-verified green in the r10
-# judge run; ext_69/ext_74 from that cohort already sit in (a));
-# (c) the alphabetically-first round-6-stale entries (the eleven
-# brand-new r11 operators ext_148-158 take the head of the window,
-# displacing this group entirely). After this window no
-# entry's latest driver verdict is older than round 6, and the
-# FULLSWEEP_r11.json artifact covers the whole registry anyway.
 # Round-15 rotation (r14 verdict task 8): the driver checks the FIRST
 # 50 entries in iteration order. Window layout: (a) the FULL 32-entry
 # round-9-stale cohort — recomputed from CORRECTNESS_r01..r14 as every

@@ -297,27 +297,12 @@ def q_ext_73_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-mode output must equal the batch interval join, which is
     the oracle. Scale notes on state eviction in
     ``streaming.windows.streaming_view_purchase_join``."""
-    from sparketl.streaming.stateful import read_staged_stream, stage_event_chunks
+    from sparketl.streaming.stateful import drive, staged_events
     from sparketl.streaming.windows import streaming_view_purchase_join
 
-    stage = stage_event_chunks(spark, sf_dir, n_chunks=4)
-    try:
-        stream = read_staged_stream(spark, stage)
+    with staged_events(spark, sf_dir, n_chunks=4) as stream:
         joined = streaming_view_purchase_join(stream, stream)
-        name = f"ssj_{uuid.uuid4().hex[:8]}"
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.sql(f"SELECT * FROM {name}").orderBy("purchase_id", "view_id")
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+        return drive(joined).orderBy("purchase_id", "view_id")
 
 
 # ---------------------------------------------------------------------------
@@ -468,17 +453,13 @@ def q_ext_76_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming driver-check set (dedup ext_61, stream-stream join
     ext_73) with the windowed-aggregate shape; state-bound notes in
     ``streaming.windows.streaming_hourly_agg``."""
-    from sparketl.streaming.stateful import read_staged_stream, stage_event_chunks
-    from sparketl.streaming.windows import run_stream_to_table, streaming_hourly_agg
+    from sparketl.streaming.stateful import drive, staged_events
+    from sparketl.streaming.windows import streaming_hourly_agg
 
-    stage = stage_event_chunks(spark, sf_dir, n_chunks=4)
-    try:
-        agg = streaming_hourly_agg(read_staged_stream(spark, stage))
-        return run_stream_to_table(agg, spark).orderBy(
+    with staged_events(spark, sf_dir, n_chunks=4) as stream:
+        return drive(streaming_hourly_agg(stream), mode="complete").orderBy(
             "window_start_us", "event_type"
         )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1946,29 +1927,11 @@ def q_ext_103_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-mode output must equal the batch LEFT interval join, which
     is the oracle. Scale/state-eviction notes in
     ``streaming.windows.streaming_view_purchase_left_join``."""
-    from sparketl.streaming.stateful import (
-        append_flush_chunk,
-        read_staged_stream,
-        stage_event_chunks,
-    )
+    from sparketl.streaming.stateful import drive, staged_events
     from sparketl.streaming.windows import streaming_view_purchase_left_join
 
-    stage = stage_event_chunks(spark, sf_dir, n_chunks=4)
-    try:
-        append_flush_chunk(spark, stage)
-        stream = read_staged_stream(spark, stage)
-        joined = streaming_view_purchase_left_join(stream)
-        name = f"sslj_{uuid.uuid4().hex[:8]}"
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    with staged_events(spark, sf_dir, n_chunks=4, flush=True) as stream:
+        joined = drive(streaming_view_purchase_left_join(stream))
         # drop the watermark-flush sentinels (negative ids) — a batch
         # filter on the sink table, so it cannot be pushed into the
         # streaming scans the way an in-query filter would be. The
@@ -1976,8 +1939,7 @@ def q_ext_103_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bigint columns stay integral through the driver's pandas
         # compare (a nullable int demotes to float64 and re-renders)
         return (
-            spark.sql(f"SELECT * FROM {name}")
-            .where(F.col("view_id") >= 0)
+            joined.where(F.col("view_id") >= 0)
             .select(
                 "view_id",
                 "user_id",
@@ -1990,8 +1952,6 @@ def q_ext_103_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("view_id", "purchase_id")
         )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 def q_ext_145_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2007,31 +1967,12 @@ def q_ext_145_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected append-mode output equals the batch FULL interval join —
     the oracle. Scale/state-eviction notes in
     ``streaming.windows.streaming_view_purchase_full_join``."""
-    from sparketl.streaming.stateful import (
-        append_flush_chunk,
-        read_staged_stream,
-        stage_event_chunks,
-    )
+    from sparketl.streaming.stateful import drive, staged_events
     from sparketl.streaming.windows import streaming_view_purchase_full_join
 
-    stage = stage_event_chunks(spark, sf_dir, n_chunks=4)
-    try:
-        append_flush_chunk(spark, stage)
-        stream = read_staged_stream(spark, stage)
-        joined = streaming_view_purchase_full_join(stream)
-        name = f"ssfj_{uuid.uuid4().hex[:8]}"
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    with staged_events(spark, sf_dir, n_chunks=4, flush=True) as stream:
         return (
-            spark.sql(f"SELECT * FROM {name}")
+            drive(streaming_view_purchase_full_join(stream))
             .where(
                 (F.col("view_id").isNull() | (F.col("view_id") >= 0))
                 & (
@@ -2051,8 +1992,6 @@ def q_ext_145_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("view_id", "purchase_id")
         )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2069,17 +2008,13 @@ def q_ext_105_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ext_76), session (ext_72), interval joins (ext_73/103), TTL dedup
     (ext_101) — this is the overlapping-window state-multiplier case;
     notes in ``streaming.windows.streaming_sliding_agg``."""
-    from sparketl.streaming.stateful import read_staged_stream, stage_event_chunks
-    from sparketl.streaming.windows import run_stream_to_table, streaming_sliding_agg
+    from sparketl.streaming.stateful import drive, staged_events
+    from sparketl.streaming.windows import streaming_sliding_agg
 
-    stage = stage_event_chunks(spark, sf_dir, n_chunks=4)
-    try:
-        agg = streaming_sliding_agg(read_staged_stream(spark, stage))
-        return run_stream_to_table(agg, spark).orderBy(
+    with staged_events(spark, sf_dir, n_chunks=4) as stream:
+        return drive(streaming_sliding_agg(stream), mode="complete").orderBy(
             "window_start_us", "event_type"
         )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2297,14 +2232,12 @@ def q_ext_111_jsonl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") * F.lit(2654435761)) % F.lit(4294967296)
         ).alias("id_checksum"),
     )
-    from sparketl.streaming.windows import run_stream_to_table
+    from sparketl.streaming.stateful import drive
 
     try:
-        return run_stream_to_table(agg, spark).orderBy("lang", "source")
+        return drive(agg, mode="complete").orderBy("lang", "source")
     finally:
-        import atexit
-
-        atexit.register(shutil.rmtree, stage, True)
+        shutil.rmtree(stage, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2794,13 +2727,9 @@ def q_ext_155_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import types as T
 
-    from sparketl.streaming.stateful import (
-        read_staged_stream,
-        stage_event_chunks,
-    )
+    from sparketl.streaming.stateful import drive, staged_events
     from sparketl.tables import ManagedTable
 
-    stage = stage_event_chunks(spark, sf_dir, n_chunks=4)
     root = os.path.join(
         tempfile.gettempdir(), f"sparketl-upsert-{uuid.uuid4().hex[:8]}"
     )
@@ -2837,25 +2766,13 @@ def q_ext_155_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         table.upsert(latest, key="user_id")
 
-    q = (
-        read_staged_stream(spark, stage)
-        .writeStream.foreachBatch(apply_batch)
-        .option(
-            "checkpointLocation",
-            os.path.join(root, "_stream_checkpoint"),
-        )
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = table.read().orderBy("user_id")
+    with staged_events(spark, sf_dir, n_chunks=4) as stream:
+        drive(stream, apply_batch)
     import atexit
 
-    atexit.register(shutil.rmtree, stage, True)
+    # the returned frame reads the table lazily
     atexit.register(shutil.rmtree, root, True)
-    return out
+    return table.read().orderBy("user_id")
 
 
 # ---------------------------------------------------------------------------
@@ -2974,14 +2891,10 @@ def q_ext_160_stream_topk_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import types as T
 
-    from sparketl.streaming.stateful import (
-        read_staged_stream,
-        stage_event_chunks,
-    )
+    from sparketl.streaming.stateful import drive, staged_events
     from sparketl.tables import ManagedTable
 
     k = STREAM_TOPK_K
-    stage = stage_event_chunks(spark, sf_dir, n_chunks=4)
     root = os.path.join(
         tempfile.gettempdir(), f"sparketl-topkivm-{uuid.uuid4().hex[:8]}"
     )
@@ -3037,27 +2950,15 @@ def q_ext_160_stream_topk_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         table.upsert(fresh, key="view_key")
 
-    q = (
-        read_staged_stream(spark, stage)
-        .writeStream.foreachBatch(apply_batch)
-        .option(
-            "checkpointLocation",
-            os.path.join(root, "_stream_checkpoint"),
-        )
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = table.read().orderBy("user_id", "rank").select(
-        "user_id", "rank", "event_id", "value_cents"
-    )
+    with staged_events(spark, sf_dir, n_chunks=4) as stream:
+        drive(stream, apply_batch)
     import atexit
 
-    atexit.register(shutil.rmtree, stage, True)
+    # the returned frame reads the table lazily
     atexit.register(shutil.rmtree, root, True)
-    return out
+    return table.read().orderBy("user_id", "rank").select(
+        "user_id", "rank", "event_id", "value_cents"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3310,14 +3211,10 @@ def q_ext_166_cdc_ranked_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import types as T
 
-    from sparketl.streaming.stateful import (
-        read_staged_stream,
-        stage_event_chunks,
-    )
+    from sparketl.streaming.stateful import drive, staged_events
     from sparketl.tables import ManagedTable
 
     k = CDC_TOPK_K
-    stage = stage_event_chunks(spark, sf_dir, n_chunks=4)
     root = os.path.join(
         tempfile.gettempdir(), f"sparketl-cdcrank-{uuid.uuid4().hex[:8]}"
     )
@@ -3362,27 +3259,15 @@ def q_ext_166_cdc_ranked_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                 target_partitions=8, zorder_by=["user_id", "event_id"]
             )
 
-    q = (
-        read_staged_stream(spark, stage)
-        .writeStream.foreachBatch(apply_batch)
-        .option(
-            "checkpointLocation",
-            os.path.join(root, "_stream_checkpoint"),
-        )
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = view.read().orderBy("user_id", "rank").select(
-        "user_id", "rank", "event_id", "value_cents"
-    )
+    with staged_events(spark, sf_dir, n_chunks=4) as stream:
+        drive(stream, apply_batch)
     import atexit
 
-    atexit.register(shutil.rmtree, stage, True)
+    # the returned frame reads the table lazily
     atexit.register(shutil.rmtree, root, True)
-    return out
+    return view.read().orderBy("user_id", "rank").select(
+        "user_id", "rank", "event_id", "value_cents"
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -4155,10 +4155,10 @@ EXT_ORACLES["ext_133_kmeans"] = """
 
 
 # Registry hygiene (r10, judge task 8): ext_134_stream_sessions gave
-# up its slot — it was run_streaming_sessionize_flush(keep_value=False),
-# strictly dominated by ext_06_sessionize_stateful (the same drive plus
-# exact bigint cents totals, full oracle since r9). The streaming
-# function and its stream≡batch pytest remain; rationale in COVERAGE.md.
+# up its slot — it was the flushed streaming sessionize without value
+# totals, strictly dominated by ext_06_sessionize_stateful (the same
+# drive plus exact bigint cents totals, full oracle since r9). Its
+# stream≡batch pytest remains; rationale in COVERAGE.md.
 
 from sparketl.operators.analytics import q_ext_135_trailing_window  # noqa: E402
 
@@ -5207,13 +5207,14 @@ def _pq_adc_oracle() -> str:
     from sparketl.operators.similarity import (
         ANN_K,
         ANN_QUERY_SLICE,
+        ANN_DIM,
         PQ_QUERY_N_ITERS,
         pq_adc_topk,
     )
 
     p = inspect.signature(pq_adc_topk).parameters
-    n_sub = p["n_sub"].default
     sub_dim = p["sub_dim"].default
+    n_sub = ANN_DIM // sub_dim
     n_codes = p["n_codes"].default
     k = ANN_K
     n_iters = PQ_QUERY_N_ITERS
@@ -5500,7 +5501,6 @@ def _ivfadc_oracle() -> str:
     p = inspect.signature(ivfadc_topk).parameters
     n_cells = p["n_cells"].default
     nprobe = p["nprobe"].default
-    n_sub = p["n_sub"].default  # noqa: F841 — implied by sub_dim over dim
     sub_dim = p["sub_dim"].default
     n_codes = p["n_codes"].default
     k = ANN_K
@@ -5941,6 +5941,7 @@ def _ivfadc_add_oracle() -> str:
     import inspect
 
     from sparketl.operators.similarity import (
+        ANN_DIM,
         IVFADC_COARSE_ITERS,
         IVFADC_PQ_ITERS,
         ivfadc_add_report,
@@ -5948,8 +5949,8 @@ def _ivfadc_add_oracle() -> str:
 
     p = inspect.signature(ivfadc_add_report).parameters
     n_cells = p["n_cells"].default
-    n_sub = p["n_sub"].default
     sub_dim = p["sub_dim"].default
+    n_sub = ANN_DIM // sub_dim
     n_codes = p["n_codes"].default
     ci = IVFADC_COARSE_ITERS
     pi = IVFADC_PQ_ITERS

@@ -125,6 +125,7 @@ def q_ext_03_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (r10 advisor finding — the r9 oracles inlined 64/8/8/1 literally).
 ANN_QUERY_SLICE = 8  # ANN registry queries probe vec_id < this
 ANN_K = 10  # top-k depth of the ANN registry queries
+ANN_DIM = 64  # vector width of the embeddings fixture
 IVF_QUERY_N_ITERS = 1  # q_ext_03_ann_ivf's Lloyd training rounds
 
 
@@ -222,7 +223,7 @@ def ann_lsh_topk(
     k: int = 10,
     n_planes: int = 8,
     n_tables: int = 8,
-    dim: int = 64,
+    dim: int = ANN_DIM,
 ) -> DataFrame:
     """Approximate top-k via multi-table random-hyperplane LSH.
 
@@ -662,7 +663,6 @@ def pq_adc_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    n_sub: int = 16,
     sub_dim: int = 4,
     n_codes: int = 16,
     n_iters: int = 1,
@@ -671,8 +671,8 @@ def pq_adc_topk(
 ) -> DataFrame:
     """Product quantization with asymmetric distance (ADC), Jégou et
     al. 2011 (TPAMI, "Product Quantization for Nearest Neighbor
-    Search"): split each unit vector into ``n_sub`` subspaces of
-    ``sub_dim`` dims, train an independent ``n_codes``-centroid
+    Search"): split each unit vector into n_sub = dim div ``sub_dim``
+    subspaces of ``sub_dim`` dims, train an independent ``n_codes``-centroid
     codebook per subspace, store each vector as ``n_sub`` small codes,
     and score a query by summing per-subspace lookup-table distances —
     the query stays full-precision (that is the "asymmetric" part),
@@ -735,7 +735,6 @@ def ivfadc_topk(
     k: int = 10,
     n_cells: int = 16,
     nprobe: int = 4,
-    n_sub: int = 16,
     sub_dim: int = 4,
     n_codes: int = 16,
     coarse_iters: int = IVFADC_COARSE_ITERS,
@@ -914,7 +913,6 @@ def ivfadc_add_report(
     base: DataFrame,
     delta: DataFrame,
     n_cells: int = 16,
-    n_sub: int = 16,
     sub_dim: int = 4,
     n_codes: int = 16,
     coarse_iters: int = IVFADC_COARSE_ITERS,
@@ -943,7 +941,8 @@ def ivfadc_add_report(
     - ``code_drift_permille`` — mean per-subspace L1 distance between
       the base and delta CODE distributions, in permille (0..2000):
       ``(Σ_{s,c} |1000·cnt_b(c,s) div n_b − 1000·cnt_d(c,s) div n_d|)
-      div n_sub``. BOTH sides are encoded against the FINAL frozen
+      div n_sub``, where n_sub = dim div sub_dim is the kernel's subspace
+      count (the cell's largest subspace index + 1). BOTH sides are encoded against the FINAL frozen
       codebooks (the FAISS shape — after train(), add() encodes every
       vector including the training set): the trainer's
       last-assignment codes lag the final codebooks by one Lloyd
@@ -1020,7 +1019,7 @@ def ivfadc_add_report(
             ),
         )
         .groupBy("cell")
-        .agg(F.expr(f"sum(l1) div {n_sub}").alias("raw_drift"))
+        .agg(F.expr("sum(l1) div (max(s) + 1)").alias("raw_drift"))
     )
     return (
         occ.join(drift, "cell", "left")
@@ -1210,7 +1209,7 @@ def matryoshka_recall(
     queries: DataFrame,
     k: int = 10,
     truncations: tuple[int, ...] = (8, 16, 32),
-    full_dim: int = 64,
+    full_dim: int = ANN_DIM,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:

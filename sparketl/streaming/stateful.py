@@ -49,6 +49,7 @@ import shutil
 import tempfile
 import uuid
 from collections.abc import Iterator
+from contextlib import contextmanager
 from decimal import ROUND_HALF_UP, Decimal
 from typing import Any
 
@@ -279,31 +280,48 @@ def read_staged_stream(spark: SparkSession, stage_dir: str) -> DataFrame:
     return normalize_events_ts(stream)
 
 
-def run_streaming_sessionize(
-    spark: SparkSession, sf_dir: str, gap_minutes: int = 30, n_chunks: int = 4
-) -> DataFrame:
-    """Drive the stateful sessionizer over the finite fixture; returns
-    the closed sessions with total_value in dollars (double)."""
+@contextmanager
+def staged_events(
+    spark: SparkSession, sf_dir: str, n_chunks: int = 4, *, flush: bool = False
+) -> Iterator[DataFrame]:
+    """The events fixture as a finite multi-batch stream: stage it in
+    ``n_chunks`` time-ordered files, append the watermark-flush
+    sentinels when ``flush`` is set (``append_flush_chunk``), yield the
+    stream, and remove the stage on exit."""
     stage = stage_event_chunks(spark, sf_dir, n_chunks)
     try:
-        stream = read_staged_stream(spark, stage)
-        sessions = streaming_sessionize(stream, gap_minutes=gap_minutes)
-        name = f"sessions_{uuid.uuid4().hex[:8]}"
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
+        if flush:
+            append_flush_chunk(spark, stage)
+        yield read_staged_stream(spark, stage)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
+def drive(stream: DataFrame, sink=None, *, mode: str = "append") -> DataFrame | None:
+    """Run a finite stream to completion: start the query, process all
+    available input, stop it. With no ``sink`` the rows land in a
+    uniquely named memory sink and the returned frame reads it; with a
+    ``sink`` every micro-batch goes to ``sink(batch_df, batch_id)``
+    through ``foreachBatch`` on a checkpoint that exists only for the
+    drive, and None is returned."""
+    writer = stream.writeStream.outputMode(mode)
+    ckpt = None
+    if sink is None:
+        name = f"drive_{uuid.uuid4().hex[:8]}"
+        writer = writer.format("memory").queryName(name)
+    else:
+        ckpt = tempfile.mkdtemp(prefix="sparketl-ckpt-")
+        writer = writer.foreachBatch(sink).option("checkpointLocation", ckpt)
+    try:
+        q = writer.start()
         try:
             q.processAllAvailable()
         finally:
             q.stop()
-        return spark.sql(f"SELECT * FROM {name}").withColumn(
-            "total_value", (F.col("total_value_cents") / 100.0)
-        ).drop("total_value_cents")
     finally:
-        shutil.rmtree(stage, ignore_errors=True)
+        if ckpt is not None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+    return None if sink is not None else stream.sparkSession.sql(f"SELECT * FROM {name}")
 
 
 TTL_KEPT_SCHEMA = StructType(
@@ -385,25 +403,10 @@ def run_streaming_ttl_dedup(
     spark: SparkSession, sf_dir: str, ttl_us: int = 600_000_000, n_chunks: int = 4
 ) -> DataFrame:
     """Drive the streaming TTL dedup over the staged finite fixture."""
-    stage = stage_event_chunks(spark, sf_dir, n_chunks)
-    try:
-        kept = streaming_ttl_dedup(read_staged_stream(spark, stage), ttl_us)
-        name = f"ttl_{uuid.uuid4().hex[:8]}"
-        q = (
-            kept.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
+    with staged_events(spark, sf_dir, n_chunks) as stream:
+        return drive(streaming_ttl_dedup(stream, ttl_us)).select(
+            "user_id", "event_type", "event_id", "ts_us"
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.sql(
-            f"SELECT user_id, event_type, event_id, ts_us FROM {name}"
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 def streaming_dedup_keys(stream: DataFrame) -> DataFrame:
@@ -428,33 +431,27 @@ def run_streaming_dedup(
     """Drive the streaming dedup over the staged finite fixture; the
     collected output must equal batch ``SELECT DISTINCT`` — which is
     exactly what the DuckDB oracle checks."""
-    stage = stage_event_chunks(spark, sf_dir, n_chunks)
-    try:
-        keys = streaming_dedup_keys(read_staged_stream(spark, stage))
-        name = f"dedup_{uuid.uuid4().hex[:8]}"
-        q = (
-            keys.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.sql(f"SELECT user_id, event_type FROM {name}")
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    with staged_events(spark, sf_dir, n_chunks) as stream:
+        return drive(streaming_dedup_keys(stream)).select("user_id", "event_type")
 
 
-def stream_ingest_append(
-    stream: DataFrame, table, checkpoint_dir: str
-):
-    """Streaming ingest into a ManagedTable: each micro-batch lands
-    through the same atomic manifest commit as batch appends (SNK-01),
-    so readers always see a consistent version and a crashed batch
-    leaves no partial data. foreachBatch is the bridge: the batch
-    DataFrame reuses the whole mapping/cast/validation machinery.
+def _next_ledger(table, batch_id: int) -> str | None:
+    """The table's ``stream_batches`` ledger with ``batch_id`` added, or
+    None when the batch was already applied (a re-delivery)."""
+    ledger = str(table.properties().get("stream_batches", ""))
+    done = {int(x) for x in ledger.split(",") if x}
+    if batch_id in done:
+        return None
+    return ",".join(str(i) for i in sorted(done | {batch_id}))
+
+
+def stream_ingest_append(table):
+    """Streaming ingest into a ManagedTable, as the ``drive`` sink: each
+    micro-batch lands through the same atomic manifest commit as batch
+    appends (SNK-01), so readers always see a consistent version and a
+    crashed batch leaves no partial data. foreachBatch is the bridge:
+    the batch DataFrame reuses the whole mapping/cast/validation
+    machinery.
 
     Exactly-once caveat (documented): the file-source + checkpoint
     gives at-least-once into foreachBatch; a re-delivered batch would
@@ -464,145 +461,38 @@ def stream_ingest_append(
     """
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        props = table.properties()
-        done = set(int(x) for x in str(props.get("stream_batches", "")).split(",") if x)
-        if batch_id in done:
+        ledger = _next_ledger(table, batch_id)
+        if ledger is None:
             return
-        done.add(batch_id)
         # batch id lands in the SAME atomic commit as the data: a crash
         # either persists both or neither, so re-delivery is idempotent
-        table.append(
-            batch_df,
-            properties_update={
-                "stream_batches": ",".join(str(i) for i in sorted(done))
-            },
-        )
+        table.append(batch_df, properties_update={"stream_batches": ledger})
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _sink
 
 
-def stream_ingest_upsert(
-    stream: DataFrame, table, key: str, checkpoint_dir: str
-):
-    """Streaming CDC apply: each micro-batch MERGEs into a ManagedTable
-    (update matched keys, insert new ones) through one atomic manifest
-    commit — the foreachBatch bridge to ManagedTable.upsert, with the
-    same batch-id ledger as stream_ingest_append to skip re-delivered
-    batches. Unlike append, MERGE is naturally idempotent (re-applying
-    an identical batch reproduces the same table state), so the ledger
-    landing in a separate properties commit is safe — a crash between
-    the two commits merely re-applies one batch. Within a batch,
-    duplicate keys resolve last-write-wins in batch order (upsert's
-    monotonic-id tiebreak — micro-batch frames are freshly read, so
-    physical order IS arrival order)."""
+def stream_ingest_upsert(table, key: str):
+    """Streaming CDC apply, as the ``drive`` sink: each micro-batch
+    MERGEs into a ManagedTable (update matched keys, insert new ones)
+    through one atomic manifest commit — the foreachBatch bridge to
+    ManagedTable.upsert, with the same batch-id ledger as
+    stream_ingest_append to skip re-delivered batches. Unlike append,
+    MERGE is naturally idempotent (re-applying an identical batch
+    reproduces the same table state), so the ledger landing in a
+    separate properties commit is safe — a crash between the two
+    commits merely re-applies one batch. Within a batch, duplicate keys
+    resolve last-write-wins in batch order (upsert's monotonic-id
+    tiebreak — micro-batch frames are freshly read, so physical order
+    IS arrival order)."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        props = table.properties()
-        done = set(int(x) for x in str(props.get("stream_batches", "")).split(",") if x)
-        if batch_id in done:
+        ledger = _next_ledger(table, batch_id)
+        if ledger is None:
             return
-        done.add(batch_id)
         table.upsert(batch_df.select(*table.read().columns), key)
-        table.set_properties(
-            {"stream_batches": ",".join(str(i) for i in sorted(done))}
-        )
+        table.set_properties({"stream_batches": ledger})
 
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def stream_quality_monitor(
-    stream: DataFrame, table, checkpoint_dir: str
-):
-    """Per-micro-batch data-quality observability: each batch appends
-    ONE metrics row (event count, distinct users, null-props count,
-    exact value total in cents, min/max event time) to a ManagedTable
-    — the monitoring feed an always-on ingest pipeline alarms from
-    (sudden volume drop, null-rate spike, event-time regression).
-
-    The metrics aggregate is computed distributed inside the batch
-    (map-side combinable, one row out); only that one row crosses the
-    driver into the atomic table commit, batch-id-idempotent like
-    ``stream_ingest_append``. At 100 TB of stream this is O(1) state
-    and O(1) output per batch regardless of batch size.
-    """
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        props = table.properties()
-        done = set(
-            int(x) for x in str(props.get("monitor_batches", "")).split(",") if x
-        )
-        if batch_id in done:
-            return
-        done.add(batch_id)
-        metrics = batch_df.agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("user_id").alias("n_users"),
-            F.sum(F.col("props").isNull().cast("long")).alias("n_null_props"),
-            F.sum(
-                (F.col("value").cast("decimal(12,2)") * 100).cast("long")
-            ).alias("total_value_cents"),
-            F.min(F.unix_micros("ts")).alias("min_ts_us"),
-            F.max(F.unix_micros("ts")).alias("max_ts_us"),
-        ).withColumn("batch_id", F.lit(batch_id).cast("long"))
-        table.append(
-            metrics.select(
-                "batch_id", "n_events", "n_users", "n_null_props",
-                "total_value_cents", "min_ts_us", "max_ts_us",
-            ),
-            properties_update={
-                "monitor_batches": ",".join(str(i) for i in sorted(done))
-            },
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def run_streaming_quality_monitor(
-    spark: SparkSession, sf_dir: str, table_root: str, n_chunks: int = 4
-):
-    """Drive the monitor over the staged finite fixture; returns the
-    populated metrics ManagedTable."""
-    from pyspark.sql import types as T
-
-    from sparketl.tables import ManagedTable
-
-    schema = T.StructType(
-        [
-            T.StructField("batch_id", T.LongType(), True),
-            T.StructField("n_events", T.LongType(), True),
-            T.StructField("n_users", T.LongType(), True),
-            T.StructField("n_null_props", T.LongType(), True),
-            T.StructField("total_value_cents", T.LongType(), True),
-            T.StructField("min_ts_us", T.LongType(), True),
-            T.StructField("max_ts_us", T.LongType(), True),
-        ]
-    )
-    table = ManagedTable(spark, table_root)
-    table.create(schema)
-    stage = stage_event_chunks(spark, sf_dir, n_chunks)
-    try:
-        ckpt = tempfile.mkdtemp(prefix="sparketl-monitor-ckpt-")
-        stream = read_staged_stream(spark, stage)
-        q = stream_quality_monitor(stream, table, ckpt)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return table
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    return _sink
 
 
 def append_flush_chunk(
@@ -639,8 +529,8 @@ def append_flush_chunk(
       update starting from the NEXT micro-batch, so the batch reading
       flush #1 still evicts with the old watermark; the batch reading
       flush #2 runs with the advanced one and finalizes the tail
-      (``processAllAvailable`` is only guaranteed to cover batches
-      with data, so a trailing no-data batch would race ``stop()``).
+      (draining a query is only guaranteed to cover batches with
+      data, so a trailing no-data batch would race ``stop()``).
     """
     batch = read_parquet(spark, stage_dir)
     mx = batch.agg(F.max("ts").alias("m")).collect()[0]["m"]
@@ -757,25 +647,10 @@ def run_streaming_attribution(
     spark: SparkSession, sf_dir: str, n_chunks: int = 4
 ) -> DataFrame:
     """Drive streaming attribution over the staged finite fixture."""
-    stage = stage_event_chunks(spark, sf_dir, n_chunks)
-    try:
-        tagged = streaming_attribution(read_staged_stream(spark, stage))
-        name = f"attr_{uuid.uuid4().hex[:8]}"
-        q = (
-            tagged.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
+    with staged_events(spark, sf_dir, n_chunks) as stream:
+        return drive(streaming_attribution(stream)).select(
+            "user_id", "event_id", "first_touch", "last_touch"
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.sql(
-            f"SELECT user_id, event_id, first_touch, last_touch FROM {name}"
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 def run_streaming_sessionize_flush(
@@ -786,70 +661,28 @@ def run_streaming_sessionize_flush(
     keep_value: bool = False,
 ) -> DataFrame:
     """Stateful streaming sessionization with an END-OF-STREAM FLUSH —
-    the finite-backfill pattern: after the staged chunks, one sentinel
-    event (user_id = −1) far in the future pushes the watermark past
-    every open session's ``last_ts + gap``, so the event-time timeouts
-    fire and EVERY session closes. The emitted set then equals the
-    batch gaps-and-islands sessionization exactly — chunking-
-    independent by construction — which upgrades the stateful
-    sessionizer (EXT-06) from a rows-only check to a FULL SQL oracle,
-    the ext_101 pattern.
+    the finite-backfill pattern: after the staged chunks, the
+    ``append_flush_chunk`` sentinels (negative user ids, 48 h and 96 h
+    past the fixture) push the watermark past every open session's
+    ``last_ts + gap``, so the event-time timeouts fire and EVERY
+    session closes. The emitted set then equals the batch
+    gaps-and-islands sessionization exactly — chunking-independent by
+    construction — which upgrades the stateful sessionizer (EXT-06)
+    from a rows-only check to a FULL SQL oracle, the ext_101 pattern.
 
-    The sentinel's own state is filtered out (user_id < 0). With
+    The sentinels' own sessions are filtered out (user_id < 0). With
     ``keep_value`` the output carries ``total_value_cents`` (exact
     bigint; the per-event HALF_UP cents quantization is DECIMAL(12,2)
     cast semantics in both engines, so the oracle rebuilds it as
     ``CAST(SUM(CAST(value AS DECIMAL(12,2))) * 100 AS BIGINT)``);
     without it, session identity is (user, start, end, n)."""
-    stage = stage_event_chunks(spark, sf_dir, n_chunks)
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        schema = ev.schema  # the staged chunks' schema
-        hi = ev.agg(F.max("ts")).first()[0]
-        far = hi + datetime.timedelta(days=3650)
-        sentinel = spark.range(1).select(
-            *[
-                F.lit(-1).cast("long").alias(f.name)
-                if f.name in ("event_id", "user_id")
-                else F.lit(far).cast("timestamp").alias(f.name)
-                if f.name == "ts"
-                else F.lit("flush").cast(f.dataType).alias(f.name)
-                if f.name == "event_type"
-                else F.lit(0.0).alias(f.name)
-                if f.name == "value"
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-        )
-        raw = stage + "-sentinel"
-        sentinel.coalesce(1).write.mode("overwrite").parquet(raw)
-        part = next(f for f in sorted(os.listdir(raw)) if f.endswith(".parquet"))
-        dst = os.path.join(stage, "part-9999.parquet")
-        shutil.move(os.path.join(raw, part), dst)
-        os.utime(dst, (1_700_000_000 + 9999, 1_700_000_000 + 9999))
-        shutil.rmtree(raw, ignore_errors=True)
-
-        stream = read_staged_stream(spark, stage)
-        sessions = streaming_sessionize(stream, gap_minutes=gap_minutes)
-        name = f"sessions_flush_{uuid.uuid4().hex[:8]}"
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cols = ["user_id", "session_start_us", "session_end_us", "n_events"]
-        if keep_value:
-            cols.append("total_value_cents")
+    cols = ["user_id", "session_start_us", "session_end_us", "n_events"]
+    if keep_value:
+        cols.append("total_value_cents")
+    with staged_events(spark, sf_dir, n_chunks, flush=True) as stream:
         return (
-            spark.sql(f"SELECT * FROM {name}")
+            drive(streaming_sessionize(stream, gap_minutes=gap_minutes))
             .filter(F.col("user_id") >= 0)
             .select(*cols)
             .orderBy("user_id", "session_start_us")
         )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)

@@ -17,7 +17,6 @@ import hashlib
 import os
 import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -126,23 +125,6 @@ def streaming_dedup(
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         keys or ["event_id"]
     )
-
-
-def run_stream_to_table(agg: DataFrame, spark: SparkSession) -> DataFrame:
-    """Drive a streaming aggregate to completion against the finite
-    fixture and return the materialized result (memory sink)."""
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
 
 
 def streaming_enrich(
@@ -340,17 +322,12 @@ def run_stream_static_enrich(
     independent and equals the batch join — full SQL oracle, no flush
     tricks needed (contrast ext_134's stateful sessionizer)."""
     from sparketl.io import load_table
-    from sparketl.streaming.stateful import (
-        read_staged_stream,
-        stage_event_chunks,
-    )
+    from sparketl.streaming.stateful import drive, staged_events
 
-    stage = stage_event_chunks(spark, sf_dir, n_chunks)
-    try:
-        stream = read_staged_stream(spark, stage)
-        cust = load_table(spark, sf_dir, "customer").select(
-            F.col("c_custkey"), F.col("c_nationkey")
-        )
+    cust = load_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey"), F.col("c_nationkey")
+    )
+    with staged_events(spark, sf_dir, n_chunks) as stream:
         joined = stream.join(
             F.broadcast(cust), stream["user_id"] == cust["c_custkey"]
         ).select(
@@ -360,19 +337,8 @@ def run_stream_static_enrich(
                 "cents"
             ),
         )
-        name = f"enrich_{uuid.uuid4().hex[:8]}"
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         return (
-            spark.sql(f"SELECT * FROM {name}")
+            drive(joined)
             .groupBy("c_nationkey")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -380,5 +346,3 @@ def run_stream_static_enrich(
             )
             .orderBy("c_nationkey")
         )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)

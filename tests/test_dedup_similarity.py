@@ -447,7 +447,7 @@ def test_pq_adc_separates_constructed_clusters(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     queries = emb.filter(F.col("vec_id").isin([0, 10, 20, 30]))
     out = pq_adc_topk(
-        emb, queries, k=9, n_sub=4, sub_dim=2, n_codes=4, n_iters=2
+        emb, queries, k=9, sub_dim=2, n_codes=4, n_iters=2
     ).collect()
     hits = sum(
         1 for r in out if r["neighbor_id"] // 10 == r["query_id"] // 10
@@ -510,7 +510,7 @@ def test_ivfadc_separates_constructed_clusters_and_matches_ivf(spark):
     adc_hits = hits(
         ivfadc_topk(
             emb, queries, k=9, n_cells=4, nprobe=1,
-            n_sub=4, sub_dim=2, n_codes=4, coarse_iters=2, pq_iters=2,
+            sub_dim=2, n_codes=4, coarse_iters=2, pq_iters=2,
         )
     )
     ivf_hits = hits(
@@ -518,6 +518,35 @@ def test_ivfadc_separates_constructed_clusters_and_matches_ivf(spark):
     )
     assert adc_hits >= 0.9 * 36, adc_hits
     assert adc_hits >= ivf_hits, (adc_hits, ivf_hits)
+
+
+def test_ivfadc_add_drift_divides_by_the_kernel_subspace_count(spark):
+    """16-dim vectors with sub_dim=8 are coded in 2 subspaces, so the
+    code drift is the per-cell L1 sum over both subspaces div 2.
+    Construction: one coarse cell, two codes; base = 4 vectors of shape
+    A (even ids) + 4 of shape B (odd ids), delta = 4 of shape A. The
+    residue-class init already splits A and B, so in each subspace the
+    base histogram is 500/500 permille and the delta's 1000/0:
+    L1 = |500 - 1000| + |500 - 0| = 1000 per subspace, 2000 in all,
+    drift = 2000 div 2 = 1000."""
+    from sparketl.operators.similarity import ivfadc_add_report
+
+    def vec(dims):
+        return [1.0 if d in dims else 0.0 for d in range(16)]
+
+    a, b = vec({0, 8}), vec({1, 9})
+    base = spark.createDataFrame(
+        [(i, a if i % 2 == 0 else b) for i in range(8)],
+        "vec_id long, embedding array<float>",
+    )
+    delta = spark.createDataFrame(
+        [(100 + 2 * i, a) for i in range(4)],
+        "vec_id long, embedding array<float>",
+    )
+    rep = ivfadc_add_report(
+        base, delta, n_cells=1, sub_dim=8, n_codes=2
+    ).collect()
+    assert [tuple(r) for r in rep] == [(0, 8, 4, 500, 1000)]
 
 
 def test_ivfadc_deterministic_and_well_formed(spark, emb):

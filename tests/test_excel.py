@@ -219,20 +219,9 @@ def test_jsonl_datasource_stream_equals_batch(spark, tmp_path):
         .option("path", str(tmp_path))
         .load()
     )
-    import uuid
+    from sparketl.streaming.stateful import drive
 
-    name = f"jls_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = sorted(tuple(r) for r in spark.sql(f"SELECT * FROM {name}").collect())
+    got = sorted(tuple(r) for r in drive(stream).collect())
     want = sorted(tuple(r) for r in batch.collect())
     assert got == want and len(got) == 12
 

@@ -4,18 +4,15 @@ from pyspark.sql import functions as F
 
 from sparketl.io import load_table
 from sparketl.operators.events_ops import tumbling_window_agg
-from sparketl.streaming.windows import (
-    read_event_stream,
-    run_stream_to_table,
-    streaming_hourly_agg,
-)
+from sparketl.streaming.stateful import drive, staged_events
+from sparketl.streaming.windows import read_event_stream, streaming_hourly_agg
 from tests.conftest import SF_SMOKE
 
 
 def test_streaming_hourly_equals_batch(spark):
     batch = tumbling_window_agg(load_table(spark, SF_SMOKE, "events"), "1 hour")
     stream = streaming_hourly_agg(read_event_stream(spark, SF_SMOKE))
-    got = run_stream_to_table(stream, spark)
+    got = drive(stream, mode="complete")
     b = sorted(tuple(r) for r in batch.collect())
     s = sorted(tuple(r) for r in got.collect())
     assert b == s
@@ -28,11 +25,14 @@ def test_stateful_sessionize_matches_batch(spark):
     from pyspark.sql import functions as F
 
     from sparketl.operators.events_ops import sessionize
-    from sparketl.streaming.stateful import run_streaming_sessionize
+    from sparketl.streaming.stateful import streaming_sessionize
 
-    streamed = run_streaming_sessionize(spark, SF_SMOKE, gap_minutes=30, n_chunks=4)
+    with staged_events(spark, SF_SMOKE, n_chunks=4) as stream:
+        streamed = drive(streaming_sessionize(stream, gap_minutes=30))
     s_rows = {
-        (r.user_id, r.session_start_us): (r.session_end_us, r.n_events, r.total_value)
+        (r.user_id, r.session_start_us): (
+            r.session_end_us, r.n_events, r.total_value_cents / 100.0
+        )
         for r in streamed.collect()
     }
     assert len(s_rows) > 0
@@ -79,24 +79,14 @@ def test_stream_ingest_append_to_managed_table(spark, tmp_path):
     recorded for idempotent re-delivery."""
     from pyspark.sql import functions as F
 
-    from sparketl.streaming.stateful import (
-        read_staged_stream,
-        stage_event_chunks,
-        stream_ingest_append,
-    )
+    from sparketl.streaming.stateful import stream_ingest_append
     from sparketl.tables import ManagedTable
 
-    stage = stage_event_chunks(spark, SF_SMOKE, n_chunks=3)
-    stream = read_staged_stream(spark, stage)
     batch = load_table(spark, SF_SMOKE, "events")
-
     tbl = ManagedTable(spark, str(tmp_path / "events_tbl"))
-    tbl.create(stream.schema)
-    q = stream_ingest_append(stream, tbl, str(tmp_path / "ckpt"))
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    with staged_events(spark, SF_SMOKE, n_chunks=3) as stream:
+        tbl.create(stream.schema)
+        drive(stream, stream_ingest_append(tbl))
 
     assert tbl.read().count() == batch.count()
     got = tbl.read().agg(F.sum("event_id")).first()[0]
@@ -114,7 +104,7 @@ def test_streaming_dedup_drops_redelivered_batch(spark):
     import shutil
 
     from sparketl.streaming.stateful import read_staged_stream, stage_event_chunks
-    from sparketl.streaming.windows import run_stream_to_table, streaming_dedup
+    from sparketl.streaming.windows import streaming_dedup
 
     stage = stage_event_chunks(spark, SF_SMOKE, n_chunks=3)
     try:
@@ -126,7 +116,7 @@ def test_streaming_dedup_drops_redelivered_batch(spark):
         stream = read_staged_stream(spark, stage)
         # horizon longer than the fixture's time span → nothing expires
         deduped = streaming_dedup(stream, watermark="3650 days")
-        got = run_stream_to_table_append(deduped, spark)
+        got = drive(deduped)
 
         batch = load_table(spark, SF_SMOKE, "events")
         assert got.count() == batch.count()
@@ -136,18 +126,6 @@ def test_streaming_dedup_drops_redelivered_batch(spark):
         )
     finally:
         shutil.rmtree(stage, ignore_errors=True)
-
-
-def run_stream_to_table_append(df, spark):
-    import uuid as _uuid
-
-    name = f"stream_out_{_uuid.uuid4().hex[:8]}"
-    q = df.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
 
 
 def test_scd2_intervals_known_history(spark):
@@ -196,8 +174,6 @@ def test_approx_quantiles_bounded(spark):
 
 
 def test_stream_static_enrich_equals_batch(spark):
-    import uuid
-
     from pyspark.sql import functions as F
 
     from sparketl.streaming.windows import streaming_enrich
@@ -210,18 +186,7 @@ def test_stream_static_enrich_equals_batch(spark):
     batch = streaming_enrich(ev_batch, dim)
 
     stream = streaming_enrich(read_event_stream(spark, SF_SMOKE), dim)
-    name = f"enrich_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.outputMode("append")  # join: no agg state
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.sql(f"SELECT * FROM {name}")
+    got = drive(stream)  # append: the join keeps no agg state
     b = sorted(tuple(r) for r in batch.collect())
     s = sorted(tuple(r) for r in got.collect())
     assert b == s and len(b) > 0
@@ -317,26 +282,17 @@ def test_stream_ingest_upsert_cdc_apply(spark, tmp_path):
     from pyspark.sql import functions as F
     from pyspark.sql import Window
 
-    from sparketl.streaming.stateful import (
-        read_staged_stream,
-        stage_event_chunks,
-        stream_ingest_upsert,
-    )
+    from sparketl.streaming.stateful import stream_ingest_upsert
     from sparketl.tables import ManagedTable
 
-    stage = stage_event_chunks(spark, SF_SMOKE, n_chunks=3)
-    stream = read_staged_stream(spark, stage)
     batch = load_table(spark, SF_SMOKE, "events")
 
     # key on user_id: each user's LAST event (by ts, event_id tiebreak)
     # must be the surviving row.
     tbl = ManagedTable(spark, str(tmp_path / "users_tbl"))
-    tbl.create(stream.schema)
-    q = stream_ingest_upsert(stream, tbl, "user_id", str(tmp_path / "ckpt"))
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    with staged_events(spark, SF_SMOKE, n_chunks=3) as stream:
+        tbl.create(stream.schema)
+        drive(stream, stream_ingest_upsert(tbl, "user_id"))
 
     got = tbl.read().count()
     assert got == batch.select("user_id").distinct().count()
@@ -362,29 +318,15 @@ def test_stream_ingest_upsert_cdc_apply(spark, tmp_path):
 def test_stream_stream_interval_join_equals_batch(spark):
     """Stream-stream conversion join ≡ the same join on the batch
     frame (append-mode memory sink, finite fixture)."""
-    import uuid
-
     from sparketl.streaming.windows import (
         read_event_stream,
         streaming_view_purchase_join,
     )
 
     stream = read_event_stream(spark, SF_SMOKE)
-    got_df = streaming_view_purchase_join(stream, stream)
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
-    q = (
-        got_df.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     got = {
         (r["purchase_id"], r["view_id"])
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
+        for r in drive(streaming_view_purchase_join(stream, stream)).collect()
     }
 
     batch = load_table(spark, SF_SMOKE, "events")
@@ -438,8 +380,6 @@ def test_session_window_agg_runs_under_streaming(spark):
     """The same session_window expression runs as a streaming query
     (watermark + append sink) and its closed sessions match the batch
     result — the declarative sessionizer is genuinely streaming-ready."""
-    import uuid
-
     from sparketl.operators.events_ops import session_window_agg
     from sparketl.streaming.windows import read_event_stream
 
@@ -460,15 +400,9 @@ def test_session_window_agg_runs_under_streaming(spark):
             "total_value",
         )
     )
-    name = f"sw_{uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     got = {
         (r["user_id"], r["session_start_us"]): (r["n_events"], r["total_value"])
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
+        for r in drive(agg).collect()
     }
     assert len(got) > 0
     batch = {
@@ -486,8 +420,6 @@ def test_event_stream_utc_pinned_on_non_utc_session(spark):
     bypasses load_table), so the TIMESTAMP_NTZ→TIMESTAMP cast must pin
     the session time zone to UTC on its own — otherwise a non-UTC
     session shifts every wall-clock value vs the DuckDB oracle."""
-    import uuid
-
     from sparketl.streaming.windows import read_event_stream
 
     old_tz = spark.conf.get("spark.sql.session.timeZone")
@@ -496,19 +428,9 @@ def test_event_stream_utc_pinned_on_non_utc_session(spark):
         stream = read_event_stream(spark, SF_SMOKE)
         # normalize_events_ts must have re-pinned UTC before the cast
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
-        name = f"tz_{uuid.uuid4().hex[:8]}"
-        q = (
-            stream.selectExpr("min(unix_micros(ts)) AS lo")
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        got = spark.sql(f"SELECT lo FROM {name}").collect()[0]["lo"]
+        got = drive(
+            stream.selectExpr("min(unix_micros(ts)) AS lo"), mode="complete"
+        ).collect()[0]["lo"]
         want = (
             load_table(spark, SF_SMOKE, "events")
             .selectExpr("min(unix_micros(ts)) AS lo")
@@ -517,35 +439,6 @@ def test_event_stream_utc_pinned_on_non_utc_session(spark):
         assert got == want
     finally:
         spark.conf.set("spark.sql.session.timeZone", old_tz)
-
-
-def test_stream_quality_monitor_metrics_match_batch(spark, tmp_path):
-    """One metrics row per micro-batch; batch-summed metrics must equal
-    a direct batch recompute over the whole fixture (exact integer
-    cents, so the equality is bitwise)."""
-    from sparketl.streaming.stateful import run_streaming_quality_monitor
-
-    table = run_streaming_quality_monitor(
-        spark, SF_SMOKE, str(tmp_path / "metrics"), n_chunks=3
-    )
-    rows = sorted(table.read().collect(), key=lambda r: r["batch_id"])
-    assert len(rows) == 3  # one row per chunk/micro-batch
-    ev = load_table(spark, SF_SMOKE, "events")
-    want = ev.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum((F.col("value").cast("decimal(12,2)") * 100).cast("long")).alias(
-            "cents"
-        ),
-        F.min(F.unix_micros("ts")).alias("lo"),
-        F.max(F.unix_micros("ts")).alias("hi"),
-    ).collect()[0]
-    assert sum(r["n_events"] for r in rows) == want["n"]
-    assert sum(r["total_value_cents"] for r in rows) == want["cents"]
-    assert min(r["min_ts_us"] for r in rows) == want["lo"]
-    assert max(r["max_ts_us"] for r in rows) == want["hi"]
-    for r in rows:
-        assert 0 < r["n_users"] <= r["n_events"]
-        assert 0 <= r["n_null_props"] <= r["n_events"]
 
 
 def test_streaming_ttl_dedup_equals_batch_replay(spark):
@@ -696,7 +589,7 @@ def test_streaming_sliding_equals_batch(spark):
         load_table(spark, SF_SMOKE, "events"), "1 hour", "30 minutes"
     )
     stream = streaming_sliding_agg(read_event_stream(spark, SF_SMOKE))
-    got = run_stream_to_table(stream, spark)
+    got = drive(stream, mode="complete")
     b = sorted(tuple(r) for r in batch.collect())
     s = sorted(tuple(r) for r in got.collect())
     assert b == s
@@ -859,3 +752,41 @@ def test_stream_topk_ivm_equals_batch_topk(spark):
         by_user.setdefault(u, []).append(rank)
     for ranks in by_user.values():
         assert ranks == list(range(1, len(ranks) + 1))
+
+
+def test_drive_stops_and_cleans_up_when_the_sink_raises(spark, tmp_path, monkeypatch):
+    """A failing foreachBatch sink propagates out of ``drive``, and the
+    query, its checkpoint and the ``staged_events`` stage are all gone
+    afterwards."""
+    import tempfile
+
+    import pytest
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    seen = []
+
+    def sink(batch_df, batch_id):
+        seen.append({p.name.rsplit("-", 1)[0] for p in tmp_path.iterdir()})
+        raise RuntimeError("sink failed")
+
+    with pytest.raises(Exception, match="sink failed"):
+        with staged_events(spark, SF_SMOKE, n_chunks=2) as stream:
+            drive(stream, sink)
+    # the drive really ran with both directories in place
+    assert seen and {"sparketl-chunks", "sparketl-ckpt"} <= seen[0], seen
+    assert not spark.streams.active
+    assert not [p.name for p in tmp_path.iterdir() if p.name.startswith("sparketl-")]
+
+
+def test_stream_upsert_leaves_no_stage_behind(spark, tmp_path, monkeypatch):
+    """ext_155 removes its staged chunks when the drive ends; only the
+    table root stays, because the returned frame reads it lazily."""
+    import tempfile
+
+    from sparketl.operators.curation import q_ext_155_stream_upsert
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = q_ext_155_stream_upsert(spark, SF_SMOKE)
+    assert not list(tmp_path.glob("sparketl-chunks-*"))
+    assert len(list(tmp_path.glob("sparketl-upsert-*"))) == 1
+    assert out.count() > 0

@@ -26,7 +26,8 @@ Usage: python tools/full_sweep.py [--round N] [--skip-sf01]
                                   [--only name ...]
 
 ``--only`` runs just the named entries and MERGES their verdicts into
-the round's existing artifact — the incremental path for entries
+the round's artifact, or into a copy of the newest earlier round's
+when this round has none yet — the incremental path for entries
 added after a full sweep (the staleness pytest still guarantees the
 merged artifact covers the whole registry).
 
@@ -45,6 +46,7 @@ import hashlib
 import inspect
 import json
 import os
+import re
 import sys
 import time
 
@@ -235,6 +237,17 @@ def _check(spark, con, fn, oracle_sql: str | None, sf_dir: str) -> str:
     )
 
 
+def base_artifact(repo: str, rnd: int) -> str | None:
+    """The artifact an ``--only`` run of round ``rnd`` merges into: the
+    round's own, else the newest earlier round's, else None."""
+    rounds = [
+        int(m.group(1))
+        for f in os.listdir(repo)
+        if (m := re.fullmatch(r"FULLSWEEP_r(\d+)\.json", f)) and int(m.group(1)) <= rnd
+    ]
+    return os.path.join(repo, f"FULLSWEEP_r{max(rounds)}.json") if rounds else None
+
+
 def main() -> int:
     args = sys.argv[1:]
     rnd = 11
@@ -263,8 +276,9 @@ def main() -> int:
     sweep: dict[str, dict[str, str]] = {}
     history: list[dict] = []
     out_path = os.path.join(REPO, f"FULLSWEEP_r{rnd}.json")
-    if only and os.path.exists(out_path):
-        with open(out_path, encoding="utf-8") as f:
+    base = base_artifact(REPO, rnd) if only else None
+    if base is not None:
+        with open(base, encoding="utf-8") as f:
             prev = json.load(f)
         sweep = prev["sweep"]
         history = prev.get("runs", [])
